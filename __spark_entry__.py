@@ -89,17 +89,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _q_tokenize(spark, sf_dir):
     idx, _ = _searcher(spark, sf_dir)
-    return idx.postings.select("docid", "term", F.col("freq").cast("long").alias("freq"))
+    return idx.postings().select("docid", "term", F.col("freq").cast("long").alias("freq"))
 
 
 def _q_positions(spark, sf_dir):
-    from lucenenet_spark.index.builder import unpack_postings
-
     idx, _ = _searcher(spark, sf_dir)
-    # filter the PACKED table, then unpack: a term filter above the
-    # unpack barrier would decode the whole index
     return (
-        unpack_postings(idx.packed.where(F.col("term") == "dup"))
+        idx.postings(["dup"])
         .select("docid", "term", F.explode("positions").alias("pos"))
         .withColumn("pos", F.col("pos").cast("long"))
     )

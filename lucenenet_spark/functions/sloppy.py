@@ -315,7 +315,9 @@ def sloppy_freq_2slot_encoded(
     ascending; the float32 fold order (event order per doc) matches
     the walk bit-for-bit (round-k masked accumulation).
     """
-    GUARD = np.int64(256)  # keeps raw_pos - offset + GUARD inside the lane
+    # raw_pos - offset + GUARD stays >= 0 for every raw_pos >= 0, so an
+    # adjusted key never borrows from the doc bits above its lane
+    GUARD = np.int64(max(r0, r1))
     SHIFT = np.int64(32)
     MASK = (np.int64(1) << SHIFT) - np.int64(1)
     empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32))

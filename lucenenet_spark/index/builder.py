@@ -54,21 +54,8 @@ from lucenenet_spark.analysis.ngrams import edge_field_length, edge_ngrams
 from lucenenet_spark.analysis.shingles import add_shingles
 from lucenenet_spark.analysis.synonyms import inject_synonyms
 from lucenenet_spark.functions.smallfloat import norm_byte_from_length
-from lucenenet_spark.functions.varbyte import (
-    BLOCK_SIZE,
-    delta_encode_docids,
-    encode_freqs,
-    encode_positions,
-    decode_freqs,
-    decode_positions,
-    decode_positions_flat,
-    delta_decode_docids,
-    vbyte_encode,
-)
-
-# docid-range bucket width for posting packing; a multiple of
-# BLOCK_SIZE so blocks never straddle buckets. 64 blocks per bucket.
-BUCKET_DOCS = BLOCK_SIZE * 64
+from lucenenet_spark.functions.varbyte import BLOCK_SIZE
+from lucenenet_spark.index.postings import BUCKET_DOCS, unpack_postings
 
 
 @dataclass(frozen=True)
@@ -204,17 +191,6 @@ class CorpusSpec:
     # with every other analysis flag.
     translit: "str | None" = None
 
-
-POSTINGS_FLAT_SCHEMA = T.StructType(
-    [
-        T.StructField("docid", T.LongType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("freq", T.IntegerType()),
-        T.StructField("positions", T.ArrayType(T.IntegerType())),
-        T.StructField("field_length", T.IntegerType()),
-        T.StructField("norm", T.IntegerType()),  # 0..255 norm byte
-    ]
-)
 
 PACKED_SCHEMA = T.StructType(
     [
@@ -741,21 +717,22 @@ class InvertedIndex:
     """Handle to the built index tables.
 
     ``docs``:       docid, <meta…>, field_length, norm, content_sha256
-    ``postings``:   flat per-(docid, term) rows with positions
     ``packed``:     128-doc delta+varbyte blocks with block metadata
     ``term_stats``: term, df, ttf
     ``max_doc`` / ``sum_total_term_freq``: corpus scalars (broadcast
     to every query — the CollectionStatistics analog).
+
+    Flat per-(docid, term) rows come from :meth:`postings`, which
+    decodes only the named terms' blocks.
     """
 
     docs: DataFrame
-    postings: DataFrame
     packed: DataFrame
     term_stats: DataFrame
     max_doc: int
     sum_total_term_freq: int
     spec: CorpusSpec = field(default_factory=CorpusSpec)
-    # the persisted single-scan output both docs and postings derive
+    # the persisted single-scan output both docs and packed derive
     # from (None for a loaded index)
     flat: DataFrame | None = None
 
@@ -763,18 +740,28 @@ class InvertedIndex:
     def avgdl_inputs(self) -> tuple[int, int]:
         return self.sum_total_term_freq, self.max_doc
 
+    def postings(self, terms=None, payloads: bool = False) -> DataFrame:
+        """Flat (docid, term, freq, positions, norm[, payloads]) rows of
+        ``terms`` (every term when None). The ``term IN`` filter sits
+        on the packed frame, BELOW the decode barrier, so only the
+        named posting lists are read and decoded
+        (:func:`~lucenenet_spark.index.postings.unpack_postings`)."""
+        packed = self.packed
+        if terms is not None:
+            packed = packed.where(F.col("term").isin(sorted(set(terms))))
+        return unpack_postings(packed, payloads=payloads)
+
     def cache(self) -> "InvertedIndex":
-        # docs/postings are cheap filters over the already-persisted
-        # flat scan when it exists; only cache what adds reuse value
+        # docs is a cheap filter over the already-persisted flat scan
+        # when it exists; only cache what adds reuse value
         if self.flat is None:
             self.docs.cache()
-            self.postings.cache()
         self.packed.cache()
         self.term_stats.cache()
         return self
 
     def unpersist(self) -> "InvertedIndex":
-        for df in (self.flat, self.docs, self.postings, self.packed, self.term_stats):
+        for df in (self.flat, self.docs, self.packed, self.term_stats):
             if df is not None:
                 df.unpersist()
         return self
@@ -827,124 +814,11 @@ class InvertedIndex:
             docs = spark.read.parquet(os.path.join(path, "docs"))
         return cls(
             docs=docs,
-            postings=unpack_postings(packed),
             packed=packed,
             term_stats=spark.read.parquet(os.path.join(path, "term_stats")),
             max_doc=stats["max_doc"],
             sum_total_term_freq=stats["sum_total_term_freq"],
         )
-
-
-POSTINGS_UNPACKED_SCHEMA = T.StructType(
-    [
-        T.StructField("docid", T.LongType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("freq", T.IntegerType()),
-        T.StructField("positions", T.ArrayType(T.IntegerType())),
-        T.StructField("norm", T.IntegerType()),
-    ]
-)
-
-
-def unpack_postings(packed: DataFrame) -> DataFrame:
-    """Lazy flat view over the packed blocks: decode delta+varbyte back
-    to per-(docid, term) rows with positions and the norm byte.
-
-    WARNING — the mapInPandas here is an optimization BARRIER: a filter
-    placed ABOVE this view does NOT push down into the packed parquet
-    scan, so ``unpack_postings(packed).where(term == t)`` decodes the
-    ENTIRE index and then drops most of it. Callers must filter the
-    packed DataFrame FIRST and unpack only the surviving blocks:
-    ``unpack_postings(packed.where(F.col("term").isin(terms)))`` —
-    that is what gives the parquet term-IN pushdown + row-group
-    min/max pruning (the BlockTree dictionary seek analog).
-    """
-
-    def unpack(iterator):
-        for pdf in iterator:
-            frames = []
-            for term, docs_enc, freqs_enc, norms_enc, pos_enc, cnt in zip(
-                pdf["term"], pdf["docs_enc"], pdf["freqs_enc"],
-                pdf["norms_enc"], pdf["positions_enc"], pdf["count"],
-            ):
-                d = delta_decode_docids(bytes(docs_enc))
-                f = decode_freqs(bytes(freqs_enc)).astype(np.int64)
-                n = np.frombuffer(bytes(norms_enc), dtype=np.uint8)
-                # freqs are the per-doc position counts: one flat
-                # vectorized prox decode, then cheap split views
-                flat, _ = decode_positions_flat(bytes(pos_enc), f)
-                pos = np.split(flat.astype(np.int32), np.cumsum(f)[:-1])
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "docid": d,
-                            "term": term,
-                            "freq": f.astype(np.int32),
-                            "positions": pos,
-                            "norm": n.astype(np.int32),
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames)
-
-    return packed.mapInPandas(unpack, schema=POSTINGS_UNPACKED_SCHEMA)
-
-
-POSTINGS_PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("docid", T.LongType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("freq", T.IntegerType()),
-        T.StructField("positions", T.ArrayType(T.IntegerType())),
-        T.StructField("norm", T.IntegerType()),
-        T.StructField("payloads", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def unpack_postings_payloads(packed: DataFrame) -> DataFrame:
-    """Like :func:`unpack_postings` but also decodes the per-position
-    float32 payloads (``payloads_enc``). Same optimization-barrier
-    warning: filter the PACKED frame first. Blocks written without
-    payloads yield payload 1.0 per position (the scorers' default for
-    a missing payload, ``Search/Payloads/PayloadFunction`` callers)."""
-
-    def unpack(iterator):
-        for pdf in iterator:
-            frames = []
-            for term, docs_enc, freqs_enc, norms_enc, pos_enc, pay_enc, cnt in zip(
-                pdf["term"], pdf["docs_enc"], pdf["freqs_enc"],
-                pdf["norms_enc"], pdf["positions_enc"], pdf["payloads_enc"],
-                pdf["count"],
-            ):
-                d = delta_decode_docids(bytes(docs_enc))
-                f = decode_freqs(bytes(freqs_enc)).astype(np.int64)
-                n = np.frombuffer(bytes(norms_enc), dtype=np.uint8)
-                pflat, _ = decode_positions_flat(bytes(pos_enc), f)
-                splits = np.cumsum(f)[:-1]
-                pos = np.split(pflat.astype(np.int32), splits)
-                if pay_enc is None:
-                    pays = [np.ones(int(c), dtype=np.float32) for c in f]
-                else:
-                    yflat = np.frombuffer(bytes(pay_enc), dtype=np.float32)
-                    pays = [a.copy() for a in np.split(yflat, splits)]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "docid": d,
-                            "term": term,
-                            "freq": f.astype(np.int32),
-                            "positions": pos,
-                            "norm": n.astype(np.int32),
-                            "payloads": pays,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames)
-
-    return packed.mapInPandas(unpack, schema=POSTINGS_PAYLOAD_SCHEMA)
 
 
 def assign_docids(
@@ -1006,7 +880,6 @@ def build_index(
     spark: SparkSession,
     corpus: DataFrame,
     spec: CorpusSpec | None = None,
-    with_packed: bool = True,  # kept for API compat; packing is always fused
     partitions: int | None = None,
 ) -> InvertedIndex:
     spec = spec or CorpusSpec()
@@ -1163,7 +1036,6 @@ def build_index(
 
     return InvertedIndex(
         docs=docs,
-        postings=unpack_postings(packed),
         packed=packed,
         term_stats=term_stats,
         max_doc=int(corpus_agg["max_doc"]),

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lucenenet_spark.index.builder import InvertedIndex, unpack_postings
+from lucenenet_spark.index.builder import InvertedIndex
 
 CHECKS = (
     "doc_count",
@@ -61,7 +61,7 @@ def check_index(idx: InvertedIndex, expected: dict | None = None) -> DataFrame:
     a live index — the full CheckIndex contract.
     """
     spark = idx.docs.sparkSession
-    p = unpack_postings(idx.packed).select(
+    p = idx.postings().select(
         "docid", "term", "freq", F.size("positions").alias("npos"), "norm"
     )
 

@@ -44,7 +44,6 @@ from lucenenet_spark.index.builder import (
     CorpusSpec,
     InvertedIndex,
     build_index,
-    unpack_postings,
 )
 
 # docid-range width of one shard; a multiple of the packing bucket so
@@ -283,7 +282,6 @@ def load_sharded(spark: SparkSession, path: str) -> InvertedIndex:
     )
     return InvertedIndex(
         docs=docs,
-        postings=unpack_postings(packed),
         packed=packed,
         term_stats=term_stats,
         max_doc=int(cs[0]),

@@ -136,23 +136,14 @@ def compact_shards(
     full_merge = old_shards == sorted(manifest)
     if full_merge:
         idx = load_sharded(spark, path)
+        docs, packed = idx.docs, idx.packed
     else:
         base = os.path.join(path, "shards")
-        docs_src = spark.read.parquet(
+        docs = spark.read.parquet(
             *[os.path.join(base, str(s), "docs") for s in old_shards]
         )
-        packed_src = spark.read.parquet(
+        packed = spark.read.parquet(
             *[os.path.join(base, str(s), "packed") for s in old_shards]
-        )
-        from lucenenet_spark.index.builder import InvertedIndex
-
-        idx = InvertedIndex(
-            docs=docs_src,
-            postings=unpack_postings(packed_src),
-            packed=packed_src,
-            term_stats=None,
-            max_doc=0,
-            sum_total_term_freq=0,
         )
 
     tpath = os.path.join(path, "tombstones")
@@ -162,8 +153,7 @@ def compact_shards(
         else None
     )
 
-    docs = idx.docs
-    flat = unpack_postings(idx.packed)
+    flat = unpack_postings(packed)
     if tombs is not None:
         docs = docs.join(tombs, "docid", "left_anti")
         flat = flat.join(tombs, "docid", "left_anti")

@@ -76,7 +76,6 @@ def split_index(index: InvertedIndex, n_parts: int) -> list[InvertedIndex]:
         parts.append(
             InvertedIndex(
                 docs=docs,
-                postings=unpack_postings(packed),
                 packed=packed,
                 term_stats=term_stats,
                 max_doc=int(agg["n"] or 0),

@@ -165,7 +165,7 @@ def freq_judgments(
     frames = []
     for qid, term in sorted(terms.items()):
         frames.append(
-            searcher.index.postings.where(F.col("term") == term).select(
+            searcher.index.postings([term]).select(
                 F.lit(qid).alias("query_id"),
                 "docid",
                 F.least(F.col("freq") - 1, F.lit(cap)).cast("int").alias("rel"),

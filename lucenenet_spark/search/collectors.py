@@ -611,11 +611,9 @@ def term_freq_topk(searcher: IndexSearcher, term: str, k: int = 10) -> DataFrame
     (rank, docid, tf); ties break docid asc. One packed scan with the
     term equality BELOW the unpack barrier (parquet term pushdown) —
     cost is the one posting list, independent of index size."""
-    from lucenenet_spark.index.builder import unpack_postings
-
-    p = unpack_postings(
-        searcher.index.packed.where(F.col("term") == term)
-    ).select("docid", F.col("freq").cast("long").alias("tf"))
+    p = searcher.index.postings([term]).select(
+        "docid", F.col("freq").cast("long").alias("tf")
+    )
     if searcher.tombstones is not None:
         p = p.join(
             searcher.tombstones.select("docid").distinct(), "docid", "left_anti"
@@ -637,16 +635,13 @@ def norm_value_topk(searcher: IndexSearcher, term: str, k: int = 10) -> DataFram
     The 255-entry decode table joins as a broadcast; the posting list
     arrives through the same pruned packed scan as term_freq_topk."""
     from lucenenet_spark.functions.smallfloat import byte315_to_float
-    from lucenenet_spark.index.builder import unpack_postings
 
     spark = searcher.index.packed.sparkSession
     dec = byte315_to_float(np.arange(256, dtype=np.uint8))
     table = spark.createDataFrame(
         [(int(b), float(dec[b])) for b in range(256)], "norm int, norm_value float"
     )
-    p = unpack_postings(
-        searcher.index.packed.where(F.col("term") == term)
-    ).select("docid", "norm")
+    p = searcher.index.postings([term]).select("docid", "norm")
     if searcher.tombstones is not None:
         p = p.join(
             searcher.tombstones.select("docid").distinct(), "docid", "left_anti"
@@ -683,17 +678,9 @@ def span_near(
     NearSpansUnordered's queue walk (match set agrees; span
     multiplicity may differ around shared positions — documented).
     Physical shape = the phrase positions join (one packed scan with
-    term IN pushdown, one groupBy(docid) shuffle). The term filter is
-    applied to the PACKED table BEFORE unpacking — a filter above the
-    unpack mapInPandas cannot push through the barrier and would
-    decode the entire index per query."""
-    from lucenenet_spark.index.builder import unpack_postings
-
-    pos = (
-        unpack_postings(
-            searcher.index.packed.where(F.col("term").isin([first, second]))
-        )
-        .select("docid", "term", F.explode("positions").alias("p"))
+    term IN pushdown, one groupBy(docid) shuffle)."""
+    pos = searcher.index.postings([first, second]).select(
+        "docid", "term", F.explode("positions").alias("p")
     )
     a = pos.where(F.col("term") == first).select("docid", F.col("p").alias("pa"))
     b = pos.where(F.col("term") == second).select("docid", F.col("p").alias("pb"))
@@ -1282,7 +1269,7 @@ def postings_highlight(
     # per-(doc,term) importance from DOC-level stats (postings tf +
     # char length): term-IN pushdown on the postings scan, k-doc semi
     ttf = (
-        searcher.index.postings.where(F.col("term").isin(terms))
+        searcher.index.postings(terms)
         .join(F.broadcast(want), "docid", "left_semi")
         .select("docid", "term", F.col("freq").alias("ttf"))
     )

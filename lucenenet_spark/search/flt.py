@@ -125,7 +125,7 @@ def fuzzy_like_this_topk(
 ) -> DataFrame:
     """Top-k (docid, score:float32): Σ boosts of the doc's matching
     variants, float32-folded in clause order."""
-    from lucenenet_spark.index.builder import delta_decode_docids
+    from lucenenet_spark.functions.varbyte import delta_decode_docids
 
     src = list(dict.fromkeys(t for t, _ in analyze(query_string)))
     variants = _fuzzy_variants(searcher, src, min_similarity, prefix_length)[
@@ -138,55 +138,34 @@ def fuzzy_like_this_topk(
         boost_of.setdefault(t, []).append((cidx, b))
     terms = sorted(boost_of)
 
-    if searcher.use_packed:
-        blocks = searcher.index.packed.where(F.col("term").isin(terms)).select(
-            "term", "docs_enc"
-        )
+    blocks = searcher.index.packed.where(F.col("term").isin(terms)).select(
+        "term", "docs_enc"
+    )
 
-        def decode(iterator):
-            for pdf in iterator:
-                frames = []
-                for term, enc in zip(pdf["term"], pdf["docs_enc"]):
-                    d = delta_decode_docids(bytes(enc))
-                    for cidx, b in boost_of[str(term)]:
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    "docid": d,
-                                    "cidx": np.int32(cidx),
-                                    "score": np.float32(b),
-                                }
-                            )
+    def decode(iterator):
+        for pdf in iterator:
+            frames = []
+            for term, enc in zip(pdf["term"], pdf["docs_enc"]):
+                d = delta_decode_docids(bytes(enc))
+                for cidx, b in boost_of[str(term)]:
+                    frames.append(
+                        pd.DataFrame(
+                            {
+                                "docid": d,
+                                "cidx": np.int32(cidx),
+                                "score": np.float32(b),
+                            }
                         )
-                yield pd.concat(frames) if frames else pd.DataFrame(
-                    {
-                        "docid": pd.array([], dtype="int64"),
-                        "cidx": pd.array([], dtype="int32"),
-                        "score": pd.array([], dtype="float32"),
-                    }
-                )
-
-        pairs = blocks.mapInPandas(decode, schema="docid long, cidx int, score float")
-    else:
-        flat = searcher.index.postings.where(F.col("term").isin(terms)).select(
-            "docid", "term"
-        )
-        maps = [
-            (F.col("term") == t, cidx, b)
-            for t, pairs_ in boost_of.items()
-            for cidx, b in pairs_
-        ]
-        frames = [
-            flat.where(cond).select(
-                "docid",
-                F.lit(cidx).cast("int").alias("cidx"),
-                F.lit(b).cast("float").alias("score"),
+                    )
+            yield pd.concat(frames) if frames else pd.DataFrame(
+                {
+                    "docid": pd.array([], dtype="int64"),
+                    "cidx": pd.array([], dtype="int32"),
+                    "score": pd.array([], dtype="float32"),
+                }
             )
-            for cond, cidx, b in maps
-        ]
-        pairs = frames[0]
-        for f in frames[1:]:
-            pairs = pairs.unionByName(f)
+
+    pairs = blocks.mapInPandas(decode, schema="docid long, cidx int, score float")
 
     agg = pairs.groupBy("docid").agg(
         F.sort_array(F.collect_list(F.struct("cidx", "score"))).alias("cs")

@@ -55,8 +55,6 @@ def payload_term_query(
     include_span_score: bool = True,
 ) -> DataFrame:
     """PayloadTermQuery analog → (docid, score float32) top-k."""
-    from lucenenet_spark.index.builder import unpack_postings_payloads
-
     m = searcher._stats_map()
     if m is False:
         rows = searcher.index.term_stats.where(F.col("term") == term).collect()
@@ -71,9 +69,9 @@ def payload_term_query(
         df_, searcher.index.max_doc, 1.0,
         ttf=ttf_, sttf=searcher.index.sum_total_term_freq,
     )
-    src = unpack_postings_payloads(
-        searcher.index.packed.where(F.col("term") == term)
-    ).select("docid", "freq", "norm", "payloads")
+    src = searcher.index.postings([term], payloads=True).select(
+        "docid", "freq", "norm", "payloads"
+    )
 
     def gen(iterator):
         for pdf in iterator:
@@ -120,8 +118,6 @@ def payload_near_query(
     One packed scan filtered to both terms before the unpack barrier;
     per-doc numpy enumeration in a single Arrow stage.
     """
-    from lucenenet_spark.index.builder import unpack_postings_payloads
-
     terms = sorted({first, second})
     m = searcher._stats_map()
     if m is False:
@@ -134,9 +130,9 @@ def payload_near_query(
         [stats.get(t, (0, 0))[0] for t in terms], searcher.index.max_doc, 1.0
     )
     wf = float(w)
-    src = unpack_postings_payloads(
-        searcher.index.packed.where(F.col("term").isin([first, second]))
-    ).select("docid", "term", "positions", "norm", "payloads")
+    src = searcher.index.postings([first, second], payloads=True).select(
+        "docid", "term", "positions", "norm", "payloads"
+    )
     grouped = src.groupBy("docid").agg(
         F.collect_list(F.struct("term", "positions", "payloads")).alias("tp"),
         F.first("norm").alias("norm"),
@@ -205,11 +201,9 @@ def span_payload_check(
     """SpanPayloadCheckQuery over a unit term span
     (``Search/Spans/SpanPayloadCheckQuery.cs:36``): positions whose
     payload equals the required value → (docid, n_spans)."""
-    from lucenenet_spark.index.builder import unpack_postings_payloads
-
-    src = unpack_postings_payloads(
-        searcher.index.packed.where(F.col("term") == term)
-    ).select("docid", "payloads")
+    src = searcher.index.postings([term], payloads=True).select(
+        "docid", "payloads"
+    )
     want = float(np.float32(payload))
 
     def gen(iterator):
@@ -237,13 +231,11 @@ def span_near_payload_check(
     SpanNearPayloadCheckQuery.cs:36``, 2-clause ordered pinned form):
     greedy-chain near spans whose (first, second) payload pair equals
     the required sequence → (docid, n_spans)."""
-    from lucenenet_spark.index.builder import unpack_postings_payloads
-
     v0 = np.float32(payloads[0])
     v1 = np.float32(payloads[1])
-    src = unpack_postings_payloads(
-        searcher.index.packed.where(F.col("term").isin([first, second]))
-    ).select("docid", "term", "positions", "payloads")
+    src = searcher.index.postings([first, second], payloads=True).select(
+        "docid", "term", "positions", "payloads"
+    )
     grouped = src.groupBy("docid").agg(
         F.collect_list(F.struct("term", "positions", "payloads")).alias("tp")
     )

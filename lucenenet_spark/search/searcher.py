@@ -22,9 +22,12 @@ Physical shape per node:
   Clause scores are folded in clause-index order in float32 — the
   pinned deterministic summation that makes results partition-count
   invariant (the reference analog: TestSameScoresWithThreads).
-- **PhraseQuery** — positions join on docid over the flat posting
-  table + vectorized shifted-position intersection
-  (ExactPhraseScorer's chunked counting, done with numpy sets).
+- **PhraseQuery** / **MultiPhraseQuery** — the shared bucketed
+  positional kernel (``index/postings.py``): one packed scan, one
+  compressed-block shuffle by docid bucket, candidate-gated position
+  decode, then a vectorized shifted-position intersection
+  (ExactPhraseScorer's chunked counting, done with numpy sets) or the
+  sloppy frequency.
 - **MultiTermQuery** (prefix/wildcard/fuzzy/range) — expanded against
   the term_stats dictionary DataFrame (a broadcast-size predicate
   scan), then rewritten to the boolean pipeline
@@ -54,12 +57,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lucenenet_spark.functions import bm25
+from lucenenet_spark.functions.sloppy import (
+    sloppy_freq_2slot_encoded,
+    sloppy_phrase_freq,
+)
 from lucenenet_spark.functions.varbyte import (
     BLOCK_SIZE as _BLOCK_SIZE,
     decode_freqs,
     delta_decode_docids,
 )
 from lucenenet_spark.index.builder import InvertedIndex
+from lucenenet_spark.index.postings import (
+    KEY_SHIFT,
+    bucket_positions,
+    positional_groups,
+)
 from lucenenet_spark.search.queries import (
     BooleanQuery,
     ConstantScoreQuery,
@@ -90,7 +102,6 @@ class IndexSearcher:
     def __init__(
         self,
         index: InvertedIndex,
-        use_packed: bool = True,
         prune: bool = True,
         prune_min_df: int = 64 * _BLOCK_SIZE,
         stats_cache_max_terms: int = 2_000_000,
@@ -98,17 +109,10 @@ class IndexSearcher:
         similarity=None,
     ):
         self.index = index
-        self.use_packed = use_packed
         self.prune = prune
         # below ~64 blocks the θ job costs as much as just decoding, so
         # only high-df terms prune (tests lower this to force the path)
         self.prune_min_df = prune_min_df
-        # phrase conjunction pre-pass engages only when the phrase
-        # terms' summed df exceeds this — below it the extra docid
-        # decode job costs more than the (small) positions shuffle it
-        # avoids; at 100 TB scale the pre-pass is the difference
-        # between shuffling 10^8 wide rows and 10^5
-        self.phrase_prefilter_min_postings = 1_000_000
         # liveDocs: deleted docids anti-joined out of every result
         # (streaming/ingest.py delete model; reference BufferedUpdates)
         self.tombstones = tombstones
@@ -285,8 +289,6 @@ class IndexSearcher:
             )
 
         def phrase_freq(sub) -> float:
-            from lucenenet_spark.functions.sloppy import sloppy_phrase_freq
-
             if isinstance(sub, PhraseQuery):
                 terms_l = list(sub.phrase_terms)
                 if any(t not in posmap for t in terms_l):
@@ -555,8 +557,6 @@ class IndexSearcher:
             ttf=ttf_, sttf=self.index.sum_total_term_freq,
         )
         cache = self._cache
-        if not self.use_packed:
-            return self._term_scores_flat(term, weight)
 
         blocks = self.index.packed.where(F.col("term") == term)
         # pruning certifies its threshold from block metadata that
@@ -601,26 +601,6 @@ class IndexSearcher:
                 )
 
         return blocks.mapInPandas(unpack_score, schema=SCORED)
-
-    def _term_scores_flat(self, term: str, weight) -> DataFrame:
-        """Flat-postings scorer (no block decode) — used when positions
-        or uncompressed postings are already in memory."""
-        sim = self.sim
-        w = float(weight)
-
-        def score_batch(iterator):
-            wf = np.float32(w)
-            for pdf in iterator:
-                f = pdf["freq"].to_numpy(dtype=np.float32)
-                n = pdf["norm"].to_numpy(dtype=np.uint8)
-                s = sim.score(f, n, wf)
-                yield pd.DataFrame({"docid": pdf["docid"], "score": s})
-
-        return (
-            self.index.postings.where(F.col("term") == term)
-            .select("docid", "freq", "norm")
-            .mapInPandas(score_batch, schema=SCORED)
-        )
 
     def _prune_blocks(self, blocks: DataFrame, weight, cache, k: int) -> DataFrame:
         """Block-max pruning (rank-safe, WAND-flavored; an addition the
@@ -675,12 +655,6 @@ class IndexSearcher:
         """Distinct docIDs matching ANY of the terms — ONE scan of the
         packed postings (parquet `term IN (...)` pushdown), decode
         docids only (no freqs/norms/positions), then distinct."""
-        if not self.use_packed:
-            return (
-                self.index.postings.where(F.col("term").isin(terms))
-                .select("docid")
-                .distinct()
-            )
         blocks = self.index.packed.where(F.col("term").isin(terms)).select("docs_enc")
 
         def decode(iterator):
@@ -713,61 +687,34 @@ class IndexSearcher:
         )
         schema = "docid long, cidx int, kind int, score float"
 
-        if self.use_packed:
-            blocks = self.index.packed.where(F.col("term").isin(list(plan))).select(
-                "term", "docs_enc", "freqs_enc", "norms_enc"
-            )
-
-            def unpack(iterator):
-                for pdf in iterator:
-                    # numpy accumulation, ONE DataFrame per Arrow batch
-                    # (not per block — see _term_scores.unpack_score)
-                    ds, cs, ks, ss = [], [], [], []
-                    for term, de, fe, ne in zip(
-                        pdf["term"], pdf["docs_enc"], pdf["freqs_enc"], pdf["norms_enc"]
-                    ):
-                        d = delta_decode_docids(bytes(de))
-                        f = decode_freqs(bytes(fe)).astype(np.float32)
-                        n = np.frombuffer(bytes(ne), dtype=np.uint8)
-                        for cidx, kind, w in plan[term]:
-                            ds.append(d)
-                            ss.append(sim.score(f, n, np.float32(w)))
-                            cs.append(np.full(d.size, cidx, dtype=np.int32))
-                            ks.append(np.full(d.size, kind, dtype=np.int32))
-                    yield pd.DataFrame(
-                        {"docid": np.concatenate(ds),
-                         "cidx": np.concatenate(cs),
-                         "kind": np.concatenate(ks),
-                         "score": np.concatenate(ss)}
-                    ) if ds else empty
-
-            return blocks.mapInPandas(unpack, schema=schema)
-
-        flat = self.index.postings.where(F.col("term").isin(list(plan))).select(
-            "term", "docid", "freq", "norm"
+        blocks = self.index.packed.where(F.col("term").isin(list(plan))).select(
+            "term", "docs_enc", "freqs_enc", "norms_enc"
         )
 
-        def score_flat(iterator):
+        def unpack(iterator):
             for pdf in iterator:
-                outs = []
-                f_all = pdf["freq"].to_numpy(dtype=np.float32)
-                n_all = pdf["norm"].to_numpy(dtype=np.uint8)
-                terms = pdf["term"].to_numpy()
-                for term in np.unique(terms):
-                    m = terms == term
-                    f, n = f_all[m], n_all[m]
-                    for cidx, kind, w in plan[str(term)]:
-                        s = sim.score(f, n, np.float32(w))
-                        outs.append(
-                            pd.DataFrame(
-                                {"docid": pdf["docid"].to_numpy()[m],
-                                 "cidx": np.int32(cidx),
-                                 "kind": np.int32(kind), "score": s}
-                            )
-                        )
-                yield pd.concat(outs) if outs else empty
+                # numpy accumulation, ONE DataFrame per Arrow batch
+                # (not per block — see _term_scores.unpack_score)
+                ds, cs, ks, ss = [], [], [], []
+                for term, de, fe, ne in zip(
+                    pdf["term"], pdf["docs_enc"], pdf["freqs_enc"], pdf["norms_enc"]
+                ):
+                    d = delta_decode_docids(bytes(de))
+                    f = decode_freqs(bytes(fe)).astype(np.float32)
+                    n = np.frombuffer(bytes(ne), dtype=np.uint8)
+                    for cidx, kind, w in plan[term]:
+                        ds.append(d)
+                        ss.append(sim.score(f, n, np.float32(w)))
+                        cs.append(np.full(d.size, cidx, dtype=np.int32))
+                        ks.append(np.full(d.size, kind, dtype=np.int32))
+                yield pd.DataFrame(
+                    {"docid": np.concatenate(ds),
+                     "cidx": np.concatenate(cs),
+                     "kind": np.concatenate(ks),
+                     "score": np.concatenate(ss)}
+                ) if ds else empty
 
-        return flat.mapInPandas(score_flat, schema=schema)
+        return blocks.mapInPandas(unpack, schema=schema)
 
     # ----------------------------------------------------- boolean
     def _boolean(self, q: BooleanQuery, stats) -> DataFrame | None:
@@ -885,363 +832,45 @@ class IndexSearcher:
         return combine_dismax_frames(pos, q.tie_breaker, q.boost)
 
     # ----------------------------------------------------- phrase
-    def _phrase_candidates(
-        self, term_slots: dict[str, list[int]], n_slots: int
-    ) -> DataFrame:
-        """Conjunction pre-pass for phrase scorers: docids containing
-        >= 1 term of EVERY slot, decoded from docs_enc ONLY (narrow
-        rows — no positions payload). At scale this converts the
-        phrase scorer's positions shuffle over every posting of every
-        phrase term into (a) a narrow docid shuffle here and (b) a
-        positions shuffle over just the conjunction: for a 2x df=10^8
-        phrase with 10^5 co-occurrences, ~10^8 wide rows shrink to
-        ~10^5. Emits one row per (docid, slot) membership so a term
-        shared by two slots certifies both (the candidate set must be
-        a SUPERSET of true matches)."""
-        t2s = {t: [int(s) for s in slots] for t, slots in term_slots.items()}
-        blocks = self.index.packed.where(F.col("term").isin(list(t2s))).select(
-            "term", "docs_enc"
-        )
-
-        def decode(iterator):
-            for pdf in iterator:
-                ds, sl = [], []
-                for term, de in zip(pdf["term"], pdf["docs_enc"]):
-                    d = delta_decode_docids(bytes(de))
-                    for s in t2s[term]:
-                        ds.append(d)
-                        sl.append(np.full(d.size, s, dtype=np.int32))
-                yield pd.DataFrame(
-                    {"docid": np.concatenate(ds), "slot": np.concatenate(sl)}
-                ) if ds else pd.DataFrame(
-                    {"docid": pd.array([], dtype="int64"),
-                     "slot": pd.array([], dtype="int32")}
-                )
-
-        pairs = blocks.mapInPandas(decode, schema="docid long, slot int")
-        return (
-            pairs.groupBy("docid")
-            .agg(F.count_distinct("slot").alias("ns"))
-            .where(F.col("ns") == n_slots)
-            .select("docid")
-        )
-
     def _phrase_bucket_scored(
-        self,
-        slots_l: list[list[str]],
-        rels_l: list[int],
-        slop: int,
-        wf: float,
+        self, slots: list[list[str]], rels: list[int], slop: int, wf: float
     ) -> DataFrame:
         """Per-bucket phrase verification over PACKED blocks — the
         distributed analog of Lucene's per-segment ExactPhraseScorer
         with skip lists (``Search/ExactPhraseScorer.cs:292``;
-        ``NearSpansOrdered`` for slop): buckets are docid-DISJOINT by
-        construction (``builder.py`` range buckets), so every phrase
-        match is certified entirely inside one bucket.
-
-        Physical shape: ONE scan of the packed table filtered to the
-        phrase terms (parquet term-IN pushdown), ONE narrow shuffle of
-        the still-compressed blocks keyed by bucket, then a single
-        ``applyInPandas`` stage per bucket that (a) delta-decodes
-        docids only, (b) intersects the per-slot docid unions, and
-        (c) decodes POSITIONS only for blocks that contain a surviving
-        candidate — the skip-list block-skipping, fused with the
-        conjunction pre-pass, at zero extra jobs. This replaces the
-        previous plan (decode positions of every posting → explode →
-        groupBy(docid) collect_list) whose shuffle carried every
-        decoded position of every query term. Group size is bounded:
-        ≤ |terms| × 64 blocks per bucket (BUCKET_DOCS = 128·64), so no
-        group skew at any corpus size; parallelism = number of buckets,
-        which grows with the corpus."""
-        from lucenenet_spark.functions.varbyte import (
-            decode_positions_flat,
-            gather_ranges,
-        )
-        from lucenenet_spark.functions.sloppy import sloppy_phrase_freq
-
-        sim = self.sim
-        uniq = sorted({t for slot in slots_l for t in slot})
-        slots_c = [list(s) for s in slots_l]
-        rels_c = list(rels_l)
-        slot_keys = [tuple(s) for s in slots_c]
-        blocks = self.index.packed.where(F.col("term").isin(uniq)).select(
-            "term", "bucket", "block_id", "count",
-            "docs_enc", "freqs_enc", "norms_enc", "positions_enc",
-        )
-        empty = pd.DataFrame(
-            {"docid": pd.array([], dtype="int64"),
-             "score": pd.array([], dtype="float32")}
-        )
-        w32 = np.float32(wf)
-
-        def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["term", "block_id"])
-            # docid-only decode first (cheap); positions stay encoded
-            term_blocks: dict[str, list] = {}
-            for term, de, fe, ne, pe in zip(
-                pdf["term"], pdf["docs_enc"], pdf["freqs_enc"],
-                pdf["norms_enc"], pdf["positions_enc"],
-            ):
-                term_blocks.setdefault(term, []).append(
-                    (delta_decode_docids(bytes(de)), fe, ne, pe)
-                )
-            # conjunction over per-slot docid unions
-            cand = None
-            for slot in slots_c:
-                arrs = [b[0] for t in slot if t in term_blocks
-                        for b in term_blocks[t]]
-                if not arrs:
-                    return empty
-                sd = arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
-                cand = sd if cand is None else np.intersect1d(
-                    cand, sd, assume_unique=True
-                )
-                if cand.size == 0:
-                    return empty
-            # positions + norms decoded ONLY for blocks holding a
-            # candidate (the skip-list block skipping). Positions are
-            # lifted to GLOBAL keys docid·2³² + position so the whole
-            # bucket's exact-phrase intersection is ONE numpy set op
-            # across every candidate doc — no per-doc Python loop.
-            SHIFT = np.int64(1) << np.int64(32)
-            glob: dict[str, list] = {t: [] for t in term_blocks}
-            norms = np.zeros(cand.size, dtype=np.uint8)
-            for term, blks in term_blocks.items():
-                gl = glob[term]
-                for d, fe, ne, pe in blks:
-                    lo = np.searchsorted(cand, d[0])
-                    hi = np.searchsorted(cand, d[-1], side="right")
-                    if lo == hi:
-                        continue  # no candidate in this block: skip decode
-                    sub = cand[lo:hi]
-                    idx = np.searchsorted(d, sub)
-                    hit = d[idx] == sub
-                    if not hit.any():
-                        continue
-                    # freqs ARE the per-doc position counts: flat
-                    # vectorized prox decode + multi-range gather
-                    # (no per-doc cumsum/list building — that walk
-                    # dominated span/phrase time on sf1 head terms)
-                    f = decode_freqs(bytes(fe)).astype(np.int64)
-                    flat, starts = decode_positions_flat(bytes(pe), f)
-                    nb = np.frombuffer(bytes(ne), dtype=np.uint8)
-                    ci = np.flatnonzero(hit) + lo
-                    bi = idx[hit]
-                    norms[ci] = nb[bi]
-                    lens = f[bi]
-                    gl.append(
-                        np.repeat(cand[ci] * SHIFT, lens)
-                        + gather_ranges(flat, starts[bi], lens)
-                    )
-            # per-slot position unions in the GLOBAL key space
-            # (docid·2³² + raw position): docid in the high bits keeps
-            # docs apart (positions < 2³², rels tiny — no aliasing), so
-            # one numpy set op covers every candidate doc in the bucket
-            unions_g = []
-            for slot in slots_c:
-                arrs = [a for t in slot for a in glob.get(t, ())]
-                if not arrs:
-                    return empty
-                u = arrs[0] if len(arrs) == 1 else np.unique(
-                    np.concatenate(arrs)
-                )
-                unions_g.append(u)
-            freqs = np.zeros(cand.size, dtype=np.float32)
-            if slop == 0:
-                # vectorized ExactPhraseScorer (``ExactPhraseScorer.cs:
-                # 292``): candidate start = every position of slot 0
-                # shifted by its offset; intersect across slots
-                u0 = unions_g[0]
-                # posIndex >= 0: a phrase cannot start before the doc
-                acc = u0[(u0 & np.int64(0xFFFFFFFF)) >= rels_c[0]] - np.int64(
-                    rels_c[0]
-                )
-                for u, r in zip(unions_g[1:], rels_c[1:]):
-                    acc = np.intersect1d(acc, u - np.int64(r))
-                    if acc.size == 0:
-                        return empty
-                docs_m, counts = np.unique(
-                    (acc + np.int64(rels_c[0])) >> np.int64(32),
-                    return_counts=True,
-                )
-                freqs[np.searchsorted(cand, docs_m)] = counts.astype(np.float32)
-            elif len(slots_c) == 2 and slot_keys[0] != slot_keys[1]:
-                # sloppy, two distinct slots (every 2-term sloppy
-                # phrase — the dominant shape): closed form of the PQ
-                # walk evaluated for the WHOLE bucket in one numpy
-                # pass (``sloppy_freq_2slot_encoded``; bit-for-bit
-                # property-tested against the walk). At sf1 the
-                # per-doc walk was 73% of the stage's single-thread
-                # time over 1.36M matching docs.
-                from lucenenet_spark.functions.sloppy import (
-                    sloppy_freq_2slot_encoded,
-                )
-
-                vd, vf = sloppy_freq_2slot_encoded(
-                    unions_g[0], unions_g[1], rels_c[0], rels_c[1], slop
-                )
-                if vd.size == 0:
-                    return empty
-                freqs[np.searchsorted(cand, vd)] = vf
-            else:
-                # sloppy, general case: the faithful SloppyPhraseScorer
-                # PQ walk is inherently per-doc. Before looping, a
-                # VECTORIZED existence prefilter drops docs that cannot
-                # match: a match needs every slot within ``slop`` of
-                # the anchor slot's window, so for each slot s take the
-                # nearest neighbor of every anchor key and keep only
-                # docs where every slot passes (a conservative
-                # superset). Skipped for repeated-term phrases where
-                # collision handling can shift windows.
-                walk_docs = cand
-                if len(set(slot_keys)) == len(slot_keys) and len(slots_c) > 1:
-                    a = unions_g[0] - np.int64(rels_c[0])
-                    live = None
-                    for u, r in zip(unions_g[1:], rels_c[1:]):
-                        b = u - np.int64(r)
-                        ir = np.searchsorted(b, a)
-                        nxt = np.where(
-                            ir < b.size,
-                            b[np.minimum(ir, b.size - 1)] - a,
-                            np.int64(1) << np.int64(40),
-                        )
-                        prv = np.where(
-                            ir > 0,
-                            a - b[np.maximum(ir - 1, 0)],
-                            np.int64(1) << np.int64(40),
-                        )
-                        near = np.minimum(nxt, prv) <= slop
-                        ok_docs = np.unique((a[near]) >> np.int64(32))
-                        live = ok_docs if live is None else np.intersect1d(
-                            live, ok_docs, assume_unique=True
-                        )
-                        if live.size == 0:
-                            return empty
-                    walk_docs = live
-                # per-doc slot positions via sorted-slice extraction;
-                # slice boundaries computed for ALL walked docs at once
-                w_idx = np.searchsorted(cand, walk_docs)
-                bases = walk_docs * SHIFT
-                bounds = [
-                    (np.searchsorted(u, bases), np.searchsorted(u, bases + SHIFT))
-                    for u in unions_g
-                ]
-                for j, (i, doc) in enumerate(zip(w_idx, walk_docs)):
-                    base = bases[j]
-                    unions = []
-                    ok = True
-                    for u, (los, his) in zip(unions_g, bounds):
-                        lo, hi = los[j], his[j]
-                        if lo == hi:
-                            ok = False
-                            break
-                        unions.append(u[lo:hi] - base)
-                    if not ok:
-                        continue
-                    freqs[i] = sloppy_phrase_freq(
-                        unions, slop, offsets=rels_c, term_keys=slot_keys
-                    )
-            m = freqs > 0
-            if not m.any():
-                return empty
-            s = sim.score(freqs[m], norms[m], w32)
-            return pd.DataFrame(
-                {"docid": cand[m], "score": s.astype(np.float32)}
-            )
-
-        # groupBy(bucket).applyInPandas — one narrow block shuffle.
-        # Pre-hash over a prime partition count so distinct buckets
-        # rarely collide onto one core (25 buckets into 32 partitions
-        # leaves 2-3-bucket stragglers); AQE re-coalesces by size, and
-        # Catalyst reuses this hash partitioning for the groupBy, so
-        # it is still ONE shuffle.
-        return blocks.repartition(199, "bucket").groupBy("bucket").applyInPandas(
-            lambda pdf: verify(pdf), schema=SCORED
+        ``NearSpansOrdered`` for slop). The shared bucketed positional
+        kernel (``index/postings.py``) does the scan, the compressed
+        block shuffle, the docid conjunction and the candidate-gated
+        position decode; :func:`_verify_phrase_bucket` is the matcher."""
+        sim, w32 = self.sim, np.float32(wf)
+        return positional_groups(
+            self.index.packed, [t for slot in slots for t in slot]
+        ).applyInPandas(
+            lambda pdf: _verify_phrase_bucket(pdf, slots, rels, slop, sim, w32),
+            schema=SCORED,
         )
 
     def _phrase(self, q: PhraseQuery, stats) -> DataFrame | None:
         terms = list(q.phrase_terms)
-        rels = list(q.positions())
-        if not terms:
+        if not terms or any(t not in stats for t in terms):
             return None
-        if any(t not in stats for t in terms):
-            return None
-        uniq = sorted(set(terms))
         # weight: the pluggable similarity's multi-term form (BM25:
         # float32-ordered idf sum; Classic: summed idf squared) —
         # Similarity.ComputeWeight(TermStatistics[]) made concrete
-        sim = self.sim
-        w = sim.weight_multi(
+        w = self.sim.weight_multi(
             [stats[t][0] for t in terms], self.index.max_doc, q.boost
         )
-        wf = float(w)
-        rels_l = list(rels)
-        terms_l = list(terms)
-
-        # packed path: per-bucket block-grouped verification (one
-        # narrow compressed-block shuffle; conjunction + skip-list
-        # position skipping fused inside the group UDF)
-        if self.use_packed:
-            return self._phrase_bucket_scored(
-                [[t] for t in terms_l], rels_l, q.slop, wf
-            )
-        src = self.index.postings.where(F.col("term").isin(uniq))
-        cand = (
-            src.groupBy("docid")
-            .agg(
-                F.collect_list(F.struct("term", "positions")).alias("tp"),
-                F.first("norm").alias("norm"),
-                F.count("*").alias("nt"),
-            )
-            .where(F.col("nt") == len(uniq))
+        return self._phrase_bucket_scored(
+            [[t] for t in terms], list(q.positions()), q.slop, float(w)
         )
-
-        slop = q.slop
-
-        @F.pandas_udf("float")
-        def phrase_score(tp: pd.Series, norm: pd.Series) -> pd.Series:
-            from lucenenet_spark.functions.sloppy import sloppy_phrase_freq
-
-            w32 = np.float32(wf)
-            freqs = np.zeros(len(tp), dtype=np.float32)
-            for i, lst in enumerate(tp):
-                posmap = {item["term"]: np.asarray(item["positions"], dtype=np.int64) for item in lst}
-                if slop == 0:
-                    acc = posmap[terms_l[0]] - rels_l[0]
-                    for t, r in zip(terms_l[1:], rels_l[1:]):
-                        acc = np.intersect1d(acc, posmap[t] - r, assume_unique=False)
-                        if acc.size == 0:
-                            break
-                    # ExactPhraseScorer.cs:292 posIndex >= 0: a phrase
-                    # cannot start before the document (matters only
-                    # for term_positions not starting at 0)
-                    freqs[i] = np.float32(np.count_nonzero(acc >= 0))
-                else:
-                    freqs[i] = sloppy_phrase_freq(
-                        [posmap[t] for t in terms_l], slop,
-                        offsets=rels_l, term_keys=terms_l,
-                    )
-            # vectorized batch scoring through the similarity plug
-            # (BM25 path bit-identical to the inlined w*f/(f+c))
-            s = sim.score(freqs, norm.to_numpy(dtype=np.uint8), w32)
-            return pd.Series(np.where(freqs > 0, s, np.nan).astype(np.float32))
-
-        scored = cand.select(
-            "docid", phrase_score(F.col("tp"), F.col("norm")).alias("score")
-        ).where(F.col("score").isNotNull() & ~F.isnan(F.col("score")))
-        return scored
 
     def _multi_phrase(self, q: MultiPhraseQuery, stats) -> DataFrame | None:
         """MultiPhraseQuery (``Search/MultiPhraseQuery.cs:72``): slot i
         matches if ANY of its alternatives sits at the expected
-        position. Same physical shape as the exact/sloppy phrase — one
-        packed scan filtered to all slot terms (parquet In pushdown),
-        one groupBy(docid) shuffle, vectorized position math — with
+        position. Same physical shape as the exact/sloppy phrase, with
         each slot's position set being the union of its present terms'
         positions (UnionDocsAndPositionsEnum's merge)."""
         slots = [tuple(s) for s in q.slots if s]
-        rels = list(q.positions())
         if not slots:
             return None
         present = [[t for t in slot if t in stats] for slot in slots]
@@ -1250,67 +879,122 @@ class IndexSearcher:
         # weight: idf summed over EVERY term of every slot in order,
         # absent terms contributing df=0 idf (reference sums the full
         # termArrays' TermStatistics), via the similarity plug
-        sim = self.sim
-        w = sim.weight_multi(
+        w = self.sim.weight_multi(
             [stats.get(t, (0, 0))[0] for slot in slots for t in slot],
             self.index.max_doc,
             q.boost,
         )
-        wf = float(w)
-        uniq = sorted({t for p in present for t in p})
-        slots_l = [list(p) for p in present]
-        rels_l = list(rels)
-        slop = q.slop
-
-        if self.use_packed:
-            return self._phrase_bucket_scored(slots_l, rels_l, slop, wf)
-        src = self.index.postings.where(F.col("term").isin(uniq))
-        cand = src.groupBy("docid").agg(
-            F.collect_list(F.struct("term", "positions")).alias("tp"),
-            F.first("norm").alias("norm"),
+        return self._phrase_bucket_scored(
+            present, list(q.positions()), q.slop, float(w)
         )
 
-        @F.pandas_udf("float")
-        def mp_score(tp: pd.Series, norm: pd.Series) -> pd.Series:
-            from lucenenet_spark.functions.sloppy import sloppy_phrase_freq
 
-            w32 = np.float32(wf)
-            freqs = np.zeros(len(tp), dtype=np.float32)
-            for i, lst in enumerate(tp):
-                posmap = {
-                    item["term"]: np.asarray(item["positions"], dtype=np.int64)
-                    for item in lst
-                }
-                unions = []
-                ok = True
-                for slot in slots_l:
-                    arrs = [posmap[t] for t in slot if t in posmap]
-                    if not arrs:
-                        ok = False
-                        break
-                    unions.append(np.unique(np.concatenate(arrs)))
-                if not ok:
-                    continue
-                if slop == 0:
-                    acc = unions[0] - rels_l[0]
-                    for u, r in zip(unions[1:], rels_l[1:]):
-                        acc = np.intersect1d(acc, u - r, assume_unique=True)
-                        if acc.size == 0:
-                            break
-                    freqs[i] = np.float32(np.count_nonzero(acc >= 0))
-                else:
-                    # slot identity as the repeat key: identical slots
-                    # (same alternative set) form a repeat group
-                    keys = [tuple(s) for s in slots_l]
-                    freqs[i] = sloppy_phrase_freq(
-                        unions, slop, offsets=rels_l, term_keys=keys
-                    )
-            s = sim.score(freqs, norm.to_numpy(dtype=np.uint8), w32)
-            return pd.Series(np.where(freqs > 0, s, np.nan).astype(np.float32))
+_EMPTY_SCORED = pd.DataFrame(
+    {"docid": pd.array([], dtype="int64"), "score": pd.array([], dtype="float32")}
+)
 
-        return cand.select(
-            "docid", mp_score(F.col("tp"), F.col("norm")).alias("score")
-        ).where(F.col("score").isNotNull() & ~F.isnan(F.col("score")))
+
+def _verify_phrase_bucket(
+    pdf: pd.DataFrame, slots_c, rels_c, slop: int, sim, w32
+) -> pd.DataFrame:
+    """Phrase matcher for one bucket group: exact, 2-slot sloppy or
+    general sloppy frequency per candidate doc, scored with the
+    similarity. Positions arrive as bucket-local keys
+    ``(docid << 32) + position`` from :func:`bucket_positions`."""
+    bp = bucket_positions(pdf, slots_c)
+    if bp is None:
+        return _EMPTY_SCORED
+    cand = bp.cand
+    slot_keys = [tuple(s) for s in slots_c]
+    # per-slot position unions in the key space: the doc in the high
+    # bits keeps docs apart (positions < 2³², rels tiny — no aliasing),
+    # so one numpy set op covers every candidate doc in the bucket
+    unions_g = []
+    for slot in slots_c:
+        arrs = [bp.keys[t] for t in slot if t in bp.keys]
+        if not arrs:
+            return _EMPTY_SCORED
+        unions_g.append(arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs)))
+    freqs = np.zeros(cand.size, dtype=np.float32)
+    if slop == 0:
+        # vectorized ExactPhraseScorer (``ExactPhraseScorer.cs:292``):
+        # candidate start = every position of slot 0 shifted by its
+        # offset; intersect across slots
+        u0 = unions_g[0]
+        # posIndex >= 0: a phrase cannot start before the doc
+        acc = u0[(u0 & np.int64(0xFFFFFFFF)) >= rels_c[0]] - np.int64(rels_c[0])
+        for u, r in zip(unions_g[1:], rels_c[1:]):
+            acc = np.intersect1d(acc, u - np.int64(r))
+            if acc.size == 0:
+                return _EMPTY_SCORED
+        docs_m, counts = np.unique(
+            (acc + np.int64(rels_c[0])) >> KEY_SHIFT, return_counts=True
+        )
+        freqs[np.searchsorted(cand, docs_m)] = counts.astype(np.float32)
+    elif len(slots_c) == 2 and slot_keys[0] != slot_keys[1]:
+        # sloppy, two distinct slots (every 2-term sloppy phrase — the
+        # dominant shape): closed form of the PQ walk evaluated for the
+        # WHOLE bucket in one numpy pass (``sloppy_freq_2slot_encoded``;
+        # bit-for-bit property-tested against the walk). At sf1 the
+        # per-doc walk was 73% of the stage's single-thread time over
+        # 1.36M matching docs.
+        vd, vf = sloppy_freq_2slot_encoded(
+            unions_g[0], unions_g[1], rels_c[0], rels_c[1], slop
+        )
+        if vd.size == 0:
+            return _EMPTY_SCORED
+        freqs[np.searchsorted(cand, vd)] = vf
+    else:
+        # sloppy, general case: the faithful SloppyPhraseScorer PQ walk
+        # is inherently per-doc. Before looping, a VECTORIZED existence
+        # prefilter drops docs that cannot match: a match needs every
+        # slot within ``slop`` of the anchor slot's window, so for each
+        # slot s take the nearest neighbor of every anchor key and keep
+        # only docs where every slot passes (a conservative superset).
+        # Skipped for repeated-term phrases where collision handling
+        # can shift windows.
+        walk_docs = cand
+        if len(set(slot_keys)) == len(slot_keys) and len(slots_c) > 1:
+            far = np.int64(1) << np.int64(40)
+            a = unions_g[0] - np.int64(rels_c[0])
+            live = None
+            for u, r in zip(unions_g[1:], rels_c[1:]):
+                b = u - np.int64(r)
+                ir = np.searchsorted(b, a)
+                nxt = np.where(ir < b.size, b[np.minimum(ir, b.size - 1)] - a, far)
+                prv = np.where(ir > 0, a - b[np.maximum(ir - 1, 0)], far)
+                near = np.minimum(nxt, prv) <= slop
+                ok_docs = np.unique(a[near] >> KEY_SHIFT)
+                live = ok_docs if live is None else np.intersect1d(
+                    live, ok_docs, assume_unique=True
+                )
+                if live.size == 0:
+                    return _EMPTY_SCORED
+            walk_docs = live
+        # per-doc slot positions via sorted-slice extraction; slice
+        # boundaries computed for ALL walked docs at once
+        w_idx = np.searchsorted(cand, walk_docs)
+        bases = walk_docs << KEY_SHIFT
+        nxt_bases = (walk_docs + 1) << KEY_SHIFT
+        bounds = [
+            (np.searchsorted(u, bases), np.searchsorted(u, nxt_bases))
+            for u in unions_g
+        ]
+        for j, i in enumerate(w_idx):
+            unions = []
+            for u, (los, his) in zip(unions_g, bounds):
+                if los[j] == his[j]:
+                    break
+                unions.append(u[los[j]:his[j]] - bases[j])
+            else:
+                freqs[i] = sloppy_phrase_freq(
+                    unions, slop, offsets=rels_c, term_keys=slot_keys
+                )
+    m = freqs > 0
+    if not m.any():
+        return _EMPTY_SCORED
+    s = sim.score(freqs[m], bp.norms[m], w32)
+    return pd.DataFrame({"docid": cand[m] + bp.base, "score": s.astype(np.float32)})
 
 
 def combine_boolean_frames(

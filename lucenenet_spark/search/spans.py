@@ -10,13 +10,13 @@ span-count spec* (documented per node below) instead of the
 reference's lazy iterator enumeration, so the result is
 SQL-oracle-mirrorable.
 
-Physical shape — the phrase scorer's: ONE packed scan filtered to all
-involved terms (parquet ``term IN`` pushdown BEFORE the unpack
-barrier), one ``groupBy(docid)`` positions shuffle, then a vectorized
-per-doc span enumeration inside a pandas UDF. A doc's span math is
-tiny (its own positions only); the distribution-heavy part — which
-docs hold which terms — stays declarative. Output: ``(docid,
-n_spans)`` for docs with >= 1 surviving span.
+Physical shape — the phrase scorer's, on the shared bucketed
+positional kernel (``index/postings.py``): ONE packed scan filtered to
+all involved terms (parquet ``term IN`` pushdown), one shuffle of the
+still-compressed blocks by docid bucket, then a per-doc span
+enumeration inside the bucket group. A doc's span math is tiny (its
+own positions only). Output: ``(docid, n_spans)`` for docs with >= 1
+surviving span.
 
 Pinned span spec (what ``n_spans`` counts):
 
@@ -57,6 +57,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lucenenet_spark.index.postings import (
+    KEY_SHIFT,
+    bucket_positions,
+    positional_groups,
+)
 from lucenenet_spark.search.queries import MultiTermQuery
 
 
@@ -315,185 +320,108 @@ def _required_slots(q: SpanQuery) -> list[list[str]]:
     return [sorted(set(q.terms()))]
 
 
+_EMPTY_COUNTS = pd.DataFrame(
+    {"docid": pd.array([], dtype="int64"), "n_spans": pd.array([], dtype="int64")}
+)
+_EMPTY_SCORED = pd.DataFrame(
+    {"docid": pd.array([], dtype="int64"), "score": pd.array([], dtype="float32")}
+)
+
+
 def _bucket_span_eval(searcher, q: SpanQuery, scored: bool, wf: float):
-    """Per-bucket block-grouped span evaluation — the phrase scorer's
-    physical shape (``searcher._phrase_bucket_scored``): ONE packed
-    scan filtered to the query's terms (parquet term-IN pushdown), ONE
-    narrow shuffle of the still-compressed blocks keyed by the
-    docid-disjoint bucket, then a single ``applyInPandas`` stage that
-    decodes docids, intersects the required-slot candidacy, decodes
-    POSITIONS only for blocks still holding a candidate (skip-list
-    skipping), and enumerates spans per doc. No decoded-positions
-    shuffle, no collect_list."""
-    from lucenenet_spark.functions.varbyte import (
-        decode_freqs,
-        decode_positions_flat,
-        delta_decode_docids,
-        gather_ranges,
-    )
-
+    """Per-bucket block-grouped span evaluation on the shared bucketed
+    positional kernel (``index/postings.py``, the phrase scorer's
+    physical shape): ONE packed scan filtered to the query's terms,
+    ONE narrow shuffle of the still-compressed blocks keyed by the
+    docid-disjoint bucket, then a single ``applyInPandas`` stage whose
+    matcher (:func:`_eval_span_bucket`) enumerates spans per doc. No
+    decoded-positions shuffle, no collect_list."""
     sim = searcher.sim
-    all_terms = sorted(set(q.terms()))
     req = _required_slots(q)
-    blocks = searcher.index.packed.where(F.col("term").isin(all_terms)).select(
-        "term", "bucket", "block_id", "count",
-        "docs_enc", "freqs_enc", "norms_enc", "positions_enc",
+    w32 = np.float32(wf)
+    return positional_groups(searcher.index.packed, q.terms()).applyInPandas(
+        lambda pdf: _eval_span_bucket(pdf, q, req, scored, sim, w32),
+        "docid long, score float" if scored else "docid long, n_spans long",
     )
-    if scored:
-        schema = "docid long, score float"
-        empty = pd.DataFrame(
-            {"docid": pd.array([], dtype="int64"),
-             "score": pd.array([], dtype="float32")}
-        )
-    else:
-        schema = "docid long, n_spans long"
-        empty = pd.DataFrame(
-            {"docid": pd.array([], dtype="int64"),
-             "n_spans": pd.array([], dtype="int64")}
-        )
-    qq = q
-    SHIFT = np.int64(1) << np.int64(32)
 
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["term", "block_id"])
-        term_blocks: dict[str, list] = {}
-        for term, de, fe, ne, pe in zip(
-            pdf["term"], pdf["docs_enc"], pdf["freqs_enc"],
-            pdf["norms_enc"], pdf["positions_enc"],
-        ):
-            term_blocks.setdefault(term, []).append(
-                (delta_decode_docids(bytes(de)), fe, ne, pe)
-            )
-        cand = None
-        for slot in req:
-            arrs = [b[0] for t in slot if t in term_blocks
-                    for b in term_blocks[t]]
-            if not arrs:
-                return empty
-            sd = arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
-            cand = sd if cand is None else np.intersect1d(
-                cand, sd, assume_unique=True
-            )
-            if cand.size == 0:
-                return empty
-        glob: dict[str, list] = {t: [] for t in term_blocks}
-        norms = np.zeros(cand.size, dtype=np.uint8)
-        for term, blks in term_blocks.items():
-            gl = glob[term]
-            for d, fe, ne, pe in blks:
-                lo = np.searchsorted(cand, d[0])
-                hi = np.searchsorted(cand, d[-1], side="right")
-                if lo == hi:
-                    continue
-                sub = cand[lo:hi]
-                idx = np.searchsorted(d, sub)
-                hit = d[idx] == sub
-                if not hit.any():
-                    continue
-                # freqs ARE the per-doc position counts: one flat
-                # vectorized prox decode + multi-range gather, no
-                # per-doc numpy calls (the old per-doc cumsum walk was
-                # the sf1 span bottleneck)
-                f = decode_freqs(bytes(fe)).astype(np.int64)
-                flat, starts = decode_positions_flat(bytes(pe), f)
-                nb = np.frombuffer(bytes(ne), dtype=np.uint8)
-                ci = np.flatnonzero(hit) + lo
-                bi = idx[hit]
-                norms[ci] = nb[bi]
-                lens = f[bi]
-                gl.append(
-                    np.repeat(cand[ci] * SHIFT, lens)
-                    + gather_ranges(flat, starts[bi], lens)
-                )
-        bases = cand * SHIFT
-        unions: list[tuple[str, np.ndarray, np.ndarray, np.ndarray]] = []
-        for t, arrs in glob.items():
-            if not arrs:
-                continue
-            # blocks of one (term, bucket) from DIFFERENT segments
-            # interleave docid ranges (a segment owns several
-            # hash-placed docid ranges) — concatenation must be sorted
-            u = arrs[0] if len(arrs) == 1 else np.sort(np.concatenate(arrs))
-            unions.append(
-                (t, u, np.searchsorted(u, bases),
-                 np.searchsorted(u, bases + SHIFT))
-            )
-        # 2-term ordered fast walk (the phrase scorer's idiom): a
-        # valid start p1 is one whose MINIMAL same-doc successor
-        # p2 >= p1+1 satisfies p2 - p1 - 1 <= slop (greedy minimizes
-        # the chain end, so "greedy fits" <=> "some chain fits" —
-        # identical to _enumerate's per-start spec). One searchsorted
-        # over the doc-encoded global position arrays replaces the
-        # per-doc Python loop; n_spans = valid starts per doc.
-        if (
-            not scored
-            and isinstance(qq, SpanNearQuery)
-            and qq.in_order
-            and len(qq.clauses) == 2
-            and all(isinstance(c, SpanTermQuery) for c in qq.clauses)
-        ):
-            tu = {t: u for t, u, _, _ in unions}
-            g1 = tu.get(qq.clauses[0].term)
-            g2 = tu.get(qq.clauses[1].term)
-            if g1 is None or g2 is None or g1.size == 0 or g2.size == 0:
-                return empty
-            nxt = np.searchsorted(g2, g1 + 1)
-            ok = nxt < g2.size
-            p2 = g2[np.minimum(nxt, g2.size - 1)]
-            valid = (
-                ok
-                & ((p2 // SHIFT) == (g1 // SHIFT))
-                & (p2 - g1 - 1 <= qq.slop)
-            )
-            if not valid.any():
-                return empty
-            vd, vc = np.unique(g1[valid] // SHIFT, return_counts=True)
-            return pd.DataFrame(
-                {"docid": vd.astype(np.int64), "n_spans": vc.astype(np.int64)}
-            )
 
-        docs_out: list[int] = []
-        vals: list = []
-        for j, doc in enumerate(cand):
-            posmap = {}
-            for t, u, los, his in unions:
-                lo, hi = los[j], his[j]
-                if lo < hi:
-                    posmap[t] = u[lo:hi] - bases[j]
-            spans = _enumerate(qq, posmap)
-            n = len(spans)
-            if n == 0:
-                continue
-            if scored:
-                # SpanScorer.SetFreqCurrentDoc: float32 ordered sum of
-                # 1/(1 + matchLength) over spans in enumeration order
-                acc = np.float32(0.0)
-                for s, e in spans:
-                    acc = np.float32(
-                        acc + np.float32(1.0) / np.float32(1 + (e - s))
-                    )
-                vals.append((acc, norms[j]))
-            else:
-                vals.append(n)
-            docs_out.append(int(doc))
-        if not docs_out:
+def _eval_span_bucket(
+    pdf: pd.DataFrame, qq: SpanQuery, req, scored: bool, sim, w32
+) -> pd.DataFrame:
+    """Span matcher for one bucket group: (docid, n_spans), or
+    (docid, score) when ``scored``. Positions arrive as bucket-local
+    keys ``(docid << 32) + position`` from :func:`bucket_positions`."""
+    empty = _EMPTY_SCORED if scored else _EMPTY_COUNTS
+    bp = bucket_positions(pdf, req)
+    if bp is None:
+        return empty
+    cand = bp.cand
+    # 2-term ordered fast walk (the phrase scorer's idiom): a valid
+    # start p1 is one whose MINIMAL same-doc successor p2 >= p1+1
+    # satisfies p2 - p1 - 1 <= slop (greedy minimizes the chain end,
+    # so "greedy fits" <=> "some chain fits" — identical to
+    # _enumerate's per-start spec). One searchsorted over the
+    # doc-encoded position keys replaces the per-doc Python loop;
+    # n_spans = valid starts per doc.
+    if (
+        not scored
+        and isinstance(qq, SpanNearQuery)
+        and qq.in_order
+        and len(qq.clauses) == 2
+        and all(isinstance(c, SpanTermQuery) for c in qq.clauses)
+    ):
+        g1 = bp.keys.get(qq.clauses[0].term)
+        g2 = bp.keys.get(qq.clauses[1].term)
+        if g1 is None or g2 is None or g1.size == 0 or g2.size == 0:
             return empty
-        if scored:
-            freqs = np.array([v[0] for v in vals], dtype=np.float32)
-            nrm = np.array([v[1] for v in vals], dtype=np.uint8)
-            s = sim.score(freqs, nrm, np.float32(wf))
-            return pd.DataFrame(
-                {"docid": np.asarray(docs_out, dtype=np.int64),
-                 "score": s.astype(np.float32)}
-            )
+        nxt = np.searchsorted(g2, g1 + 1)
+        ok = nxt < g2.size
+        p2 = g2[np.minimum(nxt, g2.size - 1)]
+        valid = (
+            ok
+            & ((p2 >> KEY_SHIFT) == (g1 >> KEY_SHIFT))
+            & (p2 - g1 - 1 <= qq.slop)
+        )
+        if not valid.any():
+            return empty
+        vd, vc = np.unique(g1[valid] >> KEY_SHIFT, return_counts=True)
         return pd.DataFrame(
-            {"docid": np.asarray(docs_out, dtype=np.int64),
-             "n_spans": np.asarray(vals, dtype=np.int64)}
+            {"docid": vd + bp.base, "n_spans": vc.astype(np.int64)}
         )
 
-    return blocks.repartition(199, "bucket").groupBy("bucket").applyInPandas(
-        lambda pdf: apply_fn(pdf), schema
-    )
+    bases = cand << KEY_SHIFT
+    nxt_bases = (cand + 1) << KEY_SHIFT
+    unions = [
+        (t, u, np.searchsorted(u, bases), np.searchsorted(u, nxt_bases))
+        for t, u in bp.keys.items()
+    ]
+    keep: list[int] = []
+    vals: list = []
+    for j in range(cand.size):
+        posmap = {}
+        for t, u, los, his in unions:
+            if los[j] < his[j]:
+                posmap[t] = u[los[j]:his[j]] - bases[j]
+        spans = _enumerate(qq, posmap)
+        if len(spans) == 0:
+            continue
+        if scored:
+            # SpanScorer.SetFreqCurrentDoc: float32 ordered sum of
+            # 1/(1 + matchLength) over spans in enumeration order
+            acc = np.float32(0.0)
+            for s, e in spans:
+                acc = np.float32(acc + np.float32(1.0) / np.float32(1 + (e - s)))
+            vals.append(acc)
+        else:
+            vals.append(len(spans))
+        keep.append(j)
+    if not keep:
+        return empty
+    docs = cand[keep] + bp.base
+    if scored:
+        s = sim.score(np.asarray(vals, dtype=np.float32), bp.norms[keep], w32)
+        return pd.DataFrame({"docid": docs, "score": s.astype(np.float32)})
+    return pd.DataFrame({"docid": docs, "n_spans": np.asarray(vals, dtype=np.int64)})
 
 
 def span_query(searcher, q: SpanQuery) -> DataFrame:

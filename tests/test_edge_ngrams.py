@@ -29,7 +29,7 @@ def test_exclusive_with_stream_filters(spark):
             spark, df,
             CorpusSpec(order_cols=("repo", "path", "commit"),
                        edge_ngram=(2, 4), shingle_size=2),
-        ).postings.collect()
+        ).postings().collect()
 
 
 def test_prefix_as_exact_term(spark):

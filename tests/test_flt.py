@@ -112,7 +112,7 @@ def test_max_num_terms_cap(flt_searcher):
 def test_topk_is_clause_order_f32_fold(flt_searcher):
     clauses = fuzzy_like_this_terms(flt_searcher, "tabel merge", 0.4, 0, 10).collect()
     boosts = [(r["cidx"], r["variant"], np.float32(r["boost"])) for r in clauses]
-    post = flt_searcher.index.postings.select("docid", "term").collect()
+    post = flt_searcher.index.postings().select("docid", "term").collect()
     docs_of = {}
     for r in post:
         docs_of.setdefault(r["term"], set()).add(r["docid"])

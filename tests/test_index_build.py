@@ -46,8 +46,8 @@ def test_checkindex_counter_reconciliation(spark_index):
     ts = spark_index.term_stats.agg(
         F.sum("df").alias("sdf"), F.sum("ttf").alias("sttf")
     ).collect()[0]
-    n_postings = spark_index.postings.count()
-    sum_freq = spark_index.postings.agg(F.sum("freq")).collect()[0][0]
+    n_postings = spark_index.postings().count()
+    sum_freq = spark_index.postings().agg(F.sum("freq")).collect()[0][0]
     sum_fl = spark_index.docs.agg(F.sum("field_length")).collect()[0][0]
     assert ts["sdf"] == n_postings
     assert ts["sttf"] == sum_freq == sum_fl == spark_index.sum_total_term_freq

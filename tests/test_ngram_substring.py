@@ -44,7 +44,7 @@ def test_exclusive_with_stream_filters(spark):
             spark, df,
             CorpusSpec(order_cols=("repo", "path", "commit"),
                        ngram=(2, 4), edge_ngram=(2, 4)),
-        ).postings.collect()
+        ).postings().collect()
 
 
 @pytest.fixture(scope="module")

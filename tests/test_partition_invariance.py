@@ -55,6 +55,6 @@ def test_scores_identical(two_builds):
 
 def test_posting_sets_identical(two_builds):
     a, b = two_builds
-    pa = {(r["docid"], r["term"], r["freq"]) for r in a.postings.collect()}
-    pb = {(r["docid"], r["term"], r["freq"]) for r in b.postings.collect()}
+    pa = {(r["docid"], r["term"], r["freq"]) for r in a.postings().collect()}
+    pb = {(r["docid"], r["term"], r["freq"]) for r in b.postings().collect()}
     assert pa == pb

@@ -11,7 +11,6 @@ from lucenenet_spark.analysis.analyzer import analyze_delimited
 from lucenenet_spark.index.builder import (
     CorpusSpec,
     build_index,
-    unpack_postings_payloads,
 )
 from lucenenet_spark.search.payloads import _payload_factor, payload_term_query
 from lucenenet_spark.search.queries import TermQuery
@@ -45,18 +44,12 @@ def ps(spark):
 
 
 def test_payload_roundtrip(ps):
-    import pyspark.sql.functions as F
-
-    rows = unpack_postings_payloads(
-        ps.index.packed.where(F.col("term") == "spark")
-    ).collect()
+    rows = ps.index.postings(["spark"], payloads=True).collect()
     by_doc = {r.docid: (list(r.positions), list(r.payloads)) for r in rows}
     assert by_doc[0] == ([0, 3], [2.5, 0.5])
     assert by_doc[1] == ([0], [1.5])
     # un-annotated tokens carry the default payload 1.0
-    merge = unpack_postings_payloads(
-        ps.index.packed.where(F.col("term") == "merge")
-    ).collect()
+    merge = ps.index.postings(["merge"], payloads=True).collect()
     assert all(all(p == 1.0 for p in r.payloads) for r in merge)
 
 

@@ -1,0 +1,79 @@
+"""Plan-shape pins: the number of Exchange and Python-eval nodes in the
+physical plan of each headline query path, on a saved-then-loaded
+index. A change that adds a shuffle or a Python stage to one of these
+paths fails here instead of surfacing as a slower soak run
+(``scripts/plan_audit.py`` compares the same counts across two
+warehouse scales). The plans are compiled, never executed."""
+
+from __future__ import annotations
+
+import re
+
+import pytest
+
+from lucenenet_spark.index.builder import InvertedIndex
+from lucenenet_spark.search import spans as sp
+from lucenenet_spark.search.queries import (
+    BooleanQuery,
+    MultiPhraseQuery,
+    Occur,
+    PhraseQuery,
+    TermQuery,
+)
+from lucenenet_spark.search.searcher import IndexSearcher
+
+EXCHANGE = re.compile(r"\bExchange\b")
+PYTHON = re.compile(
+    r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas)\b"
+)
+
+# (exchanges, python nodes) per query path
+EXPECTED = {
+    "term": (0, 1),
+    "bool_and": (1, 1),
+    "phrase": (1, 1),
+    "sloppy_phrase": (1, 1),
+    "multi_phrase": (1, 1),
+    "span_near": (1, 1),
+    "span_query_scored": (1, 1),
+}
+
+
+@pytest.fixture(scope="module")
+def loaded(spark, spark_index, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("plan_shape") / "idx")
+    spark_index.save(path)
+    return IndexSearcher(InvertedIndex.load(spark, path))
+
+
+def _frames(s: IndexSearcher) -> dict:
+    near = sp.SpanNearQuery(
+        (sp.SpanTermQuery("return"), sp.SpanTermQuery("value")), slop=2, in_order=True
+    )
+    return {
+        "term": s.search_df(TermQuery(term="return"), 10),
+        "bool_and": s.search_df(
+            BooleanQuery.of(
+                (TermQuery(term="return"), Occur.MUST),
+                (TermQuery(term="value"), Occur.MUST),
+            ),
+            10,
+        ),
+        "phrase": s.search_df(PhraseQuery(phrase_terms=("return", "value")), 10),
+        "sloppy_phrase": s.search_df(
+            PhraseQuery(phrase_terms=("return", "value"), slop=2), 10
+        ),
+        "multi_phrase": s.search_df(
+            MultiPhraseQuery(slots=(("return",), ("value", "self"))), 10
+        ),
+        "span_near": sp.span_query(s, near),
+        "span_query_scored": sp.span_query_scored(s, near, 10),
+    }
+
+
+def test_plan_shapes_pinned(loaded):
+    got = {}
+    for name, df in _frames(loaded).items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        got[name] = (len(EXCHANGE.findall(plan)), len(PYTHON.findall(plan)))
+    assert got == EXPECTED

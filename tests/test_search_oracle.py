@@ -214,13 +214,11 @@ def test_pruning_forced_is_rank_safe_and_covers_topk(spark_index, oracle_index):
             ), f"top-{k} doc {h.docid} pruned away for {term}"
 
 
-def test_flat_path_matches_packed(spark_index, oracle_index):
+def test_packed_term_matches_oracle(spark_index, oracle_index):
     _, mid, _ = _pick_terms(oracle_index)
-    packed = IndexSearcher(spark_index, use_packed=True)
-    flat = IndexSearcher(spark_index, use_packed=False)
     q = TermQuery(term=mid)
     _assert_identical(
-        packed.search(q, 10),
-        [(h.docid, np.float32(h.score)) for h in flat.search(q, 10)],
-        "flat-vs-packed",
+        IndexSearcher(spark_index).search(q, 10),
+        OracleSearcher(oracle_index).search(q, 10),
+        "packed-vs-oracle",
     )

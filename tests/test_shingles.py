@@ -65,8 +65,8 @@ def test_bigram_term_equals_exact_phrase_hits(sh_pair):
     bigram = {h.docid for h in sh.search(TermQuery(term="hash table"), 10)}
     assert bigram == phrase == {0, 1}
     # and the shingle tf equals the exact-phrase occurrence count
-    post = {r.docid: r.freq for r in sh.index.postings.where(
-        "term = 'hash table'").collect()}
+    post = {r.docid: r.freq for r in sh.index.postings(
+        ["hash table"]).collect()}
     assert post == {0: 1, 1: 1}
 
 
@@ -80,7 +80,7 @@ def test_norms_unchanged_by_shingles(sh_pair):
 def test_no_shingle_past_last_token(sh_pair):
     _, sh = sh_pair
     # doc d ends at 'entirely'; no 'entirely *' shingle may exist
-    terms = [r.term for r in sh.index.postings.where("docid = 3").collect()]
+    terms = [r.term for r in sh.index.postings().where("docid = 3").collect()]
     assert "unrelated words" in terms and not any(
         t.startswith("entirely ") for t in terms
     )

@@ -121,16 +121,16 @@ def test_infinite_freq_regressions_are_finite():
     assert np.isfinite(val) and 0.0 <= val < 10.0
 
 
-def test_phrase_bucket_path_matches_flat_path(spark_index, oracle_index):
-    """The per-bucket block-grouped phrase scorer (packed path: docid
-    conjunction + skip-list position decode + vectorized/PQ freq inside
-    one applyInPandas) must be bit-identical to the flat-postings path
-    (use_packed=False: explode + groupBy(docid) + per-doc UDF) — two
-    independent implementations of the same reference semantics."""
+def test_phrase_bucket_path_matches_oracle(spark_index, oracle_index):
+    """The per-bucket block-grouped phrase scorer (docid conjunction +
+    skip-list position decode + vectorized/PQ freq inside one
+    applyInPandas) must be bit-identical to the pure-Python oracle's
+    per-doc walk — two independent implementations of the same
+    reference semantics."""
     from lucenenet_spark.search.queries import MultiPhraseQuery
 
     plain = IndexSearcher(spark_index)
-    forced = IndexSearcher(spark_index, use_packed=False)
+    oracle = OracleSearcher(oracle_index)
     queries = [
         PhraseQuery(phrase_terms=("return", "value")),
         PhraseQuery(phrase_terms=("return", "value"), slop=2),
@@ -138,7 +138,7 @@ def test_phrase_bucket_path_matches_flat_path(spark_index, oracle_index):
     ]
     for q in queries:
         a = [(h.docid, h.score) for h in plain.search(q, 10)]
-        b = [(h.docid, h.score) for h in forced.search(q, 10)]
+        b = [(d, float(s)) for d, s in oracle.search(q, 10)]
         assert a == b and a, q
 
 
@@ -151,6 +151,15 @@ def test_sloppy_rank_and_score_identical_to_oracle(spark_index, oracle_index):
         expect = [(d, float(s)) for d, s in oracle_s.search(q, 10)]
         assert got == expect, f"slop={slop}"
         assert got, f"slop={slop} found no hits"
+
+
+def test_sloppy_offset_above_256_end_to_end(spark_index, oracle_index):
+    """A slot offset above 256 (rels (0, 300), slop 400) through the
+    2-slot vectorized path must keep every match the oracle walk finds."""
+    q = PhraseQuery(phrase_terms=("return", "value"), term_positions=(0, 300), slop=400)
+    got = [(h.docid, h.score) for h in IndexSearcher(spark_index).search(q, 10)]
+    expect = [(d, float(s)) for d, s in OracleSearcher(oracle_index).search(q, 10)]
+    assert got == expect and got
 
 
 def test_sloppy_repeated_term_end_to_end(spark, oracle_index):

@@ -4,7 +4,7 @@ closed form (tag-change boundary gaps of the merged adjusted
 sequence) and the float32 fold order are both pinned here."""
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from lucenenet_spark.functions.sloppy import (
@@ -103,3 +103,33 @@ def test_multi_doc_isolation():
     assert set(got) == set(exp)
     for d in exp:
         assert np.float32(got[d]).tobytes() == exp[d].tobytes()
+
+
+@given(
+    st.dictionaries(
+        st.integers(min_value=0, max_value=40),
+        st.tuples(
+            st.lists(st.integers(min_value=0, max_value=700), max_size=8, unique=True),
+            st.lists(st.integers(min_value=0, max_value=700), max_size=8, unique=True),
+        ),
+        max_size=8,
+    ),
+    st.integers(min_value=0, max_value=600),
+    st.integers(min_value=0, max_value=600),
+    st.sampled_from([0, 1, 3, 255, 256, 257, 400, 1000]),
+)
+@example(docs={0: ([0], [1])}, r0=0, r1=300, slop=400)  # one match, freq 1/300
+@settings(max_examples=300, deadline=None)
+def test_vec_matches_walk_any_offsets(docs, r0, r1, slop):
+    """Offsets drawn independently — r0 > r1, equal, and at or above
+    256 — must still match the walk bit-for-bit (the adjusted-position
+    guard is derived from the offsets, not a fixed lane margin)."""
+    exp = _reference(docs, r0, r1, slop)
+    gd, gf = sloppy_freq_2slot_encoded(
+        _encoded(docs, 0), _encoded(docs, 1), r0, r1, slop
+    )
+    got = {int(d): f for d, f in zip(gd, gf)}
+    assert set(got) == set(exp)
+    for d in exp:
+        assert np.float32(got[d]).tobytes() == exp[d].tobytes(), (d, r0, r1, slop)
+

@@ -64,13 +64,11 @@ def test_split_straddler_blocks_repack_exactly(big_idx):
     decoded, range-filtered and repacked so per-part postings are
     exact (count equality with a flat filter proves no loss/dup)."""
     parts = split_index(big_idx, 3)
-    from lucenenet_spark.index.builder import unpack_postings
-
-    whole = unpack_postings(big_idx.packed).groupBy("term").count().collect()
+    whole = big_idx.postings().groupBy("term").count().collect()
     whole_m = {r.term: r["count"] for r in whole}
     merged: dict[str, int] = {}
     for p in parts:
-        for r in p.postings.groupBy("term").count().collect():
+        for r in p.postings().groupBy("term").count().collect():
             merged[r.term] = merged.get(r.term, 0) + r["count"]
     assert merged == whole_m
 

@@ -68,7 +68,7 @@ def test_injected_index_matches_source_docs(syn_pair):
 def test_injected_tf_and_positions(syn_pair):
     _, syn = syn_pair
     post = (
-        syn.index.postings.where("term = 'join'").orderBy("docid").collect()
+        syn.index.postings(["join"]).orderBy("docid").collect()
     )
     by_doc = {r.docid: r for r in post}
     # doc a: two injected occurrences at merge's positions 0 and 5
