@@ -2369,11 +2369,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     r01-r04 run FIRST (42 < 50, so one window retires the whole
     backlog, with ~8 slots left for round-5 additions placed right
     after them), then entries by staleness (r01-verified, r02, r03,
-    r04-freshest last)."""
+    r04-freshest last). Ahead of them: ``temperature_mix`` (its oracle's
+    ``share_ppm`` dtype was fixed after round 5) and the five round-5
+    entries that never had a driver row. New entries go in at the
+    front."""
     return {
-        # -- never driver-verified (no row in r01-r04): run FIRST ------------
-        "stratified_split": _q_stratified_split,
+        # -- fixed or never driver-verified since round 5: run FIRST --------
         "temperature_mix": _q_temperature_mix,
+        "stemmed_term_query_pl": _q_stemmed_term_pl,
+        "opennlp_noun_term_query": _q_opennlp_noun_term,
+        "icu_translit_term_query": _q_translit_term_query,
+        "collation_sort_fr": _q_collation_sort_fr,
+        "collation_range_sv": _q_collation_range_sv,
+        # -- never driver-verified (no row in r01-r04) -----------------------
+        "stratified_split": _q_stratified_split,
         "ngram_term_query": _q_ngram_term,
         "substring_search": _q_substring_search,
         "xml_boolean_query": _q_xml_boolean,
@@ -2590,11 +2599,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "common_grams_phrase": _q_common_grams_phrase,
         "lm_doc_quality": _q_lm_doc_quality,
         "pack_sequences": _q_pack_sequences,
-        "stemmed_term_query_pl": _q_stemmed_term_pl,
-        "opennlp_noun_term_query": _q_opennlp_noun_term,
-        "icu_translit_term_query": _q_translit_term_query,
-        "collation_sort_fr": _q_collation_sort_fr,
-        "collation_range_sv": _q_collation_range_sv,
     }
 
 

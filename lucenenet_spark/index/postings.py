@@ -112,7 +112,7 @@ def unpack_postings(packed: DataFrame, payloads: bool = False) -> DataFrame:
 
 # ------------------------------------------------ bucketed positional kernel
 
-def positional_groups(packed: DataFrame, terms) -> GroupedData:
+def positional_groups(packed: DataFrame, terms, max_doc: int) -> GroupedData:
     """The blocks of ``terms`` grouped by bucket, for one
     ``applyInPandas`` whose function calls :func:`bucket_positions`.
 
@@ -120,16 +120,19 @@ def positional_groups(packed: DataFrame, terms) -> GroupedData:
     the still-compressed blocks. Buckets are docid-DISJOINT by
     construction, so every positional match is certified inside one
     group, and a group holds at most |terms| × 64 blocks — no skew at
-    any corpus size; parallelism = number of buckets. The pre-hash over
-    a prime partition count keeps distinct buckets from colliding onto
-    one core (25 buckets into 32 partitions leaves 2-3-bucket
-    stragglers); AQE re-coalesces by size, and Catalyst reuses this
-    hash partitioning for the groupBy, so it is still ONE shuffle."""
+    any corpus size; parallelism = number of buckets. AQE never
+    coalesces a ``repartition(n, col)`` exchange, so ``n`` is sized from
+    the bucket count of ``max_doc`` (the index's doc count): 4
+    partitions per bucket as headroom against hash collisions, capped at
+    the prime 199 (reached at 50 buckets). A 1-bucket index runs 4
+    reduce tasks, not 199. Catalyst reuses this hash partitioning for
+    the groupBy, so it is still ONE shuffle."""
     blocks = packed.where(F.col("term").isin(sorted(set(terms)))).select(
         "term", "bucket", "block_id",
         "docs_enc", "freqs_enc", "norms_enc", "positions_enc",
     )
-    return blocks.repartition(199, "bucket").groupBy("bucket")
+    buckets = max(1, -(-int(max_doc) // BUCKET_DOCS))
+    return blocks.repartition(min(199, 4 * buckets), "bucket").groupBy("bucket")
 
 
 @dataclass

@@ -1010,7 +1010,8 @@ w AS (
   FROM per
 )
 SELECT stratum, n_docs, n_tokens, weight,
-       (weight * 1000000) // (SELECT sum(weight) FROM w) AS share_ppm
+       CAST((weight * 1000000) // (SELECT sum(weight) FROM w) AS BIGINT)
+         AS share_ppm
 FROM w"""
 
 

@@ -844,7 +844,7 @@ class IndexSearcher:
         position decode; :func:`_verify_phrase_bucket` is the matcher."""
         sim, w32 = self.sim, np.float32(wf)
         return positional_groups(
-            self.index.packed, [t for slot in slots for t in slot]
+            self.index.packed, [t for slot in slots for t in slot], self.index.max_doc
         ).applyInPandas(
             lambda pdf: _verify_phrase_bucket(pdf, slots, rels, slop, sim, w32),
             schema=SCORED,

@@ -339,7 +339,8 @@ def _bucket_span_eval(searcher, q: SpanQuery, scored: bool, wf: float):
     sim = searcher.sim
     req = _required_slots(q)
     w32 = np.float32(wf)
-    return positional_groups(searcher.index.packed, q.terms()).applyInPandas(
+    idx = searcher.index
+    return positional_groups(idx.packed, q.terms(), idx.max_doc).applyInPandas(
         lambda pdf: _eval_span_bucket(pdf, q, req, scored, sim, w32),
         "docid long, score float" if scored else "docid long, n_spans long",
     )

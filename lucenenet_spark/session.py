@@ -4,6 +4,20 @@ Tuned for the sandbox (local[N], single JVM) but every setting is the
 one you'd want on a 1000-executor cluster: AQE on (runtime coalescing +
 skew-join splitting), Arrow on (all our UDFs are pandas/Arrow batch,
 never per-row Python), modest shuffle partitions for local mode.
+
+Python workers fork from :mod:`lucenenet_spark.worker_daemon`
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``. Every
+Python task, even one holding a single row, opens with
+``importlib.invalidate_caches()``, and on Python 3.11 each of the 16
+zipimporters a worker holds (over ``$SPARK_HOME/python/lib/pyspark.zip``
+with its 1,328 entries, the py4j zip and the spark-core jar) then
+re-parses its archive's central directory: 148-191 ms per task on a
+4-core Xeon VM, against 0.1-0.2 ms under the engine daemon, which
+re-reads an archive only when its mtime or size changed. A one-row
+``mapInPandas`` job went from 0.17-0.22 s to 0.10-0.11 s (median of 15).
+The worker ``PYTHONPATH`` cannot dodge the zip: Spark always puts it
+first. The daemon module must be importable by the workers, which the
+``spark.executorEnv.PYTHONPATH`` set below ensures.
 """
 
 from __future__ import annotations
@@ -41,6 +55,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.executorEnv.PYTHONPATH", worker_pythonpath)
+        .config("spark.python.daemon.module", "lucenenet_spark.worker_daemon")
     )
     # Pin BLAS/OMP pools inside Python workers to one thread each.
     # Without this, every one of N pandas workers spawns a

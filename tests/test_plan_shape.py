@@ -7,11 +7,13 @@ warehouse scales). The plans are compiled, never executed."""
 
 from __future__ import annotations
 
+import dataclasses
 import re
 
 import pytest
 
 from lucenenet_spark.index.builder import InvertedIndex
+from lucenenet_spark.index.postings import BUCKET_DOCS
 from lucenenet_spark.search import spans as sp
 from lucenenet_spark.search.queries import (
     BooleanQuery,
@@ -26,6 +28,8 @@ EXCHANGE = re.compile(r"\bExchange\b")
 PYTHON = re.compile(
     r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas)\b"
 )
+BUCKET_EXCHANGE = re.compile(r"hashpartitioning\(bucket#\d+L?, (\d+)\)")
+POSITIONAL = ("phrase", "sloppy_phrase", "multi_phrase", "span_near", "span_query_scored")
 
 # (exchanges, python nodes) per query path
 EXPECTED = {
@@ -77,3 +81,31 @@ def test_plan_shapes_pinned(loaded):
         plan = df._jdf.queryExecution().executedPlan().toString()
         got[name] = (len(EXCHANGE.findall(plan)), len(PYTHON.findall(plan)))
     assert got == EXPECTED
+
+
+def _bucket_exchange_sizes(s: IndexSearcher) -> dict:
+    frames = _frames(s)
+    return {
+        name: [
+            int(n)
+            for n in BUCKET_EXCHANGE.findall(
+                frames[name]._jdf.queryExecution().executedPlan().toString()
+            )
+        ]
+        for name in POSITIONAL
+    }
+
+
+def test_positional_exchange_sized_from_bucket_count(loaded):
+    """``repartition(n, "bucket")`` is never coalesced by AQE, so n must
+    follow the bucket count: a 1-bucket index gets a handful of reduce
+    tasks, an index of >= 50 buckets the full 199."""
+    assert loaded.index.max_doc <= BUCKET_DOCS
+    for name, sizes in _bucket_exchange_sizes(loaded).items():
+        assert len(sizes) == 1 and sizes[0] <= 8, (name, sizes)
+    for buckets, want in ((2, 8), (49, 196), (50, 199), (10**6, 199)):
+        big = IndexSearcher(
+            dataclasses.replace(loaded.index, max_doc=buckets * BUCKET_DOCS)
+        )
+        got = _bucket_exchange_sizes(big)
+        assert got == {name: [want] for name in POSITIONAL}, (buckets, got)
