@@ -186,8 +186,13 @@ def _q_prefix_docs(spark, sf_dir):
 
 
 def _q_span_near_ordered(spark, sf_dir):
+    from lucenenet_spark.search import spans as sp
+
     _, s = _searcher(spark, sf_dir)
-    return coll.span_near(s, "table", "hash", slop=3, in_order=True)
+    q = sp.SpanNearQuery(
+        (sp.SpanTermQuery("table"), sp.SpanTermQuery("hash")), slop=3, in_order=True
+    )
+    return sp.span_query(s, q)
 
 
 def _q_span_near3(spark, sf_dir):
@@ -260,8 +265,13 @@ def _q_span_or_near(spark, sf_dir):
 
 
 def _q_span_near_unordered(spark, sf_dir):
+    from lucenenet_spark.search import spans as sp
+
     _, s = _searcher(spark, sf_dir)
-    return coll.span_near(s, "table", "hash", slop=3, in_order=False)
+    q = sp.SpanNearQuery(
+        (sp.SpanTermQuery("table"), sp.SpanTermQuery("hash")), slop=3, in_order=False
+    )
+    return sp.span_query(s, q)
 
 
 def _q_sloppy_phrase(spark, sf_dir):

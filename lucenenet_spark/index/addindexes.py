@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from lucenenet_spark.index.builder import BUCKET_DOCS, InvertedIndex
+from lucenenet_spark.index.builder import BUCKET_DOCS, InvertedIndex, write_index_tables
 from lucenenet_spark.index.checkpoint import (
     _shard_counters,
     _write_manifest_atomic,
@@ -81,17 +81,9 @@ def add_indexes(
         )
 
         sdir = os.path.join(path, "shards", str(shard))
-        docs2.write.mode("overwrite").parquet(os.path.join(sdir, "docs"))
-        packed2.sortWithinPartitions("term", "bucket", "block_id").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sdir, "packed"))
-        idx.term_stats.write.mode("overwrite").parquet(
-            os.path.join(sdir, "term_stats")
+        write_index_tables(
+            sdir, docs2, packed2, idx.term_stats, idx.max_doc, idx.sum_total_term_freq
         )
-        spark.createDataFrame(
-            [(idx.max_doc, idx.sum_total_term_freq)],
-            "max_doc long, sum_total_term_freq long",
-        ).write.mode("overwrite").parquet(os.path.join(sdir, "corpus_stats"))
         counters = _shard_counters(spark, sdir)
         rec = {
             "shard": shard,

@@ -782,21 +782,18 @@ class InvertedIndex:
         build (each extra write job costs fixed scheduler+commit time
         regardless of cluster size).
         """
-        if self.flat is not None:
-            self.flat.sortWithinPartitions("term", "bucket", "block_id").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, "segments"))
-        else:  # re-saving a loaded index: reconstruct the union
-            self.packed.sortWithinPartitions("term", "bucket", "block_id").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, "packed"))
-            self.docs.write.mode("overwrite").parquet(os.path.join(path, "docs"))
-        self.term_stats.write.mode("overwrite").parquet(os.path.join(path, "term_stats"))
-        stats = self.docs.sparkSession.createDataFrame(
-            [(self.max_doc, self.sum_total_term_freq)],
-            "max_doc long, sum_total_term_freq long",
+        if self.flat is None:  # re-saving a loaded index: docs + packed
+            write_index_tables(
+                path, self.docs, self.packed, self.term_stats,
+                self.max_doc, self.sum_total_term_freq,
+            )
+            return
+        self.flat.sortWithinPartitions("term", "bucket", "block_id").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(path, "segments"))
+        _write_stats_tables(
+            path, self.term_stats, self.max_doc, self.sum_total_term_freq
         )
-        stats.write.mode("overwrite").parquet(os.path.join(path, "corpus_stats"))
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "InvertedIndex":
@@ -819,6 +816,29 @@ class InvertedIndex:
             max_doc=stats["max_doc"],
             sum_total_term_freq=stats["sum_total_term_freq"],
         )
+
+
+def write_index_tables(
+    path: str, docs, packed, term_stats, max_doc: int, sum_total_term_freq: int
+) -> None:
+    """Write the ``docs/`` + ``packed/`` layout of one index (a re-saved
+    index, or one shard of a sharded warehouse) in four write jobs:
+    ``docs``, ``packed`` sorted by term within partitions (row-group
+    min/max stats give the term-dictionary seek), ``term_stats``, and
+    the ``corpus_stats`` scalars."""
+    docs.write.mode("overwrite").parquet(os.path.join(path, "docs"))
+    packed.sortWithinPartitions("term", "bucket", "block_id").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(path, "packed"))
+    _write_stats_tables(path, term_stats, max_doc, sum_total_term_freq)
+
+
+def _write_stats_tables(path: str, term_stats, max_doc: int, sum_total_term_freq: int):
+    term_stats.write.mode("overwrite").parquet(os.path.join(path, "term_stats"))
+    term_stats.sparkSession.createDataFrame(
+        [(max_doc, sum_total_term_freq)],
+        "max_doc long, sum_total_term_freq long",
+    ).write.mode("overwrite").parquet(os.path.join(path, "corpus_stats"))
 
 
 def assign_docids(

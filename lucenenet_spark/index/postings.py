@@ -19,6 +19,7 @@ dictionary seek analog) bound the scan to the query's posting lists:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -112,9 +113,13 @@ def unpack_postings(packed: DataFrame, payloads: bool = False) -> DataFrame:
 
 # ------------------------------------------------ bucketed positional kernel
 
-def positional_groups(packed: DataFrame, terms, max_doc: int) -> GroupedData:
+def positional_groups(
+    packed: DataFrame, terms, max_doc: int, payloads: bool = False
+) -> GroupedData:
     """The blocks of ``terms`` grouped by bucket, for one
     ``applyInPandas`` whose function calls :func:`bucket_positions`.
+    ``payloads=True`` also selects ``payloads_enc``, for the payload
+    scorers only; the phrase and span scorers never read it.
 
     ONE packed scan (parquet term-IN pushdown), ONE narrow shuffle of
     the still-compressed blocks. Buckets are docid-DISJOINT by
@@ -127,10 +132,11 @@ def positional_groups(packed: DataFrame, terms, max_doc: int) -> GroupedData:
     the prime 199 (reached at 50 buckets). A 1-bucket index runs 4
     reduce tasks, not 199. Catalyst reuses this hash partitioning for
     the groupBy, so it is still ONE shuffle."""
-    blocks = packed.where(F.col("term").isin(sorted(set(terms)))).select(
-        "term", "bucket", "block_id",
-        "docs_enc", "freqs_enc", "norms_enc", "positions_enc",
-    )
+    cols = ["term", "bucket", "block_id", "docs_enc", "freqs_enc", "norms_enc",
+            "positions_enc"]
+    if payloads:
+        cols.append("payloads_enc")
+    blocks = packed.where(F.col("term").isin(sorted(set(terms)))).select(*cols)
     buckets = max(1, -(-int(max_doc) // BUCKET_DOCS))
     return blocks.repartition(min(199, 4 * buckets), "bucket").groupBy("bucket")
 
@@ -143,12 +149,15 @@ class BucketPositions:
     on output); ``norms``: the norm byte per candidate; ``keys``: per
     term, the sorted position keys ``(local docid << KEY_SHIFT) +
     position`` of the candidates only — docs stay apart in the high
-    bits, so one numpy set op covers every candidate of the bucket."""
+    bits, so one numpy set op covers every candidate of the bucket.
+    ``payloads``: per term, the float32 payload of each key, in key
+    order — only when the group carries ``payloads_enc``, else None."""
 
     base: int
     cand: np.ndarray
     norms: np.ndarray
     keys: dict[str, np.ndarray]
+    payloads: dict[str, np.ndarray] | None = None
 
 
 def bucket_positions(pdf: pd.DataFrame, slots) -> BucketPositions | None:
@@ -156,17 +165,23 @@ def bucket_positions(pdf: pd.DataFrame, slots) -> BucketPositions | None:
     conjunction (a doc must hold >= 1 term of EVERY slot in ``slots``),
     then norms and positions ONLY for blocks holding a candidate — the
     skip-list block skipping of ``ExactPhraseScorer``/``NearSpans``.
-    Returns None when no doc survives the conjunction."""
+    A group with a ``payloads_enc`` column (``positional_groups(...,
+    payloads=True)``) also gathers each key's float32 payload; a block
+    stored without payloads yields 1.0 per position, as
+    :func:`unpack_postings` does. Returns None when no doc survives the
+    conjunction."""
     base = int(pdf["bucket"].iat[0]) * BUCKET_DOCS
     pdf = pdf.sort_values(["term", "block_id"])
+    with_pay = "payloads_enc" in pdf.columns
+    pay_col = pdf["payloads_enc"] if with_pay else repeat(None)
     # docid-only decode first (cheap); positions stay encoded
     term_blocks: dict[str, list] = {}
-    for term, de, fe, ne, pe in zip(
+    for term, de, fe, ne, pe, ye in zip(
         pdf["term"], pdf["docs_enc"], pdf["freqs_enc"],
-        pdf["norms_enc"], pdf["positions_enc"],
+        pdf["norms_enc"], pdf["positions_enc"], pay_col,
     ):
         term_blocks.setdefault(term, []).append(
-            (delta_decode_docids(bytes(de)) - base, fe, ne, pe)
+            (delta_decode_docids(bytes(de)) - base, fe, ne, pe, ye)
         )
     cand = None
     for slot in slots:
@@ -179,8 +194,9 @@ def bucket_positions(pdf: pd.DataFrame, slots) -> BucketPositions | None:
             return None
     norms = np.zeros(cand.size, dtype=np.uint8)
     gathered: dict[str, list] = {}
+    gathered_pay: dict[str, list] = {}
     for term, blks in term_blocks.items():
-        for d, fe, ne, pe in blks:
+        for d, fe, ne, pe, ye in blks:
             lo = np.searchsorted(cand, d[0])
             hi = np.searchsorted(cand, d[-1], side="right")
             if lo == hi:
@@ -202,11 +218,27 @@ def bucket_positions(pdf: pd.DataFrame, slots) -> BucketPositions | None:
                 np.repeat(cand[ci] << KEY_SHIFT, lens)
                 + gather_ranges(flat, starts[bi], lens)
             )
+            if with_pay:
+                pay = (
+                    np.ones(flat.size, dtype=np.float32)
+                    if ye is None
+                    else np.frombuffer(bytes(ye), dtype=np.float32)
+                )
+                gathered_pay.setdefault(term, []).append(
+                    gather_ranges(pay, starts[bi], lens)
+                )
     # blocks of one (term, bucket) from DIFFERENT segments interleave
     # docid ranges (a segment owns several hash-placed docid ranges),
     # so a multi-block concatenation must be sorted
-    keys = {
-        t: a[0] if len(a) == 1 else np.sort(np.concatenate(a))
-        for t, a in gathered.items()
-    }
-    return BucketPositions(base, cand, norms, keys)
+    if not with_pay:
+        keys = {
+            t: a[0] if len(a) == 1 else np.sort(np.concatenate(a))
+            for t, a in gathered.items()
+        }
+        return BucketPositions(base, cand, norms, keys)
+    keys, pays = {}, {}
+    for t, a in gathered.items():
+        k, p = np.concatenate(a), np.concatenate(gathered_pay[t])
+        order = np.argsort(k, kind="stable")
+        keys[t], pays[t] = k[order], p[order]
+    return BucketPositions(base, cand, norms, keys, pays)

@@ -1736,7 +1736,7 @@ boosted AS (
 
 
 def span_near_sql(t0: str, t1: str, slop: int, in_order: bool = True) -> str:
-    """Mirror of collectors.py::span_near's pinned span-count spec."""
+    """Mirror of spans._enumerate's two-term SpanNear span-count spec."""
     if in_order:
         cond = f"b.pos > a.pos AND b.pos - a.pos - 1 <= {slop}"
     else:

@@ -657,49 +657,6 @@ def norm_value_topk(searcher: IndexSearcher, term: str, k: int = 10) -> DataFram
     )
 
 
-def span_near(
-    searcher: IndexSearcher,
-    first: str,
-    second: str,
-    slop: int,
-    in_order: bool = True,
-) -> DataFrame:
-    """Two-term SpanNearQuery analog (``Search/Spans/SpanNearQuery.cs:40``):
-    a span starts at each position p of ``first`` that has an
-    occurrence q of ``second`` with ``q - p - 1 <= slop`` and (ordered)
-    ``q > p``, or (unordered) ``|q - p| - 1 <= slop``. Output
-    (docid, n_spans) for matching docs.
-
-    For the ORDERED two-clause case this per-start count EQUALS the
-    reference's NearSpansOrdered enumeration: each first-clause
-    position yields at most one span (paired with the earliest second
-    after it, which is minimal — if any q within slop exists, the
-    earliest does). The UNORDERED count is a pinned simplification of
-    NearSpansUnordered's queue walk (match set agrees; span
-    multiplicity may differ around shared positions — documented).
-    Physical shape = the phrase positions join (one packed scan with
-    term IN pushdown, one groupBy(docid) shuffle)."""
-    pos = searcher.index.postings([first, second]).select(
-        "docid", "term", F.explode("positions").alias("p")
-    )
-    a = pos.where(F.col("term") == first).select("docid", F.col("p").alias("pa"))
-    b = pos.where(F.col("term") == second).select("docid", F.col("p").alias("pb"))
-    if in_order:
-        cond = (F.col("pb") > F.col("pa")) & (
-            F.col("pb") - F.col("pa") - 1 <= slop
-        )
-    else:
-        cond = (F.col("pa") != F.col("pb")) & (
-            F.abs(F.col("pb") - F.col("pa")) - 1 <= slop
-        )
-    return (
-        a.join(b, "docid")
-        .where(cond)
-        .groupBy("docid")
-        .agg(F.count_distinct("pa").cast("long").alias("n_spans"))
-    )
-
-
 def expression_topk(
     searcher: IndexSearcher, query: Query, expr: str, k: int = 10
 ) -> DataFrame:

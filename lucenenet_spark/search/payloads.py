@@ -12,9 +12,11 @@ payloadFactor = avg | min | max over the doc's payloads for the term:
 avg = f32(f32-ordered-sum / count) (AveragePayloadFunction.DocScore),
 min/max exact.
 
-One packed scan filtered to the query term BEFORE the unpack barrier
-(same plan shape as the term scorer), payload decode + similarity math
-in a single Arrow stage, native TakeOrdered top-k.
+Single-term paths: one packed scan filtered to the term BEFORE the
+unpack barrier, decode + similarity math in one Arrow stage. The
+two-term near paths are span near queries with a payload hook, so they
+run on the span plan (``spans._bucket_span_eval``), whose bucket kernel
+gathers each position's payload in lockstep with its key.
 """
 
 from __future__ import annotations
@@ -25,6 +27,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from lucenenet_spark.functions.bm25 import float32_ordered_sum
+from lucenenet_spark.index.postings import KEY_SHIFT, bucket_positions
+from lucenenet_spark.search.spans import (
+    _EMPTY_COUNTS,
+    _EMPTY_SCORED,
+    _bucket_span_eval,
+    _ordered_pairs,
+)
 
 _OUT = T.StructType(
     [
@@ -55,12 +64,7 @@ def payload_term_query(
     include_span_score: bool = True,
 ) -> DataFrame:
     """PayloadTermQuery analog → (docid, score float32) top-k."""
-    m = searcher._stats_map()
-    if m is False:
-        rows = searcher.index.term_stats.where(F.col("term") == term).collect()
-        stats = {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
-    else:
-        stats = {term: m[term]} if term in m else {}
+    stats = searcher._term_stats([term])
     if term not in stats:
         return searcher.index.docs.sparkSession.createDataFrame([], _OUT)
     df_, ttf_ = stats[term]
@@ -98,6 +102,49 @@ def payload_term_query(
     return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
 
 
+def _near_spans(pdf: pd.DataFrame, first: str, second: str, slop: int):
+    """The ordered ``first``→``second`` near spans of one bucket group,
+    in (doc, start) order: ``(bp, i1, i2)`` with ``i1``/``i2`` indexing
+    each span's first- and second-clause keys (and payloads) in
+    ``bp``; None when the bucket holds no span."""
+    bp = bucket_positions(pdf, [[first], [second]])
+    if bp is None:
+        return None
+    valid, nxt = _ordered_pairs(bp.keys[first], bp.keys[second], slop)
+    if not valid.any():
+        return None
+    return bp, np.flatnonzero(valid), nxt[valid]
+
+
+def _payload_near_bucket(
+    pdf: pd.DataFrame, first: str, second: str, slop: int, fn: str, sim, w32
+) -> pd.DataFrame:
+    """PayloadNearQuery matcher for one bucket group -> (docid, score)."""
+    near = _near_spans(pdf, first, second, slop)
+    if near is None:
+        return _EMPTY_SCORED
+    bp, i1, i2 = near
+    a, b = bp.keys[first][i1], bp.keys[second][i2]
+    # per span 1/(1 + matchLength), matchLength = b + 1 - a
+    inc = np.float32(1.0) / (1 + (b + 1 - a)).astype(np.float32)
+    pay = np.empty(2 * a.size, dtype=np.float32)
+    pay[0::2] = bp.payloads[first][i1]
+    pay[1::2] = bp.payloads[second][i2]
+    docs, lo = np.unique(a >> KEY_SHIFT, return_index=True)
+    hi = np.append(lo[1:], a.size)
+    freq = np.array(
+        [float32_ordered_sum(inc[x:y]) for x, y in zip(lo, hi)], dtype=np.float32
+    )
+    factor = np.array(
+        [_payload_factor(pay[2 * x:2 * y], fn) for x, y in zip(lo, hi)],
+        dtype=np.float32,
+    )
+    norms = bp.norms[np.searchsorted(bp.cand, docs)]
+    score = (sim.score(freq, norms, w32) * factor).astype(np.float32)
+    keep = ~np.isnan(score)
+    return pd.DataFrame({"docid": docs[keep] + bp.base, "score": score[keep]})
+
+
 def payload_near_query(
     searcher,
     first: str,
@@ -115,74 +162,19 @@ def payload_near_query(
     second-clause within a span (PayloadNearQuery.ProcessPayloads
     accumulation order). score = spanScore * factor.
 
-    One packed scan filtered to both terms before the unpack barrier;
-    per-doc numpy enumeration in a single Arrow stage.
-    """
+    Runs on the span plan with payloads: a vectorized near walk per
+    bucket, then an ordered float32 fold per matching doc."""
     terms = sorted({first, second})
-    m = searcher._stats_map()
-    if m is False:
-        rows = searcher.index.term_stats.where(F.col("term").isin(terms)).collect()
-        stats = {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
-    else:
-        stats = {t: m[t] for t in terms if t in m}
+    stats = searcher._term_stats(terms)
+    dfs = [stats.get(t, (0, 0))[0] for t in terms]
     sim = searcher.sim
-    w = sim.weight_multi(
-        [stats.get(t, (0, 0))[0] for t in terms], searcher.index.max_doc, 1.0
+    w32 = np.float32(sim.weight_multi(dfs, searcher.index.max_doc, 1.0))
+    scored = _bucket_span_eval(
+        searcher, terms,
+        lambda pdf: _payload_near_bucket(pdf, first, second, slop, fn, sim, w32),
+        "docid long, score float",
+        payloads=True,
     )
-    wf = float(w)
-    src = searcher.index.postings([first, second], payloads=True).select(
-        "docid", "term", "positions", "norm", "payloads"
-    )
-    grouped = src.groupBy("docid").agg(
-        F.collect_list(F.struct("term", "positions", "payloads")).alias("tp"),
-        F.first("norm").alias("norm"),
-    )
-
-    @F.pandas_udf("float")
-    def score_spans(tp: pd.Series, norm: pd.Series) -> pd.Series:
-        w32 = np.float32(wf)
-        freqs = np.zeros(len(tp), dtype=np.float32)
-        factors = np.ones(len(tp), dtype=np.float32)
-        for i, lst in enumerate(tp):
-            pos = {}
-            pay = {}
-            for item in lst:
-                pos[item["term"]] = np.asarray(item["positions"], dtype=np.int64)
-                pay[item["term"]] = np.asarray(item["payloads"], dtype=np.float32)
-            p0s, p1s = pos.get(first), pos.get(second)
-            if p0s is None or p1s is None:
-                freqs[i] = 0.0
-                continue
-            acc = np.float32(0.0)
-            collected: list[np.float32] = []
-            # greedy minimal-end chain per start (NearSpansOrdered for
-            # unit spans), same spec as spans._enumerate
-            j1 = np.searchsorted(p1s, p0s, side="right")
-            for a, j in zip(p0s, j1):
-                if j >= len(p1s):
-                    continue
-                b = p1s[j]
-                if b - a - 1 <= slop:
-                    acc = np.float32(
-                        acc + np.float32(1.0) / np.float32(1 + (b + 1 - a))
-                    )
-                    ia = int(np.searchsorted(p0s, a))
-                    collected.append(pay[first][ia])
-                    collected.append(pay[second][int(j)])
-            freqs[i] = acc
-            if collected:
-                factors[i] = _payload_factor(
-                    np.asarray(collected, dtype=np.float32), fn
-                )
-        s = sim.score(freqs, norm.to_numpy(dtype=np.uint8), w32)
-        s = (s * factors).astype(np.float32)
-        return pd.Series(np.where(freqs > 0, s, np.nan).astype(np.float32))
-
-    scored = grouped.select(
-        "docid", score_spans(F.col("tp"), F.col("norm")).alias("score")
-    ).where(F.col("score").isNotNull() & ~F.isnan(F.col("score")))
-    if searcher.tombstones is not None:
-        scored = scored.join(searcher.tombstones, "docid", "left_anti")
     out = scored.orderBy(F.col("score").desc(), F.col("docid").asc())
     return out.limit(k) if k is not None else out
 
@@ -224,52 +216,33 @@ def span_payload_check(
     return scored
 
 
+def _near_payload_check_bucket(
+    pdf: pd.DataFrame, first: str, second: str, slop: int, want
+) -> pd.DataFrame:
+    """SpanNearPayloadCheckQuery matcher for one bucket group ->
+    (docid, n_spans): near spans whose payload pair equals ``want``."""
+    near = _near_spans(pdf, first, second, slop)
+    if near is None:
+        return _EMPTY_COUNTS
+    bp, i1, i2 = near
+    ok = (bp.payloads[first][i1] == want[0]) & (bp.payloads[second][i2] == want[1])
+    docs, n = np.unique(bp.keys[first][i1[ok]] >> KEY_SHIFT, return_counts=True)
+    return pd.DataFrame({"docid": docs + bp.base, "n_spans": n.astype(np.int64)})
+
+
 def span_near_payload_check(
     searcher, first: str, second: str, slop: int, payloads: tuple[float, float]
 ) -> DataFrame:
     """SpanNearPayloadCheckQuery (``Search/Spans/
     SpanNearPayloadCheckQuery.cs:36``, 2-clause ordered pinned form):
     greedy-chain near spans whose (first, second) payload pair equals
-    the required sequence → (docid, n_spans)."""
-    v0 = np.float32(payloads[0])
-    v1 = np.float32(payloads[1])
-    src = searcher.index.postings([first, second], payloads=True).select(
-        "docid", "term", "positions", "payloads"
+    the required sequence → (docid, n_spans). Runs on the span plan
+    (``spans._bucket_span_eval``) with payloads, vectorized per
+    bucket."""
+    want = (np.float32(payloads[0]), np.float32(payloads[1]))
+    return _bucket_span_eval(
+        searcher, [first, second],
+        lambda pdf: _near_payload_check_bucket(pdf, first, second, slop, want),
+        "docid long, n_spans long",
+        payloads=True,
     )
-    grouped = src.groupBy("docid").agg(
-        F.collect_list(F.struct("term", "positions", "payloads")).alias("tp")
-    )
-
-    def gen(iterator):
-        for pdf in iterator:
-            docids, counts = [], []
-            for docid, lst in zip(pdf["docid"], pdf["tp"]):
-                pos, pay = {}, {}
-                for item in lst:
-                    pos[item["term"]] = np.asarray(item["positions"], dtype=np.int64)
-                    pay[item["term"]] = np.asarray(item["payloads"], dtype=np.float32)
-                p0s, p1s = pos.get(first), pos.get(second)
-                if p0s is None or p1s is None:
-                    continue
-                n = 0
-                j1 = np.searchsorted(p1s, p0s, side="right")
-                for a, j in zip(p0s, j1):
-                    if j >= len(p1s):
-                        continue
-                    b = p1s[j]
-                    if b - a - 1 <= slop:
-                        ia = int(np.searchsorted(p0s, a))
-                        if pay[first][ia] == v0 and pay[second][int(j)] == v1:
-                            n += 1
-                if n:
-                    docids.append(docid)
-                    counts.append(n)
-            yield pd.DataFrame(
-                {"docid": pd.array(docids, dtype="int64"),
-                 "n_spans": pd.array(counts, dtype="int64")}
-            )
-
-    scored = grouped.mapInPandas(gen, schema=_SPANS_OUT)
-    if searcher.tombstones is not None:
-        scored = scored.join(searcher.tombstones, "docid", "left_anti")
-    return scored

@@ -496,7 +496,13 @@ class IndexSearcher:
         return q
 
     def _collect_stats(self, q: Query) -> dict[str, tuple[int, int]]:
-        terms = sorted(set(q.terms()))
+        return self._term_stats(q.terms())
+
+    def _term_stats(self, terms) -> dict[str, tuple[int, int]]:
+        """``{term: (df, ttf)}`` for the indexed ones of ``terms``: from
+        the driver-side dictionary when it fits, else one Spark
+        ``term IN`` lookup."""
+        terms = sorted(set(terms))
         if not terms:
             return {}
         m = self._stats_map()

@@ -328,22 +328,39 @@ _EMPTY_SCORED = pd.DataFrame(
 )
 
 
-def _bucket_span_eval(searcher, q: SpanQuery, scored: bool, wf: float):
-    """Per-bucket block-grouped span evaluation on the shared bucketed
-    positional kernel (``index/postings.py``, the phrase scorer's
-    physical shape): ONE packed scan filtered to the query's terms,
-    ONE narrow shuffle of the still-compressed blocks keyed by the
-    docid-disjoint bucket, then a single ``applyInPandas`` stage whose
-    matcher (:func:`_eval_span_bucket`) enumerates spans per doc. No
-    decoded-positions shuffle, no collect_list."""
-    sim = searcher.sim
-    req = _required_slots(q)
-    w32 = np.float32(wf)
+def _bucket_span_eval(
+    searcher, terms, match, schema: str, payloads: bool = False
+) -> DataFrame:
+    """The span and payload plan on the shared bucketed positional
+    kernel (``index/postings.py``, the phrase scorer's shape): ONE
+    packed scan filtered to ``terms``, ONE shuffle of the compressed
+    blocks by bucket, ONE ``applyInPandas`` running ``match`` (a bucket
+    group -> rows of ``schema``). Deleted docs are anti-joined here."""
     idx = searcher.index
-    return positional_groups(idx.packed, q.terms(), idx.max_doc).applyInPandas(
-        lambda pdf: _eval_span_bucket(pdf, q, req, scored, sim, w32),
-        "docid long, score float" if scored else "docid long, n_spans long",
+    out = positional_groups(idx.packed, terms, idx.max_doc, payloads).applyInPandas(
+        match, schema
     )
+    if searcher.tombstones is not None:
+        out = out.join(
+            searcher.tombstones.select("docid").distinct(), "docid", "left_anti"
+        )
+    return out
+
+
+def _ordered_pairs(g1: np.ndarray, g2: np.ndarray, slop: int):
+    """Two-term ordered near walk over a bucket's sorted position keys:
+    start ``g1[i]`` pairs with its MINIMAL same-doc successor
+    ``g2[nxt[i]] > g1[i]`` and is ``valid`` when ``p2 - p1 - 1 <= slop``
+    — :func:`_enumerate`'s per-start spec (greedy fits <=> some chain
+    fits), repeated term included. One searchsorted, no per-doc loop."""
+    nxt = np.minimum(np.searchsorted(g2, g1 + 1), g2.size - 1)
+    p2 = g2[nxt]
+    valid = (
+        (p2 > g1)
+        & ((p2 >> KEY_SHIFT) == (g1 >> KEY_SHIFT))
+        & (p2 - g1 - 1 <= slop)
+    )
+    return valid, nxt
 
 
 def _eval_span_bucket(
@@ -357,13 +374,7 @@ def _eval_span_bucket(
     if bp is None:
         return empty
     cand = bp.cand
-    # 2-term ordered fast walk (the phrase scorer's idiom): a valid
-    # start p1 is one whose MINIMAL same-doc successor p2 >= p1+1
-    # satisfies p2 - p1 - 1 <= slop (greedy minimizes the chain end,
-    # so "greedy fits" <=> "some chain fits" — identical to
-    # _enumerate's per-start spec). One searchsorted over the
-    # doc-encoded position keys replaces the per-doc Python loop;
-    # n_spans = valid starts per doc.
+    # 2-term ordered: n_spans = valid starts per doc
     if (
         not scored
         and isinstance(qq, SpanNearQuery)
@@ -371,18 +382,8 @@ def _eval_span_bucket(
         and len(qq.clauses) == 2
         and all(isinstance(c, SpanTermQuery) for c in qq.clauses)
     ):
-        g1 = bp.keys.get(qq.clauses[0].term)
-        g2 = bp.keys.get(qq.clauses[1].term)
-        if g1 is None or g2 is None or g1.size == 0 or g2.size == 0:
-            return empty
-        nxt = np.searchsorted(g2, g1 + 1)
-        ok = nxt < g2.size
-        p2 = g2[np.minimum(nxt, g2.size - 1)]
-        valid = (
-            ok
-            & ((p2 >> KEY_SHIFT) == (g1 >> KEY_SHIFT))
-            & (p2 - g1 - 1 <= qq.slop)
-        )
+        g1 = bp.keys[qq.clauses[0].term]
+        valid, _ = _ordered_pairs(g1, bp.keys[qq.clauses[1].term], qq.slop)
         if not valid.any():
             return empty
         vd, vc = np.unique(g1[valid] >> KEY_SHIFT, return_counts=True)
@@ -436,7 +437,12 @@ def span_query(searcher, q: SpanQuery) -> DataFrame:
     terms = sorted(set(q.terms()))
     if not terms:
         return _empty(searcher)
-    return _bucket_span_eval(searcher, q, scored=False, wf=1.0)
+    sim, req = searcher.sim, _required_slots(q)
+    return _bucket_span_eval(
+        searcher, terms,
+        lambda pdf: _eval_span_bucket(pdf, q, req, False, sim, np.float32(1.0)),
+        "docid long, n_spans long",
+    )
 
 
 def span_query_scored(searcher, q: SpanQuery, k: int | None = 10) -> DataFrame:
@@ -457,16 +463,15 @@ def span_query_scored(searcher, q: SpanQuery, k: int | None = 10) -> DataFrame:
     terms = sorted(set(q.terms()))
     if not terms:
         return searcher._empty()
-    m = searcher._stats_map()
-    if m is False:
-        rows = searcher.index.term_stats.where(F.col("term").isin(terms)).collect()
-        stats = {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
-    else:
-        stats = {t: m[t] for t in terms if t in m}
-    w = searcher.sim.weight_multi(
-        [stats.get(t, (0, 0))[0] for t in terms], searcher.index.max_doc, 1.0
+    stats = searcher._term_stats(terms)
+    dfs = [stats.get(t, (0, 0))[0] for t in terms]
+    sim, req = searcher.sim, _required_slots(q)
+    w32 = np.float32(sim.weight_multi(dfs, searcher.index.max_doc, 1.0))
+    scored = _bucket_span_eval(
+        searcher, terms,
+        lambda pdf: _eval_span_bucket(pdf, q, req, True, sim, w32),
+        "docid long, score float",
     )
-    scored = _bucket_span_eval(searcher, q, scored=True, wf=float(w))
     out = scored.orderBy(F.col("score").desc(), F.col("docid").asc())
     return out.limit(k) if k is not None else out
 

@@ -40,7 +40,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucenenet_spark.index.builder import CorpusSpec, InvertedIndex, build_index
+from lucenenet_spark.index.builder import (
+    CorpusSpec,
+    InvertedIndex,
+    build_index,
+    write_index_tables,
+)
 from lucenenet_spark.index.checkpoint import (
     _shard_counters,
     _write_manifest_atomic,
@@ -104,15 +109,9 @@ def append_batch(
     shard_spec = dataclasses.replace(spec, id_col="docid")
     idx = build_index(spark, with_ids, shard_spec)
     sdir = os.path.join(path, "shards", str(shard))
-    idx.docs.write.mode("overwrite").parquet(os.path.join(sdir, "docs"))
-    idx.packed.sortWithinPartitions("term", "bucket", "block_id").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(sdir, "packed"))
-    idx.term_stats.write.mode("overwrite").parquet(os.path.join(sdir, "term_stats"))
-    spark.createDataFrame(
-        [(idx.max_doc, idx.sum_total_term_freq)],
-        "max_doc long, sum_total_term_freq long",
-    ).write.mode("overwrite").parquet(os.path.join(sdir, "corpus_stats"))
+    write_index_tables(
+        sdir, idx.docs, idx.packed, idx.term_stats, idx.max_doc, idx.sum_total_term_freq
+    )
     counters = _shard_counters(spark, sdir)
     idx.unpersist()
     rec = {

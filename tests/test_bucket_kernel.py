@@ -17,6 +17,10 @@ from lucenenet_spark.functions.varbyte import (
     encode_positions,
 )
 from lucenenet_spark.index.postings import BUCKET_DOCS, bucket_positions
+from lucenenet_spark.search.payloads import (
+    _near_payload_check_bucket,
+    _payload_near_bucket,
+)
 from lucenenet_spark.search.searcher import _verify_phrase_bucket
 from lucenenet_spark.search.spans import (
     SpanNearQuery,
@@ -33,28 +37,38 @@ BLOCKS = {
     "c": [{3: [2], 4000: [4, 6], 8191: [2]}],
 }
 NORMS = {3: 120, 70: 100, 200: 90, 4000: 130, 8191: 110}
+# float32 payload per position, by (term, docid); "b" is stored
+# without payloads (payloads_enc NULL), so it reads 1.0 everywhere
+PAYLOADS = {
+    "a": {3: [2.5, 0.5, 4.0], 4000: [1.5, 3.0], 70: [0.25], 8191: [2.0, 6.0]},
+    "c": {3: [7.0], 4000: [0.5, 1.25], 8191: [3.5]},
+}
 SIM = BM25Similarity(np.float32(6.5))
 W32 = np.float32(1.75)
 HIGH_BUCKETS = [2**31 // BUCKET_DOCS + 5, 10**12 // BUCKET_DOCS]
 
 
-def _bucket(bucket: int) -> pd.DataFrame:
+def _bucket(bucket: int, payloads: bool = False) -> pd.DataFrame:
     base = bucket * BUCKET_DOCS
     rows = []
     for term, blocks in BLOCKS.items():
         for plist in blocks:
             ds = sorted(plist)
-            rows.append(
-                {
-                    "term": term,
-                    "bucket": bucket,
-                    "block_id": ds[0],
-                    "docs_enc": delta_encode_docids(np.array(ds, dtype=np.int64) + base),
-                    "freqs_enc": encode_freqs(np.array([len(plist[d]) for d in ds])),
-                    "norms_enc": bytes(NORMS[d] for d in ds),
-                    "positions_enc": encode_positions([plist[d] for d in ds]),
-                }
-            )
+            row = {
+                "term": term,
+                "bucket": bucket,
+                "block_id": ds[0],
+                "docs_enc": delta_encode_docids(np.array(ds, dtype=np.int64) + base),
+                "freqs_enc": encode_freqs(np.array([len(plist[d]) for d in ds])),
+                "norms_enc": bytes(NORMS[d] for d in ds),
+                "positions_enc": encode_positions([plist[d] for d in ds]),
+            }
+            if payloads:
+                pay = PAYLOADS.get(term)
+                row["payloads_enc"] = None if pay is None else np.array(
+                    [v for d in ds for v in pay[d]], dtype=np.float32
+                ).tobytes()
+            rows.append(row)
     return pd.DataFrame(rows)
 
 
@@ -87,16 +101,27 @@ CASES = {
         ),
         True,
     ),
+    # "payload_*" cases run on the payload-carrying encoding
+    "payload_near_avg": lambda pdf: _payload_near_bucket(
+        pdf, "a", "c", 3, "avg", SIM, W32
+    ),
+    "payload_near_max": lambda pdf: _payload_near_bucket(
+        pdf, "a", "b", 1, "max", SIM, W32
+    ),
+    "payload_near_check": lambda pdf: _near_payload_check_bucket(
+        pdf, "a", "c", 3, (np.float32(1.5), np.float32(0.5))
+    ),
 }
 
 
 @pytest.mark.parametrize("bucket", HIGH_BUCKETS)
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_bucket_scores_are_docid_base_invariant(case, bucket):
-    low = _local(CASES[case](_bucket(0)), 0)
+    payloads = case.startswith("payload_")
+    low = _local(CASES[case](_bucket(0, payloads)), 0)
     assert low, case  # the fixture must exercise a match
     base = bucket * BUCKET_DOCS
-    high = CASES[case](_bucket(bucket))
+    high = CASES[case](_bucket(bucket, payloads))
     assert (high["docid"] >= base).all() and (high["docid"] < base + BUCKET_DOCS).all()
     assert _local(high, base) == low
 
@@ -116,3 +141,19 @@ def test_kernel_candidates_and_keys_are_bucket_local():
     # doc 200 holds "b" only: it fails the conjunction and is never gathered
     assert 200 not in set((bp.keys["b"] >> np.int64(32)).tolist())
     assert bucket_positions(_bucket(bucket), [["a"], ["zzz"]]) is None
+
+
+def test_kernel_gathers_payloads_in_key_order():
+    bucket = HIGH_BUCKETS[0]
+    bp = bucket_positions(_bucket(bucket, payloads=True), [["a"], ["b"]])
+    assert bp.base == 2**31 + 40960
+    docs = (bp.keys["a"] >> np.int64(32)).tolist()
+    # lockstep with the merged keys of "a"'s two interleaved blocks
+    want = [v for d in sorted(PAYLOADS["a"]) for v in PAYLOADS["a"][d]]
+    assert docs == [d for d in sorted(PAYLOADS["a"]) for _ in PAYLOADS["a"][d]]
+    assert bp.payloads["a"].dtype == np.float32
+    assert bp.payloads["a"].tolist() == want
+    # a block stored without payloads reads 1.0 per position
+    assert bp.payloads["b"].tolist() == [1.0] * bp.keys["b"].size
+    # the phrase and span callers' groups carry no payload column
+    assert bucket_positions(_bucket(bucket), [["a"], ["b"]]).payloads is None

@@ -146,18 +146,28 @@ def test_span_payload_check(spark):
 def test_payload_plans_filter_packed_before_unpack(ps):
     """The payload scorers must prune the PACKED scan by term (the
     repo's documented anti-pattern: a filter above the unpack barrier
-    decodes the whole index)."""
-    from lucenenet_spark.search.payloads import payload_near_query, payload_term_query
+    decodes the whole index). The single-term scorer decodes in an
+    unpack MapInPandas; the two-term near paths run on the span plan,
+    whose grouped FlatMapGroupsInPandas stage decodes the blocks."""
+    from lucenenet_spark.search.payloads import (
+        payload_near_query,
+        payload_term_query,
+        span_near_payload_check,
+    )
 
-    for df in (
-        payload_term_query(ps, "spark", 5),
-        payload_near_query(ps, "spark", "merge", 1, 5),
+    for node, df in (
+        ("MapInPandas unpack", payload_term_query(ps, "spark", 5)),
+        ("FlatMapGroupsInPandas", payload_near_query(ps, "spark", "merge", 1, 5)),
+        (
+            "FlatMapGroupsInPandas",
+            span_near_payload_check(ps, "spark", "merge", 1, (2.5, 1.0)),
+        ),
     ):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         # optimizedPlan prints root first, children after: the Filter
-        # carrying the term predicate must sit BELOW (after) the unpack
-        # MapInPandas node, i.e. on the packed scan side
-        unpack_at = plan.find("MapInPandas unpack")
-        assert unpack_at != -1
-        below = plan[unpack_at:]
-        assert "Filter" in below and "term#" in below.split("Filter", 1)[1]
+        # carrying the term predicate must sit BELOW (after) the
+        # decoding Python node, i.e. on the packed scan side
+        decode_at = plan.find(node)
+        assert decode_at != -1, plan
+        below = plan[decode_at:]
+        assert "Filter" in below and "term#" in below.split("Filter", 1)[1], plan

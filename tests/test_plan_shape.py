@@ -12,9 +12,10 @@ import re
 
 import pytest
 
-from lucenenet_spark.index.builder import InvertedIndex
+from lucenenet_spark.index.builder import CorpusSpec, InvertedIndex, build_index
 from lucenenet_spark.index.postings import BUCKET_DOCS
 from lucenenet_spark.search import spans as sp
+from lucenenet_spark.search.payloads import payload_near_query, span_near_payload_check
 from lucenenet_spark.search.queries import (
     BooleanQuery,
     MultiPhraseQuery,
@@ -40,6 +41,8 @@ EXPECTED = {
     "multi_phrase": (1, 1),
     "span_near": (1, 1),
     "span_query_scored": (1, 1),
+    "payload_near": (1, 1),
+    "span_near_payload_check": (1, 1),
 }
 
 
@@ -48,6 +51,28 @@ def loaded(spark, spark_index, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("plan_shape") / "idx")
     spark_index.save(path)
     return IndexSearcher(InvertedIndex.load(spark, path))
+
+
+@pytest.fixture(scope="module")
+def loaded_payloads(spark, tmp_path_factory):
+    df = spark.createDataFrame(
+        [("r", "a", "c", "return|2.5 value|0.5 self"), ("r", "b", "c", "value return")],
+        "repo string, path string, commit string, content string",
+    )
+    path = str(tmp_path_factory.mktemp("plan_shape_payloads") / "idx")
+    build_index(
+        spark, df, CorpusSpec(order_cols=("repo", "path", "commit"), payload_delim="|")
+    ).save(path)
+    return IndexSearcher(InvertedIndex.load(spark, path))
+
+
+def _payload_frames(s: IndexSearcher) -> dict:
+    return {
+        "payload_near": payload_near_query(s, "return", "value", 2, 10),
+        "span_near_payload_check": span_near_payload_check(
+            s, "return", "value", 2, (2.5, 0.5)
+        ),
+    }
 
 
 def _frames(s: IndexSearcher) -> dict:
@@ -75,9 +100,10 @@ def _frames(s: IndexSearcher) -> dict:
     }
 
 
-def test_plan_shapes_pinned(loaded):
+def test_plan_shapes_pinned(loaded, loaded_payloads):
     got = {}
-    for name, df in _frames(loaded).items():
+    frames = {**_frames(loaded), **_payload_frames(loaded_payloads)}
+    for name, df in frames.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         got[name] = (len(EXCHANGE.findall(plan)), len(PYTHON.findall(plan)))
     assert got == EXPECTED

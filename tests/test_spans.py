@@ -242,22 +242,12 @@ def test_span_plans_filter_packed_before_unpack(searcher):
     filter the PACKED table (term pushdown) before the unpack
     barrier — the physical plan's scan-side filter carries the
     term IN predicate below the mapInPandas."""
-    from lucenenet_spark.search import collectors as coll
-
     def has_term_filter(plan: str) -> int:
         return max(
             plan.find("IN (return,value)"), plan.find("IN (value,return)"),
             plan.find("In(term, [return,value])"),
             plan.find("In(term, [value,return])"),
         )
-
-    # two-term collectors.span_near: packed filtered before unpack —
-    # a term IN predicate must exist somewhere on the scan side
-    plan = (
-        coll.span_near(searcher, "return", "value", slop=3, in_order=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert has_term_filter(plan) >= 0, plan
 
     # grouped-map span plan: ONE python stage, term filter BELOW it
     # (deeper nodes print later), and at most one shuffle
@@ -317,3 +307,38 @@ def test_near_spans_ordered_reference_fixture(spark):
         (sp.SpanTermQuery("w1"), sp.SpanTermQuery("w2")), slop=1, in_order=True
     )
     assert {r["docid"] for r in sp.span_query(s, q2s).collect()} == {0, 1, 2}
+
+
+def test_span_paths_skip_tombstoned_docs(spark):
+    """Deleted docs never surface from the span plan: span_query,
+    span_query_scored and the payload near paths anti-join the
+    searcher's tombstones, as search_df does for the phrase query."""
+    from lucenenet_spark.index.builder import CorpusSpec, build_index
+    from lucenenet_spark.search.payloads import (
+        payload_near_query,
+        span_near_payload_check,
+    )
+    from lucenenet_spark.search.queries import PhraseQuery
+
+    df = spark.createDataFrame(
+        [("r", p, "c", "return|2 value|3 self") for p in "abc"],
+        "repo string, path string, commit string, content string",
+    )
+    idx = build_index(
+        spark, df, CorpusSpec(order_cols=("repo", "path", "commit"), payload_delim="|")
+    ).cache()
+    s = IndexSearcher(idx, tombstones=spark.createDataFrame([(1,)], "docid long"))
+    terms = (sp.SpanTermQuery("return"), sp.SpanTermQuery("value"))
+    ordered = sp.SpanNearQuery(terms, slop=0, in_order=True)
+    unordered = sp.SpanNearQuery(terms, slop=0, in_order=False)
+    live = [0, 2]
+    phrase = s.search(PhraseQuery(phrase_terms=("return", "value")), 10)
+    assert sorted(h.docid for h in phrase) == live
+    for df_ in (
+        sp.span_query(s, ordered),
+        sp.span_query(s, unordered),
+        sp.span_query_scored(s, ordered, 10),
+        payload_near_query(s, "return", "value", 0, 10),
+        span_near_payload_check(s, "return", "value", 0, (2.0, 3.0)),
+    ):
+        assert sorted(r.docid for r in df_.collect()) == live
