@@ -55,7 +55,7 @@ from lucenenet_spark.analysis.shingles import add_shingles
 from lucenenet_spark.analysis.synonyms import inject_synonyms
 from lucenenet_spark.functions.smallfloat import norm_byte_from_length
 from lucenenet_spark.functions.varbyte import BLOCK_SIZE
-from lucenenet_spark.index.postings import BUCKET_DOCS, unpack_postings
+from lucenenet_spark.index.postings import BUCKET_DOCS, read_blocks, unpack_postings
 
 
 @dataclass(frozen=True)
@@ -746,9 +746,7 @@ class InvertedIndex:
         on the packed frame, BELOW the decode barrier, so only the
         named posting lists are read and decoded
         (:func:`~lucenenet_spark.index.postings.unpack_postings`)."""
-        packed = self.packed
-        if terms is not None:
-            packed = packed.where(F.col("term").isin(sorted(set(terms))))
+        packed = self.packed if terms is None else read_blocks(self.packed, terms)
         return unpack_postings(packed, payloads=payloads)
 
     def cache(self) -> "InvertedIndex":

@@ -51,6 +51,7 @@ from lucenenet_spark.index.checkpoint import (
     load_sharded,
     read_manifest,
 )
+from lucenenet_spark.index.postings import drop_deleted
 
 
 def repack_postings(flat: DataFrame) -> DataFrame:
@@ -147,16 +148,9 @@ def compact_shards(
         )
 
     tpath = os.path.join(path, "tombstones")
-    tombs = (
-        spark.read.parquet(tpath).select("docid").distinct()
-        if os.path.exists(tpath)
-        else None
-    )
-
-    flat = unpack_postings(packed)
-    if tombs is not None:
-        docs = docs.join(tombs, "docid", "left_anti")
-        flat = flat.join(tombs, "docid", "left_anti")
+    tombs = spark.read.parquet(tpath) if os.path.exists(tpath) else None
+    docs = drop_deleted(docs, tombs)
+    flat = drop_deleted(unpack_postings(packed), tombs)
 
     # next id over ALL live shards — a partial merge's inputs may not
     # include the highest shard id

@@ -2,8 +2,9 @@
 through this module (the ``DocsAndPositionsEnum`` role).
 
 Two shapes, both reading the packed table AFTER a ``term IN (...)``
-filter so parquet pushdown + row-group min/max pruning (the BlockTree
-dictionary seek analog) bound the scan to the query's posting lists:
+filter (:func:`read_blocks`) so parquet pushdown + row-group min/max
+pruning (the BlockTree dictionary seek analog) bound the scan to the
+query's posting lists:
 
 - :func:`unpack_postings` — a flat per-(docid, term) view with
   positions, the norm byte and optionally payloads, for collectors and
@@ -14,6 +15,15 @@ dictionary seek analog) bound the scan to the query's posting lists:
   blocks keyed by the docid-disjoint bucket, then per bucket a docid
   decode, a per-slot candidate conjunction and a candidate-gated
   position gather. Callers keep only their own matcher.
+
+Plan regime: a query whose posting lists are small
+(:func:`single_partition`, decided on the driver from the term stats)
+reads its blocks as ONE partition, so Catalyst plans every downstream
+docid aggregate and bucket group without an exchange — one job of one
+task, the reference ``IndexSearcher`` searching on the calling thread.
+A larger query keeps the parallel plan. Deleted docs leave every result
+through one anti-join, :func:`drop_deleted` (the ``liveDocs`` bits the
+reference hands each ``DocsEnum``).
 """
 
 from __future__ import annotations
@@ -45,6 +55,18 @@ BUCKET_DOCS = BLOCK_SIZE * 64
 # never overflows int64 at any corpus size
 KEY_SHIFT = np.int64(32)
 
+# the largest query, in estimated posting blocks (estimated_blocks),
+# that runs as ONE partition. Measured at local[4] on the bench.py sf0.1
+# warehouse (200k docs, 25 buckets; BENCH.md "One job for a small
+# query"), min of 7 per regime: one task beat the parallel plan up to
+# ~2k blocks for term and disjunction reads, but positional reads
+# decode ~3x more per block and crossed over between 511 blocks (one
+# task 17% faster) and 1002 blocks (7% slower). 512 keeps every query
+# of either family on the faster side; the head-term and
+# head-disjunction legs (1525 and 2671 blocks) keep the parallel plan.
+# Every query of the 2k-doc perfbench corpus (<= 48 blocks) is small.
+SINGLE_PARTITION_MAX_BLOCKS = 512
+
 POSTINGS_SCHEMA = T.StructType(
     [
         T.StructField("docid", T.LongType()),
@@ -60,6 +82,39 @@ POSTINGS_PAYLOAD_SCHEMA = T.StructType(
 )
 
 
+def estimated_blocks(stats) -> int:
+    """The posting blocks a query reads, estimated on the driver as
+    Σ⌈df/BLOCK_SIZE⌉ over ``stats`` (``{term: (df, ttf)}``, the
+    searcher's term stats). A term whose postings span several segments
+    or buckets has a few partial blocks more."""
+    return sum(-(-int(df) // BLOCK_SIZE) for df, _ in stats.values())
+
+
+def single_partition(stats) -> bool:
+    """True when a query of these term stats is small enough to read
+    as one partition (``SINGLE_PARTITION_MAX_BLOCKS``)."""
+    return estimated_blocks(stats) <= SINGLE_PARTITION_MAX_BLOCKS
+
+
+def read_blocks(packed: DataFrame, terms, single: bool = False) -> DataFrame:
+    """The packed blocks of ``terms``: the ``term IN`` filter is pushed
+    to the parquet scan, and ``single=True`` coalesces the scan to ONE
+    partition. Catalyst then sees ``SinglePartition`` and drops every
+    exchange above it (docid groupBy, distinct, bucket grouping)."""
+    blocks = packed.where(F.col("term").isin(sorted(set(terms))))
+    return blocks.coalesce(1) if single else blocks
+
+
+def drop_deleted(df: DataFrame, tombstones: DataFrame | None) -> DataFrame:
+    """``df`` without the docids of ``tombstones`` (None: no deletes).
+    A ``left_anti`` result does not depend on duplicates on its right
+    side, so the tombstone table joins as it is, without a ``distinct``
+    shuffle in front of the broadcast."""
+    if tombstones is None:
+        return df
+    return df.join(tombstones.select("docid"), "docid", "left_anti")
+
+
 def unpack_postings(packed: DataFrame, payloads: bool = False) -> DataFrame:
     """Flat view over packed blocks: decode delta+varbyte back to
     per-(docid, term) rows with positions and the norm byte, plus the
@@ -73,6 +128,13 @@ def unpack_postings(packed: DataFrame, payloads: bool = False) -> DataFrame:
     ENTIRE index and then drops most of it. Filter the packed frame
     first — ``unpack_postings(packed.where(F.col("term").isin(terms)))``
     — or use ``InvertedIndex.postings(terms)``, which does exactly that.
+
+    Memory: each row's ``positions`` (and ``payloads``) array is a
+    ``np.split`` VIEW into its block's one decoded buffer, so a view
+    pins the whole block's positions. The views live only until the
+    batch is yielded: the Arrow conversion materializes every array
+    into the batch's own list buffers, and the decoded blocks are
+    freed with the pandas frame, so no copy is made per doc.
     """
     cols = ["term", "docs_enc", "freqs_enc", "norms_enc", "positions_enc"]
     if payloads:
@@ -114,29 +176,37 @@ def unpack_postings(packed: DataFrame, payloads: bool = False) -> DataFrame:
 # ------------------------------------------------ bucketed positional kernel
 
 def positional_groups(
-    packed: DataFrame, terms, max_doc: int, payloads: bool = False
+    packed: DataFrame, terms, max_doc: int, payloads: bool = False,
+    single: bool = False,
 ) -> GroupedData:
     """The blocks of ``terms`` grouped by bucket, for one
     ``applyInPandas`` whose function calls :func:`bucket_positions`.
     ``payloads=True`` also selects ``payloads_enc``, for the payload
     scorers only; the phrase and span scorers never read it.
 
-    ONE packed scan (parquet term-IN pushdown), ONE narrow shuffle of
-    the still-compressed blocks. Buckets are docid-DISJOINT by
-    construction, so every positional match is certified inside one
-    group, and a group holds at most |terms| × 64 blocks — no skew at
-    any corpus size; parallelism = number of buckets. AQE never
-    coalesces a ``repartition(n, col)`` exchange, so ``n`` is sized from
-    the bucket count of ``max_doc`` (the index's doc count): 4
-    partitions per bucket as headroom against hash collisions, capped at
-    the prime 199 (reached at 50 buckets). A 1-bucket index runs 4
-    reduce tasks, not 199. Catalyst reuses this hash partitioning for
-    the groupBy, so it is still ONE shuffle."""
+    ONE packed scan (parquet term-IN pushdown). Buckets are
+    docid-DISJOINT by construction, so every positional match is
+    certified inside one group, and a group holds at most |terms| × 64
+    blocks — no skew at any corpus size. Two regimes, chosen by the
+    caller from the query's term stats (:func:`single_partition`):
+
+    - ``single=True`` (a small query): the scan is coalesced to one
+      partition and grouped in place — no exchange, one task.
+    - ``single=False``: ONE narrow shuffle of the still-compressed
+      blocks, ``repartition(n, "bucket")``; parallelism = number of
+      buckets. AQE never coalesces that exchange, so ``n`` is sized
+      from the bucket count of ``max_doc`` (the index's doc count): 4
+      partitions per bucket as headroom against hash collisions, capped
+      at the prime 199 (reached at 50 buckets). A 1-bucket index runs 4
+      reduce tasks, not 199. Catalyst reuses this hash partitioning for
+      the groupBy, so it is still ONE shuffle."""
     cols = ["term", "bucket", "block_id", "docs_enc", "freqs_enc", "norms_enc",
             "positions_enc"]
     if payloads:
         cols.append("payloads_enc")
-    blocks = packed.where(F.col("term").isin(sorted(set(terms)))).select(*cols)
+    blocks = read_blocks(packed, terms, single).select(*cols)
+    if single:
+        return blocks.groupBy("bucket")
     buckets = max(1, -(-int(max_doc) // BUCKET_DOCS))
     return blocks.repartition(min(199, 4 * buckets), "bucket").groupBy("bucket")
 

@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lucenenet_spark.index.postings import drop_deleted
 from lucenenet_spark.search.queries import Query
 from lucenenet_spark.search.searcher import IndexSearcher
 
@@ -614,10 +615,7 @@ def term_freq_topk(searcher: IndexSearcher, term: str, k: int = 10) -> DataFrame
     p = searcher.index.postings([term]).select(
         "docid", F.col("freq").cast("long").alias("tf")
     )
-    if searcher.tombstones is not None:
-        p = p.join(
-            searcher.tombstones.select("docid").distinct(), "docid", "left_anti"
-        )
+    p = drop_deleted(p, searcher.tombstones)
     w = Window.orderBy(F.col("tf").desc(), F.col("docid").asc())
     return (
         p.orderBy(F.col("tf").desc(), F.col("docid").asc())
@@ -642,10 +640,7 @@ def norm_value_topk(searcher: IndexSearcher, term: str, k: int = 10) -> DataFram
         [(int(b), float(dec[b])) for b in range(256)], "norm int, norm_value float"
     )
     p = searcher.index.postings([term]).select("docid", "norm")
-    if searcher.tombstones is not None:
-        p = p.join(
-            searcher.tombstones.select("docid").distinct(), "docid", "left_anti"
-        )
+    p = drop_deleted(p, searcher.tombstones)
     joined = p.join(F.broadcast(table), "norm").select("docid", "norm_value")
     w = Window.orderBy(F.col("norm_value").desc(), F.col("docid").asc())
     return (

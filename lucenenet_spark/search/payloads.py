@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from lucenenet_spark.functions.bm25 import float32_ordered_sum
-from lucenenet_spark.index.postings import KEY_SHIFT, bucket_positions
+from lucenenet_spark.index.postings import (
+    KEY_SHIFT,
+    bucket_positions,
+    drop_deleted,
+    unpack_postings,
+)
 from lucenenet_spark.search.spans import (
     _EMPTY_COUNTS,
     _EMPTY_SCORED,
@@ -73,7 +78,7 @@ def payload_term_query(
         df_, searcher.index.max_doc, 1.0,
         ttf=ttf_, sttf=searcher.index.sum_total_term_freq,
     )
-    src = searcher.index.postings([term], payloads=True).select(
+    src = unpack_postings(searcher._blocks([term], stats), payloads=True).select(
         "docid", "freq", "norm", "payloads"
     )
 
@@ -94,9 +99,7 @@ def payload_term_query(
                 {"docid": pdf["docid"], "score": (base * pay).astype(np.float32)}
             )
 
-    scored = src.mapInPandas(gen, schema=_OUT)
-    if searcher.tombstones is not None:
-        scored = scored.join(searcher.tombstones, "docid", "left_anti")
+    scored = drop_deleted(src.mapInPandas(gen, schema=_OUT), searcher.tombstones)
     if k is None:
         return scored
     return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
@@ -170,7 +173,7 @@ def payload_near_query(
     sim = searcher.sim
     w32 = np.float32(sim.weight_multi(dfs, searcher.index.max_doc, 1.0))
     scored = _bucket_span_eval(
-        searcher, terms,
+        searcher, terms, stats,
         lambda pdf: _payload_near_bucket(pdf, first, second, slop, fn, sim, w32),
         "docid long, score float",
         payloads=True,
@@ -193,7 +196,8 @@ def span_payload_check(
     """SpanPayloadCheckQuery over a unit term span
     (``Search/Spans/SpanPayloadCheckQuery.cs:36``): positions whose
     payload equals the required value → (docid, n_spans)."""
-    src = searcher.index.postings([term], payloads=True).select(
+    stats = searcher._term_stats([term])
+    src = unpack_postings(searcher._blocks([term], stats), payloads=True).select(
         "docid", "payloads"
     )
     want = float(np.float32(payload))
@@ -210,10 +214,7 @@ def span_payload_check(
             out = pd.DataFrame({"docid": pdf["docid"], "n_spans": n})
             yield out[out["n_spans"] > 0]
 
-    scored = src.mapInPandas(gen, schema=_SPANS_OUT)
-    if searcher.tombstones is not None:
-        scored = scored.join(searcher.tombstones, "docid", "left_anti")
-    return scored
+    return drop_deleted(src.mapInPandas(gen, schema=_SPANS_OUT), searcher.tombstones)
 
 
 def _near_payload_check_bucket(
@@ -240,8 +241,9 @@ def span_near_payload_check(
     (``spans._bucket_span_eval``) with payloads, vectorized per
     bucket."""
     want = (np.float32(payloads[0]), np.float32(payloads[1]))
+    terms = [first, second]
     return _bucket_span_eval(
-        searcher, [first, second],
+        searcher, terms, searcher._term_stats(terms),
         lambda pdf: _near_payload_check_bucket(pdf, first, second, slop, want),
         "docid long, n_spans long",
         payloads=True,

@@ -6,7 +6,7 @@ numpy inside Arrow UDFs in exactly the reference's float32 operation
 order (``BM25Similarity.cs:254-264``), because Spark SQL float/float
 division promotes to double and would drift from the float32 oracle.
 
-Physical shape per node:
+Physical shape per node (the parallel plan; see "Plan regime" below):
 
 - **TermQuery** — scan packed posting blocks filtered on ``term``
   (parquet predicate pushdown + row-group min/max = the BlockTree
@@ -31,7 +31,30 @@ Physical shape per node:
 - **MultiTermQuery** (prefix/wildcard/fuzzy/range) — expanded against
   the term_stats dictionary DataFrame (a broadcast-size predicate
   scan), then rewritten to the boolean pipeline
-  (``Search/MultiTermQuery.cs`` rewrite).
+  (``Search/MultiTermQuery.cs`` rewrite); the constant-score rewrite
+  reads the docid set with one ``distinct``.
+
+Plan regime. The reference ``IndexSearcher`` searches on the calling
+thread unless the caller hands it an executor (``Search/IndexSearcher.cs``);
+at serving sizes Spark's fixed cost per job and per task outweighs the
+decode. So ``_compile`` sizes the plan from the driver's term stats:
+Σ⌈df/128⌉ over the expanded terms estimates the blocks the query reads
+(``postings.estimated_blocks``). At or below
+``postings.SINGLE_PARTITION_MAX_BLOCKS`` the packed scan (``term IN``
+still pushed to parquet) is coalesced to ONE partition; Catalyst then
+sees ``SinglePartition`` and plans the docid groupBy of boolean,
+min-should-match, dismax and fuzzy, the constant-score ``distinct`` of
+prefix, wildcard and regexp, and the bucket grouping of the positional
+kernel without an exchange, so every query type runs as one job of
+one task (a tombstoned read adds the broadcast of its deletes). Above it the query keeps the parallel plan described per
+node. The constant is measured, not a knob: on the ``bench.py`` sf0.1
+warehouse at local[4], the crossover where one task's decode costs more
+than the job it saves comes at ~2k blocks for term and disjunction
+reads and between 0.5k and 1k for positional reads, which decode more
+per block; the constant sits below both, so the head-term and
+head-disjunction legs keep the parallel plan (BENCH.md). Both regimes
+give the same docids and float32 score bits: every fold is pinned to
+clause order, never to partition order.
 
 Global statistics (df, ttf, maxDoc, sumTotalTermFreq) are collected
 once per query on the driver and baked into UDF closures — the exact
@@ -70,7 +93,10 @@ from lucenenet_spark.index.builder import InvertedIndex
 from lucenenet_spark.index.postings import (
     KEY_SHIFT,
     bucket_positions,
+    drop_deleted,
     positional_groups,
+    read_blocks,
+    single_partition,
 )
 from lucenenet_spark.search.queries import (
     BooleanQuery,
@@ -171,11 +197,9 @@ class IndexSearcher:
         scored = self._compile(query, stats, top_k=k)
         if scored is None:
             return self._empty()
-        if self.tombstones is not None:
-            scored = scored.join(
-                self.tombstones.select("docid").distinct(), "docid", "left_anti"
-            )
-        out = scored.orderBy(F.col("score").desc(), F.col("docid").asc())
+        out = drop_deleted(scored, self.tombstones).orderBy(
+            F.col("score").desc(), F.col("docid").asc()
+        )
         return out.limit(k) if k is not None else out
 
     def count(self, query: Query) -> int:
@@ -205,11 +229,7 @@ class IndexSearcher:
         scored = self._compile(query, stats, top_k=None)
         if scored is None:
             return self._empty()
-        if self.tombstones is not None:
-            scored = scored.join(
-                self.tombstones.select("docid").distinct(), "docid", "left_anti"
-            )
-        return scored
+        return drop_deleted(scored, self.tombstones)
 
     def search_many(
         self, queries: dict[str, Query], k: int = 10, max_concurrency: int = 8
@@ -515,9 +535,20 @@ class IndexSearcher:
     def _empty(self) -> DataFrame:
         return self.index.docs.sparkSession.createDataFrame([], SCORED)
 
+    def _blocks(self, terms, stats) -> DataFrame:
+        """The packed blocks of ``terms`` in the query's plan regime:
+        ONE partition when ``stats``, the whole query's term stats, put
+        it under ``postings.SINGLE_PARTITION_MAX_BLOCKS``, else the
+        scan's own partitions. Every leaf of one query decides from the
+        same dict, so a query never mixes the regimes."""
+        return read_blocks(self.index.packed, terms, single_partition(stats))
+
     def _compile(self, q: Query, stats, top_k: int | None) -> DataFrame | None:
         """Returns scored-docs DF or None for a provably-empty result
-        (the reference's null-Scorer)."""
+        (the reference's null-Scorer). ``stats`` (every expanded term of
+        the query) also sizes the physical plan: Σ⌈df/128⌉ over it
+        estimates the blocks read, and a small query reads them as one
+        partition (:meth:`_blocks`)."""
         if isinstance(q, TermQuery):
             return self._term_scores(q.term, q.boost, stats, top_k)
         if isinstance(q, MatchAllDocsQuery):
@@ -535,7 +566,7 @@ class IndexSearcher:
                 terms = [t for t in flat_terms if t in stats]
                 if not terms:
                     return None
-                return self._docids_for_terms(terms).select("docid", score_col)
+                return self._docids_for_terms(terms, stats).select("docid", score_col)
             inner = self._compile(q.query, stats, None)
             if inner is None:
                 return None
@@ -564,7 +595,7 @@ class IndexSearcher:
         )
         cache = self._cache
 
-        blocks = self.index.packed.where(F.col("term") == term)
+        blocks = self._blocks([term], stats)
         # pruning certifies its threshold from block metadata that
         # still counts deleted docs — rank-safety requires liveDocs-free
         # reads, so disable under tombstones (merge/compaction restores
@@ -657,11 +688,11 @@ class IndexSearcher:
         )
 
     # ------------------------------------------- multi-term single scan
-    def _docids_for_terms(self, terms: list[str]) -> DataFrame:
+    def _docids_for_terms(self, terms: list[str], stats) -> DataFrame:
         """Distinct docIDs matching ANY of the terms — ONE scan of the
         packed postings (parquet `term IN (...)` pushdown), decode
         docids only (no freqs/norms/positions), then distinct."""
-        blocks = self.index.packed.where(F.col("term").isin(terms)).select("docs_enc")
+        blocks = self._blocks(terms, stats).select("docs_enc")
 
         def decode(iterator):
             for pdf in iterator:
@@ -673,7 +704,7 @@ class IndexSearcher:
         return blocks.mapInPandas(decode, schema="docid long").distinct()
 
     def _multi_term_clause_scores(
-        self, term_plan: dict[str, list[tuple[int, int, float]]]
+        self, term_plan: dict[str, list[tuple[int, int, float]]], stats
     ) -> DataFrame:
         """Score ALL TermQuery clauses of a boolean in ONE postings
         scan. ``term_plan``: term -> [(cidx, kind, weight)] with kind
@@ -693,7 +724,7 @@ class IndexSearcher:
         )
         schema = "docid long, cidx int, kind int, score float"
 
-        blocks = self.index.packed.where(F.col("term").isin(list(plan))).select(
+        blocks = self._blocks(plan, stats).select(
             "term", "docs_enc", "freqs_enc", "norms_enc"
         )
 
@@ -774,7 +805,7 @@ class IndexSearcher:
                 )
             )
         if term_plan:
-            frames.insert(0, self._multi_term_clause_scores(term_plan))
+            frames.insert(0, self._multi_term_clause_scores(term_plan, stats))
         if not frames:
             return None
         pos = frames[0]
@@ -796,7 +827,7 @@ class IndexSearcher:
             for c in nots
             if isinstance(c.query, TermQuery) and c.query.term in stats
         ]
-        neg = self._docids_for_terms(not_terms) if not_terms else None
+        neg = self._docids_for_terms(not_terms, stats) if not_terms else None
         for c in nots:
             if isinstance(c.query, TermQuery):
                 continue
@@ -828,7 +859,10 @@ class IndexSearcher:
                 frames.append(sub.select("docid", F.lit(cidx).alias("cidx"), "score"))
         if term_plan:
             frames.insert(
-                0, self._multi_term_clause_scores(term_plan).select("docid", "cidx", "score")
+                0,
+                self._multi_term_clause_scores(term_plan, stats).select(
+                    "docid", "cidx", "score"
+                ),
             )
         if not frames:
             return None
@@ -839,7 +873,7 @@ class IndexSearcher:
 
     # ----------------------------------------------------- phrase
     def _phrase_bucket_scored(
-        self, slots: list[list[str]], rels: list[int], slop: int, wf: float
+        self, slots: list[list[str]], rels: list[int], slop: int, wf: float, stats
     ) -> DataFrame:
         """Per-bucket phrase verification over PACKED blocks — the
         distributed analog of Lucene's per-segment ExactPhraseScorer
@@ -850,7 +884,8 @@ class IndexSearcher:
         position decode; :func:`_verify_phrase_bucket` is the matcher."""
         sim, w32 = self.sim, np.float32(wf)
         return positional_groups(
-            self.index.packed, [t for slot in slots for t in slot], self.index.max_doc
+            self.index.packed, [t for slot in slots for t in slot], self.index.max_doc,
+            single=single_partition(stats),
         ).applyInPandas(
             lambda pdf: _verify_phrase_bucket(pdf, slots, rels, slop, sim, w32),
             schema=SCORED,
@@ -867,7 +902,7 @@ class IndexSearcher:
             [stats[t][0] for t in terms], self.index.max_doc, q.boost
         )
         return self._phrase_bucket_scored(
-            [[t] for t in terms], list(q.positions()), q.slop, float(w)
+            [[t] for t in terms], list(q.positions()), q.slop, float(w), stats
         )
 
     def _multi_phrase(self, q: MultiPhraseQuery, stats) -> DataFrame | None:
@@ -891,7 +926,7 @@ class IndexSearcher:
             q.boost,
         )
         return self._phrase_bucket_scored(
-            present, list(q.positions()), q.slop, float(w)
+            present, list(q.positions()), q.slop, float(w), stats
         )
 
 

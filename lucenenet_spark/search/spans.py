@@ -60,7 +60,9 @@ from pyspark.sql import functions as F
 from lucenenet_spark.index.postings import (
     KEY_SHIFT,
     bucket_positions,
+    drop_deleted,
     positional_groups,
+    single_partition,
 )
 from lucenenet_spark.search.queries import MultiTermQuery
 
@@ -329,22 +331,21 @@ _EMPTY_SCORED = pd.DataFrame(
 
 
 def _bucket_span_eval(
-    searcher, terms, match, schema: str, payloads: bool = False
+    searcher, terms, stats, match, schema: str, payloads: bool = False
 ) -> DataFrame:
     """The span and payload plan on the shared bucketed positional
     kernel (``index/postings.py``, the phrase scorer's shape): ONE
     packed scan filtered to ``terms``, ONE shuffle of the compressed
-    blocks by bucket, ONE ``applyInPandas`` running ``match`` (a bucket
-    group -> rows of ``schema``). Deleted docs are anti-joined here."""
+    blocks by bucket — none when ``stats`` (``searcher._term_stats`` of
+    ``terms``) puts the query in the single-partition regime, as for
+    the phrase scorer — and ONE ``applyInPandas`` running ``match`` (a
+    bucket group -> rows of ``schema``). Deleted docs are anti-joined
+    here."""
     idx = searcher.index
-    out = positional_groups(idx.packed, terms, idx.max_doc, payloads).applyInPandas(
-        match, schema
-    )
-    if searcher.tombstones is not None:
-        out = out.join(
-            searcher.tombstones.select("docid").distinct(), "docid", "left_anti"
-        )
-    return out
+    out = positional_groups(
+        idx.packed, terms, idx.max_doc, payloads, single=single_partition(stats)
+    ).applyInPandas(match, schema)
+    return drop_deleted(out, searcher.tombstones)
 
 
 def _ordered_pairs(g1: np.ndarray, g2: np.ndarray, slop: int):
@@ -431,15 +432,15 @@ def span_query(searcher, q: SpanQuery) -> DataFrame:
 
     Physical shape = the per-bucket block-grouped plan
     (:func:`_bucket_span_eval`): one packed scan with term-IN
-    pushdown, one compressed-block shuffle, per-doc numpy span
-    enumeration inside the bucket group."""
+    pushdown, one compressed-block shuffle (none for a small query),
+    per-doc numpy span enumeration inside the bucket group."""
     q = _expand_multi(q, searcher)
     terms = sorted(set(q.terms()))
     if not terms:
         return _empty(searcher)
     sim, req = searcher.sim, _required_slots(q)
     return _bucket_span_eval(
-        searcher, terms,
+        searcher, terms, searcher._term_stats(terms),
         lambda pdf: _eval_span_bucket(pdf, q, req, False, sim, np.float32(1.0)),
         "docid long, n_spans long",
     )
@@ -468,7 +469,7 @@ def span_query_scored(searcher, q: SpanQuery, k: int | None = 10) -> DataFrame:
     sim, req = searcher.sim, _required_slots(q)
     w32 = np.float32(sim.weight_multi(dfs, searcher.index.max_doc, 1.0))
     scored = _bucket_span_eval(
-        searcher, terms,
+        searcher, terms, stats,
         lambda pdf: _eval_span_bucket(pdf, q, req, True, sim, w32),
         "docid long, score float",
     )

@@ -53,6 +53,7 @@ from lucenenet_spark.index.checkpoint import (
     next_doc_base,
     read_manifest,
 )
+from lucenenet_spark.index.postings import drop_deleted
 
 
 def _next_shard_and_base(path: str) -> tuple[int, int]:
@@ -162,8 +163,7 @@ def apply_tombstones(spark: SparkSession, path: str, scored: DataFrame) -> DataF
     tpath = os.path.join(path, "tombstones")
     if not os.path.exists(tpath):
         return scored
-    tombs = spark.read.parquet(tpath).select("docid").distinct()
-    return scored.join(tombs, "docid", "left_anti")
+    return drop_deleted(scored, spark.read.parquet(tpath))
 
 
 def load_live(spark: SparkSession, path: str) -> tuple[InvertedIndex, DataFrame | None]:
@@ -174,9 +174,7 @@ def load_live(spark: SparkSession, path: str) -> tuple[InvertedIndex, DataFrame 
     docs until merge (``BM25Similarity`` uses maxDoc, not numDocs)."""
     idx = load_sharded(spark, path)
     tpath = os.path.join(path, "tombstones")
-    tombs = (
-        spark.read.parquet(tpath).select("docid").distinct()
-        if os.path.exists(tpath)
-        else None
-    )
+    # one row per delete, duplicates kept: the anti-join that applies
+    # them (postings.drop_deleted) does not depend on them
+    tombs = spark.read.parquet(tpath).select("docid") if os.path.exists(tpath) else None
     return idx, tombs

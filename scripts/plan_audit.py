@@ -1,11 +1,19 @@
-"""Plan-shape audit across scales: assert the physical plan of the
-headline query paths has the SAME number of Exchange and Python-eval
-nodes over a small warehouse and a big one (the r4 verdict's sf1-soak
+"""Plan-shape audit across scales: the number of Exchange and
+Python-eval nodes in the physical plan of the headline query paths over
+a small warehouse and a big one (the r4 verdict's sf1-soak
 done-criterion: "no new Exchange/Python stage in the audited plans").
+
+A query reads its posting blocks as one partition when its term stats
+estimate few blocks (``postings.SINGLE_PARTITION_MAX_BLOCKS``), so the
+same query can take the single-partition plan on the small warehouse
+and the parallel plan on the big one, and its counts then differ by
+design. The audit prints the regime each query took on each warehouse,
+then compiles every query again with the parallel plan forced and
+asserts those counts are identical across the two scales.
 
 Catalyst chooses plans from statistics, so a shape that silently
 degrades at 10x (e.g. a broadcast join flipping to SortMergeJoin with
-an extra Exchange, or AQE inserting a re-partition) shows up here as a
+an extra Exchange, or AQE inserting a re-partition) shows up there as a
 node-count diff even when results stay correct.
 
 Usage: python scripts/plan_audit.py <warehouse_small> <warehouse_big>
@@ -13,11 +21,13 @@ Usage: python scripts/plan_audit.py <warehouse_small> <warehouse_big>
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lucenenet_spark.index import postings
 from lucenenet_spark.index.builder import InvertedIndex
 from lucenenet_spark.search import spans as sp
 from lucenenet_spark.search.queries import (
@@ -32,9 +42,11 @@ from lucenenet_spark.session import get_spark
 
 EXCHANGE = re.compile(r"\bExchange\b")
 PYTHON = re.compile(r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas)\b")
+SINGLE = re.compile(r"\bCoalesce 1\b")
 
 
-def shapes(searcher: IndexSearcher) -> dict[str, tuple[int, int]]:
+def shapes(searcher: IndexSearcher) -> dict[str, tuple[str, int, int]]:
+    """query -> (regime, exchanges, python nodes)."""
     qs = {
         "term_query": searcher.search_df(TermQuery(term="return"), 10),
         "bool_and": searcher.search_df(
@@ -60,7 +72,8 @@ def shapes(searcher: IndexSearcher) -> dict[str, tuple[int, int]]:
     out = {}
     for name, df in qs.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
-        out[name] = (len(EXCHANGE.findall(plan)), len(PYTHON.findall(plan)))
+        regime = "single" if SINGLE.search(plan) else "parallel"
+        out[name] = (regime, len(EXCHANGE.findall(plan)), len(PYTHON.findall(plan)))
     return out
 
 
@@ -68,19 +81,29 @@ def main() -> int:
     small_dir, big_dir = sys.argv[1], sys.argv[2]
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    small = shapes(IndexSearcher(InvertedIndex.load(spark, small_dir)))
-    big = shapes(IndexSearcher(InvertedIndex.load(spark, big_dir)))
-    rc = 0
+    searchers = [IndexSearcher(InvertedIndex.load(spark, d)) for d in (small_dir, big_dir)]
+    small, big = (shapes(s) for s in searchers)
     for name in small:
         s, b = small[name], big[name]
-        tag = "SAME" if s == b else "DIFF"
+        print(
+            f"REGIME {name}: small({s[0]}, exchanges={s[1]}, python={s[2]}) "
+            f"big({b[0]}, exchanges={b[1]}, python={b[2]})"
+        )
+    # the parallel plan on both scales: the counts must match
+    postings.SINGLE_PARTITION_MAX_BLOCKS = -1
+    small, big = (shapes(s) for s in searchers)
+    rc = 0
+    for name in small:
+        s, b = small[name][1:], big[name][1:]
         if s != b:
             rc = 1
         print(
-            f"{tag} {name}: small(exchanges={s[0]}, python={s[1]}) "
-            f"big(exchanges={b[0]}, python={b[1]})"
+            f"{'SAME' if s == b else 'DIFF'} {name} (parallel): "
+            f"small(exchanges={s[0]}, python={s[1]}) big(exchanges={b[0]}, python={b[1]})"
         )
-    print("PLAN SHAPES IDENTICAL ACROSS SCALES" if rc == 0 else "PLAN SHAPE DRIFT")
+    print(
+        "PARALLEL PLAN SHAPES IDENTICAL ACROSS SCALES" if rc == 0 else "PLAN SHAPE DRIFT"
+    )
     return rc
 
 

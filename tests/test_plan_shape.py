@@ -1,8 +1,11 @@
 """Plan-shape pins: the number of Exchange and Python-eval nodes in the
 physical plan of each headline query path, on a saved-then-loaded
-index. A change that adds a shuffle or a Python stage to one of these
-paths fails here instead of surfacing as a slower soak run
-(``scripts/plan_audit.py`` compares the same counts across two
+index, in both plan regimes. The fixture's queries are small, so by
+default they take the single-partition plan: no exchange at all. The
+parallel plan is forced by lowering ``SINGLE_PARTITION_MAX_BLOCKS``
+below every estimate. A change that adds a shuffle or a Python stage to
+one of these paths fails here instead of surfacing as a slower soak run
+(``scripts/plan_audit.py`` prints the regime each query took at two
 warehouse scales). The plans are compiled, never executed."""
 
 from __future__ import annotations
@@ -12,8 +15,9 @@ import re
 
 import pytest
 
+from lucenenet_spark.index import postings
 from lucenenet_spark.index.builder import CorpusSpec, InvertedIndex, build_index
-from lucenenet_spark.index.postings import BUCKET_DOCS
+from lucenenet_spark.index.postings import BUCKET_DOCS, estimated_blocks, single_partition
 from lucenenet_spark.search import spans as sp
 from lucenenet_spark.search.payloads import payload_near_query, span_near_payload_check
 from lucenenet_spark.search.queries import (
@@ -30,9 +34,11 @@ PYTHON = re.compile(
     r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas)\b"
 )
 BUCKET_EXCHANGE = re.compile(r"hashpartitioning\(bucket#\d+L?, (\d+)\)")
+# the parquet scan's pushed predicate on the term column
+TERM_PUSHDOWN = re.compile(r"PushedFilters: \[[^\]]*\b(?:EqualTo|In)\(term,")
 POSITIONAL = ("phrase", "sloppy_phrase", "multi_phrase", "span_near", "span_query_scored")
 
-# (exchanges, python nodes) per query path
+# (exchanges, python nodes) per query path, parallel plan
 EXPECTED = {
     "term": (0, 1),
     "bool_and": (1, 1),
@@ -44,6 +50,14 @@ EXPECTED = {
     "payload_near": (1, 1),
     "span_near_payload_check": (1, 1),
 }
+# single-partition plan: every exchange gone, the one Python node kept
+EXPECTED_SMALL = {name: (0, 1) for name in EXPECTED}
+
+
+@pytest.fixture()
+def large_regime(monkeypatch):
+    """Force the parallel plan: no estimate is below -1 blocks."""
+    monkeypatch.setattr(postings, "SINGLE_PARTITION_MAX_BLOCKS", -1)
 
 
 @pytest.fixture(scope="module")
@@ -100,13 +114,45 @@ def _frames(s: IndexSearcher) -> dict:
     }
 
 
-def test_plan_shapes_pinned(loaded, loaded_payloads):
-    got = {}
+def _plans(loaded, loaded_payloads) -> dict:
     frames = {**_frames(loaded), **_payload_frames(loaded_payloads)}
-    for name, df in frames.items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        got[name] = (len(EXCHANGE.findall(plan)), len(PYTHON.findall(plan)))
-    assert got == EXPECTED
+    return {
+        name: df._jdf.queryExecution().executedPlan().toString()
+        for name, df in frames.items()
+    }
+
+
+def _shapes(plans: dict) -> dict:
+    return {
+        name: (len(EXCHANGE.findall(plan)), len(PYTHON.findall(plan)))
+        for name, plan in plans.items()
+    }
+
+
+def test_plan_shapes_pinned(loaded, loaded_payloads, large_regime):
+    assert _shapes(_plans(loaded, loaded_payloads)) == EXPECTED
+
+
+def test_small_query_plans_have_no_exchange(loaded, loaded_payloads):
+    """The default regime on the fixture: one partition, zero exchanges,
+    and the term predicate still pushed into the parquet scan."""
+    plans = _plans(loaded, loaded_payloads)
+    assert _shapes(plans) == EXPECTED_SMALL
+    for name, plan in plans.items():
+        assert TERM_PUSHDOWN.search(plan), (name, plan)
+        assert "Coalesce 1" in plan, (name, plan)
+
+
+def test_regime_from_estimated_blocks(monkeypatch):
+    """Σ⌈df/128⌉ over the query's terms; at the constant the query is
+    still small, one block above it is not."""
+    stats = {"a": (1, 1), "b": (128, 300), "c": (129, 129)}
+    assert estimated_blocks(stats) == 1 + 1 + 2
+    assert estimated_blocks({}) == 0
+    monkeypatch.setattr(postings, "SINGLE_PARTITION_MAX_BLOCKS", 4)
+    assert single_partition(stats)
+    monkeypatch.setattr(postings, "SINGLE_PARTITION_MAX_BLOCKS", 3)
+    assert not single_partition(stats)
 
 
 def _bucket_exchange_sizes(s: IndexSearcher) -> dict:
@@ -122,7 +168,7 @@ def _bucket_exchange_sizes(s: IndexSearcher) -> dict:
     }
 
 
-def test_positional_exchange_sized_from_bucket_count(loaded):
+def test_positional_exchange_sized_from_bucket_count(loaded, large_regime):
     """``repartition(n, "bucket")`` is never coalesced by AQE, so n must
     follow the bucket count: a 1-bucket index gets a handful of reduce
     tasks, an index of >= 50 buckets the full 199."""
