@@ -108,7 +108,7 @@ class MultiFieldSearcher:
             )
             scored = combine_boolean_frames(pos, len(must), required_should, query.boost)
             for neg in neg_frames:
-                scored = scored.join(neg.distinct(), "docid", "left_anti")
+                scored = scored.join(neg, "docid", "left_anti")
             return scored
         if isinstance(query, DisjunctionMaxQuery):
             frames = []

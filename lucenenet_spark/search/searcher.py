@@ -21,7 +21,13 @@ Physical shape per node (the parallel plan; see "Plan regime" below):
   MinShouldMatchSumScorer), MUST_NOT = left_anti join (ReqExclScorer).
   Clause scores are folded in clause-index order in float32 — the
   pinned deterministic summation that makes results partition-count
-  invariant (the reference analog: TestSameScoresWithThreads).
+  invariant (the reference analog: TestSameScoresWithThreads). The
+  fold runs JVM-side: Spark's FloatType Add/Multiply is Java float
+  arithmetic, bit-identical to numpy's float32 ordered accumulation, so
+  the combine is a few SQL expressions (``count_if``,
+  ``sort_array(collect_list(...))``, ``aggregate``) in whole-stage
+  codegen, with its float literals cast exactly to FLOAT
+  (:func:`combine_boolean_frames`).
 - **PhraseQuery** / **MultiPhraseQuery** — the shared bucketed
   positional kernel (``index/postings.py``): one packed scan, one
   compressed-block shuffle by docid bucket, candidate-gated position
@@ -818,19 +824,12 @@ class IndexSearcher:
         return self._apply_not(scored, complex_nots, stats)
 
     def _apply_not(self, scored: DataFrame, nots, stats) -> DataFrame:
-        if not nots:
-            return scored
-        # prohibited set needs docids only: TermQuery nots share one
-        # decode-docids scan; complex nots compile recursively
-        not_terms = [
-            c.query.term
-            for c in nots
-            if isinstance(c.query, TermQuery) and c.query.term in stats
-        ]
-        neg = self._docids_for_terms(not_terms, stats) if not_terms else None
+        """Anti-join the docids of the non-term MUST_NOT clauses (term
+        ones ride the clause scan as kind -1 rows). A ``left_anti``
+        result does not depend on duplicates on its right side, so the
+        docids join as they come, with no ``distinct`` shuffle."""
+        neg = None
         for c in nots:
-            if isinstance(c.query, TermQuery):
-                continue
             sub = self._compile(c.query, stats, None)
             if sub is None:
                 continue
@@ -838,7 +837,7 @@ class IndexSearcher:
             neg = sub if neg is None else neg.unionByName(sub)
         if neg is None:
             return scored
-        return scored.join(neg.distinct(), "docid", "left_anti")
+        return scored.join(neg, "docid", "left_anti")
 
     def _dismax(self, q: DisjunctionMaxQuery, stats) -> DataFrame | None:
         term_plan: dict[str, list[tuple[int, int, float]]] = {}
@@ -1038,6 +1037,22 @@ def _verify_phrase_bucket(
     return pd.DataFrame({"docid": cand[m] + bp.base, "score": s.astype(np.float32)})
 
 
+def _f32_sql(x: float) -> str:
+    """``x`` rounded to float32, as a Spark SQL FLOAT expression with
+    the same bits. A plain decimal in SQL text is a DECIMAL literal,
+    which would turn the float32 fold it multiplies into DOUBLE
+    arithmetic; a ``D``-suffixed double literal is parsed exactly, and
+    ``repr`` of a float32 value round-trips, so the cast is exact."""
+    x = float(np.float32(x))
+    if not np.isfinite(x):
+        return f"CAST('{x}' AS FLOAT)"
+    return f"CAST({x!r}D AS FLOAT)"
+
+
+# sum of the (cidx, score) structs of ``cs`` in cidx order, in float32
+_F32_SUM = "aggregate(cs, CAST(0.0 AS FLOAT), (a, x) -> a + x.score)"
+
+
 def combine_boolean_frames(
     pos: DataFrame, n_must: int, required_should: int, boost: float
 ) -> DataFrame:
@@ -1048,58 +1063,52 @@ def combine_boolean_frames(
     pinned deterministic summation (partition-count invariant). Shared
     by the single-index boolean scorer and the cross-field
     MultiFieldSearcher (where each clause frame comes from a different
-    field's index)."""
-    agg = pos.groupBy("docid").agg(
-        F.sum((F.col("kind") == 1).cast("int")).alias("n_must"),
-        F.sum((F.col("kind") == 0).cast("int")).alias("n_should"),
-        F.sum((F.col("kind") == -1).cast("int")).alias("n_not"),
-        F.sort_array(
-            F.collect_list(
-                F.when(F.col("kind") >= 0, F.struct("cidx", "score"))
-            )
-        ).alias("cs"),
-    )
-    cond = (
-        (F.col("n_must") == n_must)
-        & (F.col("n_should") >= required_should)
-        & (F.col("n_not") == 0)
-    )
-    agg = agg.where(cond)
+    field's index).
 
-    # JVM-side float32 fold: Spark Add/Multiply on FloatType stays in
-    # Java float arithmetic, bit-identical to the numpy f32 ordered
-    # accumulation (probed over randomized clause lists) — keeps the
-    # whole combine inside whole-stage codegen, no Python stage
-    boost_f = float(np.float32(boost))
-    acc = F.aggregate(
-        F.col("cs"), F.lit(0.0).cast("float"), lambda a, x: a + x["score"]
-    )
-    return agg.select(
-        "docid", (acc * F.lit(boost_f).cast("float")).alias("score")
+    JVM-side float32 fold: Spark Add/Multiply on FloatType stays in
+    Java float arithmetic, bit-identical to the numpy float32 ordered
+    accumulation (``tests/test_combine_folds.py`` checks it over
+    randomized clause lists), and keeps the whole combine inside
+    whole-stage codegen, no Python stage. It is written as SQL text,
+    a few py4j calls in place of one per Column node."""
+    return (
+        pos.groupBy("docid")
+        .agg(
+            F.expr("count_if(kind = 1) AS n_must"),
+            F.expr("count_if(kind = 0) AS n_should"),
+            F.expr("count_if(kind = -1) AS n_not"),
+            F.expr(
+                "sort_array(collect_list("
+                "CASE WHEN kind >= 0 THEN struct(cidx, score) END)) AS cs"
+            ),
+        )
+        .where(
+            f"n_must = {int(n_must)} AND n_should >= {int(required_should)}"
+            " AND n_not = 0"
+        )
+        .selectExpr("docid", f"{_F32_SUM} * {_f32_sql(boost)} AS score")
     )
 
 
 def combine_dismax_frames(pos: DataFrame, tie_breaker: float, boost: float) -> DataFrame:
     """Fold per-disjunct score frames (docid, cidx, score) with the
     DisjunctionMaxQuery rule max + tie*(sum-max) in float32, clause
-    scores visited in cidx order (``DisjunctionMaxQuery.cs:69-77``)."""
-    tie = float(np.float32(tie_breaker))
-    boost_f = float(np.float32(boost))
-    agg = pos.groupBy("docid").agg(
-        F.sort_array(F.collect_list(F.struct("cidx", "score"))).alias("cs")
+    scores visited in cidx order (``DisjunctionMaxQuery.cs:69-77``).
+
+    The same JVM float32 fold as :func:`combine_boolean_frames`: the
+    sum runs in cidx order, the max is order-free, and
+    ``greatest(·, 0f)`` keeps the scorer's zero-initialized running max
+    for (theoretical) all-negative scores."""
+    mx = "greatest(array_max(transform(cs, x -> x.score)), CAST(0.0 AS FLOAT))"
+    return (
+        pos.groupBy("docid")
+        .agg(F.expr("sort_array(collect_list(struct(cidx, score))) AS cs"))
+        .selectExpr(
+            "docid",
+            f"({mx} + ({_F32_SUM} - {mx}) * {_f32_sql(tie_breaker)})"
+            f" * {_f32_sql(boost)} AS score",
+        )
     )
-    # JVM float32 fold (see combine_boolean_frames): sum in cidx order,
-    # max is order-free; greatest(·, 0f) preserves the scorer's
-    # zero-initialized running max for (theoretical) all-negative scores
-    acc = F.aggregate(
-        F.col("cs"), F.lit(0.0).cast("float"), lambda a, x: a + x["score"]
-    )
-    mx = F.greatest(
-        F.array_max(F.transform(F.col("cs"), lambda x: x["score"])),
-        F.lit(0.0).cast("float"),
-    )
-    score = (mx + (acc - mx) * F.lit(tie).cast("float")) * F.lit(boost_f).cast("float")
-    return agg.select("docid", score.alias("score"))
 
 
 def _pure_term_disjunction(q: Query) -> list[str] | None:

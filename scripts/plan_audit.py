@@ -11,6 +11,10 @@ design. The audit prints the regime each query took on each warehouse,
 then compiles every query again with the parallel plan forced and
 asserts those counts are identical across the two scales.
 
+It also prints the driver's py4j round trips to compile each query
+(``session.py4j_round_trips``): every JVM call the compile makes, the
+driver side of a query's fixed cost.
+
 Catalyst chooses plans from statistics, so a shape that silently
 degrades at 10x (e.g. a broadcast join flipping to SortMergeJoin with
 an extra Exchange, or AQE inserting a re-partition) shows up there as a
@@ -32,35 +36,45 @@ from lucenenet_spark.index.builder import InvertedIndex
 from lucenenet_spark.search import spans as sp
 from lucenenet_spark.search.queries import (
     BooleanQuery,
+    DisjunctionMaxQuery,
     FuzzyQuery,
     Occur,
     PhraseQuery,
     TermQuery,
 )
 from lucenenet_spark.search.searcher import IndexSearcher
-from lucenenet_spark.session import get_spark
+from lucenenet_spark.session import get_spark, py4j_round_trips
 
 EXCHANGE = re.compile(r"\bExchange\b")
 PYTHON = re.compile(r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas)\b")
 SINGLE = re.compile(r"\bCoalesce 1\b")
 
 
-def shapes(searcher: IndexSearcher) -> dict[str, tuple[str, int, int]]:
-    """query -> (regime, exchanges, python nodes)."""
+def shapes(searcher: IndexSearcher) -> dict[str, tuple[str, int, int, int]]:
+    """query -> (regime, exchanges, python nodes, compile round trips).
+    Each query compiles twice and the second compile is counted, so the
+    term-stats load of a searcher's first query is left out."""
     qs = {
-        "term_query": searcher.search_df(TermQuery(term="return"), 10),
-        "bool_and": searcher.search_df(
+        "term_query": lambda: searcher.search_df(TermQuery(term="return"), 10),
+        "bool_and": lambda: searcher.search_df(
             BooleanQuery.of(
                 (TermQuery(term="return"), Occur.MUST),
                 (TermQuery(term="value"), Occur.MUST),
             ),
             10,
         ),
-        "phrase": searcher.search_df(
+        "dismax": lambda: searcher.search_df(
+            DisjunctionMaxQuery(
+                disjuncts=(TermQuery(term="return"), TermQuery(term="value")),
+                tie_breaker=0.1,
+            ),
+            10,
+        ),
+        "phrase": lambda: searcher.search_df(
             PhraseQuery(phrase_terms=("return", "value")), 10
         ),
-        "fuzzy_osa": searcher.search_df(FuzzyQuery(term="return"), 10),
-        "span_near": sp.span_query(
+        "fuzzy_osa": lambda: searcher.search_df(FuzzyQuery(term="return"), 10),
+        "span_near": lambda: sp.span_query(
             searcher,
             sp.SpanNearQuery(
                 (sp.SpanTermQuery("return"), sp.SpanTermQuery("value")),
@@ -70,10 +84,13 @@ def shapes(searcher: IndexSearcher) -> dict[str, tuple[str, int, int]]:
         ),
     }
     out = {}
-    for name, df in qs.items():
+    for name, compile_ in qs.items():
+        compile_()
+        with py4j_round_trips() as n:
+            df = compile_()
         plan = df._jdf.queryExecution().executedPlan().toString()
         regime = "single" if SINGLE.search(plan) else "parallel"
-        out[name] = (regime, len(EXCHANGE.findall(plan)), len(PYTHON.findall(plan)))
+        out[name] = (regime, len(EXCHANGE.findall(plan)), len(PYTHON.findall(plan)), n[0])
     return out
 
 
@@ -86,15 +103,15 @@ def main() -> int:
     for name in small:
         s, b = small[name], big[name]
         print(
-            f"REGIME {name}: small({s[0]}, exchanges={s[1]}, python={s[2]}) "
-            f"big({b[0]}, exchanges={b[1]}, python={b[2]})"
+            f"REGIME {name}: small({s[0]}, exchanges={s[1]}, python={s[2]}, "
+            f"py4j={s[3]}) big({b[0]}, exchanges={b[1]}, python={b[2]}, py4j={b[3]})"
         )
     # the parallel plan on both scales: the counts must match
     postings.SINGLE_PARTITION_MAX_BLOCKS = -1
     small, big = (shapes(s) for s in searchers)
     rc = 0
     for name in small:
-        s, b = small[name][1:], big[name][1:]
+        s, b = small[name][1:3], big[name][1:3]
         if s != b:
             rc = 1
         print(

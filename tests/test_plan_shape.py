@@ -6,28 +6,35 @@ parallel plan is forced by lowering ``SINGLE_PARTITION_MAX_BLOCKS``
 below every estimate. A change that adds a shuffle or a Python stage to
 one of these paths fails here instead of surfacing as a slower soak run
 (``scripts/plan_audit.py`` prints the regime each query took at two
-warehouse scales). The plans are compiled, never executed."""
+warehouse scales). The plans are compiled, never executed, except the
+MUST_NOT pin's, which checks its answer against the oracle. The driver's
+compile cost is pinned too, as py4j round trips per query."""
 
 from __future__ import annotations
 
 import dataclasses
 import re
 
+import numpy as np
 import pytest
 
 from lucenenet_spark.index import postings
 from lucenenet_spark.index.builder import CorpusSpec, InvertedIndex, build_index
 from lucenenet_spark.index.postings import BUCKET_DOCS, estimated_blocks, single_partition
+from lucenenet_spark.oracle import OracleSearcher
+from lucenenet_spark.search import parse_query
 from lucenenet_spark.search import spans as sp
 from lucenenet_spark.search.payloads import payload_near_query, span_near_payload_check
 from lucenenet_spark.search.queries import (
     BooleanQuery,
+    DisjunctionMaxQuery,
     MultiPhraseQuery,
     Occur,
     PhraseQuery,
     TermQuery,
 )
 from lucenenet_spark.search.searcher import IndexSearcher
+from lucenenet_spark.session import py4j_round_trips
 
 EXCHANGE = re.compile(r"\bExchange\b")
 PYTHON = re.compile(
@@ -52,6 +59,10 @@ EXPECTED = {
 }
 # single-partition plan: every exchange gone, the one Python node kept
 EXPECTED_SMALL = {name: (0, 1) for name in EXPECTED}
+# py4j round trips to compile each query once its term stats are on the
+# driver, about 20% over the measured 83 / 133 / 137; 143 / 594 / 456
+# with call-site capture on and a Column-by-Column combine
+MAX_ROUND_TRIPS = {"term": 100, "bool_and": 160, "dismax": 165}
 
 
 @pytest.fixture()
@@ -181,3 +192,40 @@ def test_positional_exchange_sized_from_bucket_count(loaded, large_regime):
         )
         got = _bucket_exchange_sizes(big)
         assert got == {name: [want] for name in POSITIONAL}, (buckets, got)
+
+
+def test_not_clause_joins_its_docids_without_distinct(loaded, oracle_index, large_regime):
+    """A non-term MUST_NOT anti-joins its docids as they come: the
+    parallel plan has the clause combine's shuffle and the phrase's
+    bucket exchange, and no third one for a ``distinct`` in front of
+    the join. The answer keeps the oracle's docids and float32 bits."""
+    q = parse_query('return AND NOT "return value"')
+    df = loaded.search_df(q, 10)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(EXCHANGE.findall(plan)) == 2, plan
+    got = [(r.docid, np.float32(r.score).tobytes()) for r in df.collect()]
+    want = [(d, np.float32(s).tobytes()) for d, s in OracleSearcher(oracle_index).search(q, 10)]
+    assert got and got == want
+
+
+def test_compile_round_trips_bounded(loaded):
+    """The driver's compile of a query, counted in py4j round trips
+    (each a JVM call), stays within a bound of the measured count."""
+    queries = {
+        "term": TermQuery(term="return"),
+        "bool_and": BooleanQuery.of(
+            (TermQuery(term="return"), Occur.MUST),
+            (TermQuery(term="value"), Occur.MUST),
+        ),
+        "dismax": DisjunctionMaxQuery(
+            disjuncts=(TermQuery(term="return"), TermQuery(term="value")),
+            tie_breaker=0.1,
+        ),
+    }
+    loaded.search_df(queries["term"], 10)  # loads the term stats
+    got = {}
+    for name, q in queries.items():
+        with py4j_round_trips() as n:
+            loaded.search_df(q, 10)
+        got[name] = n[0]
+    assert all(got[name] <= MAX_ROUND_TRIPS[name] for name in got), got
