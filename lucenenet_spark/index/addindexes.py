@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from lucenenet_spark.index.builder import BUCKET_DOCS, InvertedIndex, write_index_tables
+from lucenenet_spark.index.builder import BUCKET_DOCS, InvertedIndex
 from lucenenet_spark.index.checkpoint import (
     _shard_counters,
     _write_manifest_atomic,
@@ -81,9 +81,14 @@ def add_indexes(
         )
 
         sdir = os.path.join(path, "shards", str(shard))
-        write_index_tables(
-            sdir, docs2, packed2, idx.term_stats, idx.max_doc, idx.sum_total_term_freq
-        )
+        # save fuses the shifted docs and blocks into one segments table
+        InvertedIndex(
+            docs=docs2,
+            packed=packed2,
+            term_stats=idx.term_stats,
+            max_doc=idx.max_doc,
+            sum_total_term_freq=idx.sum_total_term_freq,
+        ).save(sdir)
         counters = _shard_counters(spark, sdir)
         rec = {
             "shard": shard,

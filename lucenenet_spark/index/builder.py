@@ -191,6 +191,82 @@ class CorpusSpec:
     # with every other analysis flag.
     translit: "str | None" = None
 
+    def validate(self) -> None:
+        """Reject an exclusive combination of analysis flags, an unknown
+        ``stem_lang`` (KeyError) or an unknown ``translit`` ID — on the
+        driver, before any Spark job runs."""
+        on = {
+            f for f in _ANALYSIS_FLAGS
+            if getattr(self, f) is not None and getattr(self, f) is not False
+        }
+        for flag, excludes, message in _EXCLUSIVE_FLAGS:
+            if flag in on and on & (set(excludes or _ANALYSIS_FLAGS) - {flag}):
+                raise ValueError(message)
+        if self.stem_lang is not None:
+            from lucenenet_spark.analysis.snowball import snowball_stem
+
+            snowball_stem(self.stem_lang)
+        if self.translit is not None:
+            from lucenenet_spark.analysis.icu_transform import get_transform
+
+            get_transform(self.translit)
+
+
+_ANALYSIS_FLAGS = (
+    "stem", "stem_lang", "cjk", "synonyms", "shingle_size", "edge_ngram",
+    "reverse", "common_grams", "payload_delim", "ascii_fold", "ngram", "code",
+    "max_tokens", "token_length", "uax29", "ja", "zh", "opennlp_keep",
+    "translit",
+)
+_STREAM_FLAGS = (
+    "synonyms", "shingle_size", "edge_ngram", "reverse", "payload_delim",
+    "common_grams", "ngram",
+)
+_SWAPS = "it is exclusive with the other analysis flags"
+# (flag, flags it excludes — None: every other analysis flag, message),
+# checked in order by CorpusSpec.validate
+_EXCLUSIVE_FLAGS = (
+    ("stem", ("cjk",), "stem and cjk analyzers are mutually exclusive"),
+    ("uax29", None, f"uax29 swaps the base tokenizer; {_SWAPS}"),
+    ("ja", None, f"ja swaps the analysis pipeline; {_SWAPS}"),
+    ("zh", None, f"zh swaps the analysis pipeline; {_SWAPS}"),
+    ("opennlp_keep", None, f"opennlp_keep swaps the analysis pipeline; {_SWAPS}"),
+    ("translit", None, f"translit swaps the analysis pipeline; {_SWAPS}"),
+    ("stem_lang", None, f"stem_lang replaces the analysis pipeline; {_SWAPS}"),
+    (
+        "max_tokens", ("cjk",) + _STREAM_FLAGS,
+        "max_tokens truncates the base emitted stream; it composes with stem only",
+    ),
+    (
+        "token_length", ("cjk",) + _STREAM_FLAGS,
+        "token_length filters the base emitted stream; it composes with stem only",
+    ),
+    (
+        "edge_ngram", ("shingle_size", "synonyms"),
+        "edge_ngram replaces the token stream; it cannot combine with shingles/synonyms",
+    ),
+    (
+        "reverse", ("edge_ngram", "shingle_size", "synonyms"),
+        "reverse is exclusive with shingles/synonyms/edge_ngram",
+    ),
+    (
+        "payload_delim",
+        ("stem", "cjk", "synonyms", "shingle_size", "edge_ngram", "reverse"),
+        f"payload_delim uses the whitespace+delimiter analyzer; {_SWAPS}",
+    ),
+    (
+        "common_grams",
+        ("stem", "cjk", "synonyms", "shingle_size", "edge_ngram", "reverse",
+         "payload_delim"),
+        "common_grams is exclusive with the other analysis flags",
+    ),
+    (
+        "ngram", _STREAM_FLAGS,
+        "ngram replaces the token stream; it cannot combine with the other"
+        " stream-shaping filters",
+    ),
+)
+
 
 PACKED_SCHEMA = T.StructType(
     [
@@ -344,137 +420,56 @@ class _SegmentWriter:
     flushes sorted, bucket-split, ≤128-doc delta+varbyte blocks plus
     the doc-level rows — all inside one Python stage, no shuffle."""
 
-    def __init__(
-        self,
-        meta_cols: list[str],
-        stem: bool = False,
-        cjk: bool = False,
-        synonyms=None,
-        shingle_size=None,
-        edge_ngram=None,
-        reverse: bool = False,
-        payload_delim: "str | None" = None,
-        common_grams: bool = False,
-        ngram=None,
-        max_tokens: "int | None" = None,
-        token_length: "tuple[int, int] | None" = None,
-        stem_lang: "str | None" = None,
-        uax29: bool = False,
-        ja: bool = False,
-        zh: bool = False,
-        opennlp_keep: "tuple[str, ...] | None" = None,
-        translit: "str | None" = None,
-    ):
+    def __init__(self, spec: CorpusSpec, meta_cols: list[str]):
+        # flag combinations were checked by spec.validate() on the driver
         self.meta_cols = meta_cols
-        if stem and cjk:
-            raise ValueError("stem and cjk analyzers are mutually exclusive")
-        if uax29 and (
-            stem or cjk or stem_lang or synonyms or shingle_size
-            or edge_ngram or reverse or payload_delim or common_grams
-            or ngram or max_tokens or token_length or ja or zh
-        ):
-            raise ValueError(
-                "uax29 swaps the base tokenizer; it is exclusive with the"
-                " other analysis flags"
-            )
-        if ja and (
-            stem or cjk or stem_lang or synonyms or shingle_size
-            or edge_ngram or reverse or payload_delim or common_grams
-            or ngram or max_tokens or token_length or zh
-        ):
-            raise ValueError(
-                "ja swaps the analysis pipeline; it is exclusive with the"
-                " other analysis flags"
-            )
-        if zh and (
-            stem or cjk or stem_lang or synonyms or shingle_size
-            or edge_ngram or reverse or payload_delim or common_grams
-            or ngram or max_tokens or token_length
-        ):
-            raise ValueError(
-                "zh swaps the analysis pipeline; it is exclusive with the"
-                " other analysis flags"
-            )
-        if opennlp_keep is not None and (
-            stem or cjk or stem_lang or synonyms or shingle_size
-            or edge_ngram or reverse or payload_delim or common_grams
-            or ngram or max_tokens or token_length or uax29 or ja or zh
-        ):
-            raise ValueError(
-                "opennlp_keep swaps the analysis pipeline; it is exclusive"
-                " with the other analysis flags"
-            )
-        if translit is not None and (
-            stem or cjk or stem_lang or synonyms or shingle_size
-            or edge_ngram or reverse or payload_delim or common_grams
-            or ngram or max_tokens or token_length or uax29 or ja or zh
-            or opennlp_keep is not None
-        ):
-            raise ValueError(
-                "translit swaps the analysis pipeline; it is exclusive"
-                " with the other analysis flags"
-            )
-        if translit is not None:
+        if spec.translit is not None:
             from lucenenet_spark.analysis.icu_transform import (
                 make_transform_analyzer,
             )
 
-            self.analyze = make_transform_analyzer(translit)
-        elif opennlp_keep is not None:
+            self.analyze = make_transform_analyzer(spec.translit)
+        elif spec.opennlp_keep is not None:
             from lucenenet_spark.analysis.opennlp_role import (
                 make_opennlp_analyzer,
             )
 
-            self.analyze = make_opennlp_analyzer(opennlp_keep)
-        elif stem_lang is not None:
+            self.analyze = make_opennlp_analyzer(spec.opennlp_keep)
+        elif spec.stem_lang is not None:
             from lucenenet_spark.analysis.snowball import make_snowball_analyzer
 
-            self.analyze = make_snowball_analyzer(stem_lang)
-        elif stem:
+            self.analyze = make_snowball_analyzer(spec.stem_lang)
+        elif spec.stem:
             from lucenenet_spark.analysis.analyzer import analyze_stemmed
 
             self.analyze = analyze_stemmed
-        elif cjk:
+        elif spec.cjk:
             from lucenenet_spark.analysis.analyzer import analyze_cjk
 
             self.analyze = analyze_cjk
-        elif uax29:
+        elif spec.uax29:
             from lucenenet_spark.analysis.analyzer import analyze_uax29
 
             self.analyze = analyze_uax29
-        elif ja:
+        elif spec.ja:
             from lucenenet_spark.analysis.japanese import analyze_ja
 
             self.analyze = analyze_ja
-        elif zh:
+        elif spec.zh:
             from lucenenet_spark.analysis.chinese import analyze_zh
 
             self.analyze = analyze_zh
         else:
             self.analyze = analyze
-        self.synonyms = dict(synonyms) if synonyms else None
-        self.shingle_size = shingle_size
-        self.edge_ngram = edge_ngram
-        if edge_ngram is not None and (shingle_size is not None or synonyms):
-            raise ValueError("edge_ngram replaces the token stream; it cannot combine with shingles/synonyms")
-        self.reverse = reverse
-        if reverse and (edge_ngram is not None or shingle_size is not None or synonyms):
-            raise ValueError("reverse is exclusive with shingles/synonyms/edge_ngram")
-        self.payload_delim = payload_delim
-        if payload_delim and (stem or cjk or synonyms or shingle_size or edge_ngram or reverse):
-            raise ValueError("payload_delim uses the whitespace+delimiter analyzer; it is exclusive with the other analysis flags")
-        self.common_grams = common_grams
-        if common_grams and (stem or cjk or synonyms or shingle_size or edge_ngram or reverse or payload_delim):
-            raise ValueError("common_grams is exclusive with the other analysis flags")
-        self.ngram = ngram
-        if ngram is not None and (synonyms or shingle_size or edge_ngram or reverse or payload_delim or common_grams):
-            raise ValueError("ngram replaces the token stream; it cannot combine with the other stream-shaping filters")
-        self.max_tokens = max_tokens
-        if max_tokens is not None and (cjk or synonyms or shingle_size or edge_ngram or reverse or payload_delim or common_grams or ngram):
-            raise ValueError("max_tokens truncates the base emitted stream; it composes with stem only")
-        self.token_length = token_length
-        if token_length is not None and (cjk or synonyms or shingle_size or edge_ngram or reverse or payload_delim or common_grams or ngram):
-            raise ValueError("token_length filters the base emitted stream; it composes with stem only")
+        self.synonyms = dict(spec.synonyms) if spec.synonyms else None
+        self.shingle_size = spec.shingle_size
+        self.edge_ngram = spec.edge_ngram
+        self.reverse = spec.reverse
+        self.payload_delim = spec.payload_delim
+        self.common_grams = spec.common_grams
+        self.ngram = spec.ngram
+        self.max_tokens = spec.max_tokens
+        self.token_length = spec.token_length
         # term -> (docids, freqs, norm_bytes, positions-per-doc,
         #          payloads-per-doc or None)
         self.terms: dict[str, tuple[list, list, list, list, list]] = {}
@@ -674,13 +669,13 @@ class _SegmentWriter:
         return pd.concat([out, docs], ignore_index=True)
 
 
-def _segment_gen(offsets: dict[int, int] | None, meta_cols: list[str], stem: bool = False, cjk: bool = False, synonyms=None, shingle_size=None, edge_ngram=None, reverse: bool = False, payload_delim=None, common_grams: bool = False, ngram=None, max_tokens=None, token_length=None, stem_lang=None, uax29: bool = False, ja: bool = False, zh: bool = False, opennlp_keep=None, translit=None):
+def _segment_gen(offsets: dict[int, int] | None, meta_cols: list[str], spec: CorpusSpec):
     """mapInPandas worker: whole partition -> packed blocks + doc rows.
     With ``offsets``: docids assigned inline (fused, one Python hop);
     without: batches carry a ``docid`` column (id_col path)."""
 
     def gen(iterator):
-        w = _SegmentWriter(meta_cols, stem, cjk, synonyms, shingle_size, edge_ngram, reverse, payload_delim, common_grams, ngram, max_tokens, token_length, stem_lang=stem_lang, uax29=uax29, ja=ja, zh=zh, opennlp_keep=opennlp_keep, translit=translit)
+        w = _SegmentWriter(spec, meta_cols)
         if offsets is None:
             for pdf in iterator:
                 w.add_batch(
@@ -732,8 +727,8 @@ class InvertedIndex:
     max_doc: int
     sum_total_term_freq: int
     spec: CorpusSpec = field(default_factory=CorpusSpec)
-    # the persisted single-scan output both docs and packed derive
-    # from (None for a loaded index)
+    # the persisted segments frame docs and packed filter (a built or
+    # compacted index; None for a loaded one)
     flat: DataFrame | None = None
 
     @property
@@ -767,76 +762,106 @@ class InvertedIndex:
     def save(self, path: str) -> None:
         """Persist as a parquet warehouse (Iceberg-shaped layout: the
         production deployment writes these same tables as Iceberg with
-        snapshot commits; the sandbox has no Iceberg runtime jar).
+        snapshot commits; the sandbox has no Iceberg runtime jar). The
+        one writer of an index directory: a fresh build, a re-save, a
+        shard (build, append, AddIndexes, compaction) all land here.
 
-        The fused segment output (packed blocks + doc rows, one
-        table) is written in a SINGLE job — sorted by term within
-        partitions so parquet row-group min/max stats give the "terms
-        dictionary seek" (BlockTree analog) via pushdown, with doc
-        rows (term NULL) sorting first so block row groups carry
-        null_count=0 and doc-side scans prune them. term_stats and the
-        corpus scalars are tiny metadata writes. One big write instead
-        of separate docs+packed passes halves the serial tail of the
-        build (each extra write job costs fixed scheduler+commit time
-        regardless of cluster size).
+        Three tables: ``segments`` (packed blocks plus doc rows, which
+        carry ``term`` NULL), ``term_stats`` and the ``corpus_stats``
+        scalars. ``segments`` is written in a SINGLE job, sorted by
+        term within partitions so parquet row-group min/max stats give
+        the "terms dictionary seek" (BlockTree analog) via pushdown;
+        doc rows sort first. One big write instead of separate docs and
+        packed passes halves the serial tail of the build (each extra
+        write job costs fixed scheduler+commit time regardless of
+        cluster size). A built index writes its persisted segment
+        output; any other fuses its two frames by name.
         """
-        if self.flat is None:  # re-saving a loaded index: docs + packed
-            write_index_tables(
-                path, self.docs, self.packed, self.term_stats,
-                self.max_doc, self.sum_total_term_freq,
-            )
-            return
-        self.flat.sortWithinPartitions("term", "bucket", "block_id").write.mode(
+        segments = self.flat
+        if segments is None:
+            segments = self.packed.unionByName(self.docs, allowMissingColumns=True)
+        segments.sortWithinPartitions("term", "bucket", "block_id").write.mode(
             "overwrite"
         ).parquet(os.path.join(path, "segments"))
-        _write_stats_tables(
-            path, self.term_stats, self.max_doc, self.sum_total_term_freq
-        )
+        self.term_stats.write.mode("overwrite").parquet(os.path.join(path, "term_stats"))
+        self.term_stats.sparkSession.createDataFrame(
+            [(self.max_doc, self.sum_total_term_freq)],
+            "max_doc long, sum_total_term_freq long",
+        ).write.mode("overwrite").parquet(os.path.join(path, "corpus_stats"))
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "InvertedIndex":
-        stats = spark.read.parquet(os.path.join(path, "corpus_stats")).collect()[0]
-        if os.path.exists(os.path.join(path, "segments")):
-            seg = spark.read.parquet(os.path.join(path, "segments"))
-            packed = seg.where(F.col("term").isNotNull()).select(
-                *[f.name for f in PACKED_SCHEMA.fields]
-            )
-            non_doc = {f.name for f in PACKED_SCHEMA.fields}
-            doc_cols = [f.name for f in seg.schema.fields if f.name not in non_doc]
-            docs = seg.where(F.col("term").isNull()).select(*doc_cols)
-        else:
-            packed = spark.read.parquet(os.path.join(path, "packed"))
-            docs = spark.read.parquet(os.path.join(path, "docs"))
-        return cls(
-            docs=docs,
-            packed=packed,
-            term_stats=spark.read.parquet(os.path.join(path, "term_stats")),
-            max_doc=stats["max_doc"],
-            sum_total_term_freq=stats["sum_total_term_freq"],
+        """Open a saved index directory (:func:`read_index`)."""
+        return read_index(spark, [path])
+
+
+def read_segments(spark: SparkSession, dirs: list[str]) -> DataFrame:
+    """The one reader: the fused ``segments`` table of one or more
+    index directories (:meth:`InvertedIndex.save`)."""
+    return spark.read.parquet(*[os.path.join(d, "segments") for d in dirs])
+
+
+def split_segments(segments: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(docs, packed): the doc rows (``term`` NULL) and the posting
+    blocks of a fused segments frame, as two filters of it."""
+    packed_cols = [f.name for f in PACKED_SCHEMA.fields]
+    fixed = set(packed_cols) | {f.name for f in _DOC_FIELDS}
+    meta = [c for c in segments.columns if c not in fixed]
+    docs = segments.where(F.col("term").isNull()).select(
+        "docid", *meta, "field_length", "norm", "content_sha256"
+    )
+    return docs, segments.where(F.col("term").isNotNull()).select(*packed_cols)
+
+
+def read_index(spark: SparkSession, dirs: list[str]) -> InvertedIndex:
+    """Open one index directory, or the docid-disjoint shards of one
+    index as a single logical index: the segments tables union (no
+    merge), shard term_stats partials sum-merge (the distributed
+    TermContext.Build) and the corpus scalars add up."""
+
+    def table(name: str) -> DataFrame:
+        return spark.read.parquet(*[os.path.join(d, name) for d in dirs])
+
+    docs, packed = split_segments(read_segments(spark, dirs))
+    term_stats = table("term_stats")
+    if len(dirs) > 1:
+        term_stats = term_stats.groupBy("term").agg(
+            F.sum("df").alias("df"), F.sum("ttf").alias("ttf")
         )
+    corpus = table("corpus_stats").collect()
+    return InvertedIndex(
+        docs=docs,
+        packed=packed,
+        term_stats=term_stats,
+        max_doc=sum(int(r["max_doc"]) for r in corpus),
+        sum_total_term_freq=sum(int(r["sum_total_term_freq"]) for r in corpus),
+    )
 
 
-def write_index_tables(
-    path: str, docs, packed, term_stats, max_doc: int, sum_total_term_freq: int
-) -> None:
-    """Write the ``docs/`` + ``packed/`` layout of one index (a re-saved
-    index, or one shard of a sharded warehouse) in four write jobs:
-    ``docs``, ``packed`` sorted by term within partitions (row-group
-    min/max stats give the term-dictionary seek), ``term_stats``, and
-    the ``corpus_stats`` scalars."""
-    docs.write.mode("overwrite").parquet(os.path.join(path, "docs"))
-    packed.sortWithinPartitions("term", "bucket", "block_id").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "packed"))
-    _write_stats_tables(path, term_stats, max_doc, sum_total_term_freq)
-
-
-def _write_stats_tables(path: str, term_stats, max_doc: int, sum_total_term_freq: int):
-    term_stats.write.mode("overwrite").parquet(os.path.join(path, "term_stats"))
-    term_stats.sparkSession.createDataFrame(
-        [(max_doc, sum_total_term_freq)],
-        "max_doc long, sum_total_term_freq long",
-    ).write.mode("overwrite").parquet(os.path.join(path, "corpus_stats"))
+def index_segments(segments: DataFrame, spec: CorpusSpec | None = None) -> InvertedIndex:
+    """Index handle over a fused segments frame, persisted so that the
+    stats below, a later :meth:`InvertedIndex.save` and the queries
+    share one computation of it. ``term_stats`` is a pure JVM aggregate
+    over block METADATA (no posting decode); the corpus scalars are
+    collected here."""
+    segments = segments.persist()
+    docs, packed = split_segments(segments)
+    term_stats = packed.groupBy("term").agg(
+        F.sum("count").alias("df"), F.sum("sum_freq").alias("ttf")
+    )
+    corpus_agg = docs.agg(
+        F.count("*").alias("max_doc"),
+        F.coalesce(F.sum("field_length"), F.lit(0)).alias("sttf"),
+    ).collect()[0]
+    return InvertedIndex(
+        docs=docs,
+        packed=packed,
+        term_stats=term_stats,
+        max_doc=int(corpus_agg["max_doc"]),
+        sum_total_term_freq=int(corpus_agg["sttf"]),
+        spec=spec or CorpusSpec(),
+        flat=segments,
+    )
 
 
 def assign_docids(
@@ -901,96 +926,7 @@ def build_index(
     partitions: int | None = None,
 ) -> InvertedIndex:
     spec = spec or CorpusSpec()
-    if spec.stem and spec.cjk:  # fail on the driver, not inside workers
-        raise ValueError("stem and cjk analyzers are mutually exclusive")
-    if spec.uax29 and (
-        spec.stem or spec.cjk or spec.stem_lang or spec.synonyms
-        or spec.shingle_size or spec.edge_ngram or spec.reverse
-        or spec.payload_delim or spec.common_grams or spec.ngram
-        or spec.max_tokens or spec.token_length or spec.ascii_fold
-        or spec.code or spec.ja or spec.zh
-    ):
-        raise ValueError(
-            "uax29 swaps the base tokenizer; it is exclusive with the"
-            " other analysis flags"
-        )
-    if spec.ja and (
-        spec.stem or spec.cjk or spec.stem_lang or spec.synonyms
-        or spec.shingle_size or spec.edge_ngram or spec.reverse
-        or spec.payload_delim or spec.common_grams or spec.ngram
-        or spec.max_tokens or spec.token_length or spec.ascii_fold
-        or spec.code or spec.zh
-    ):
-        raise ValueError(
-            "ja swaps the analysis pipeline; it is exclusive with the"
-            " other analysis flags"
-        )
-    if spec.zh and (
-        spec.stem or spec.cjk or spec.stem_lang or spec.synonyms
-        or spec.shingle_size or spec.edge_ngram or spec.reverse
-        or spec.payload_delim or spec.common_grams or spec.ngram
-        or spec.max_tokens or spec.token_length or spec.ascii_fold
-        or spec.code
-    ):
-        raise ValueError(
-            "zh swaps the analysis pipeline; it is exclusive with the"
-            " other analysis flags"
-        )
-    if spec.opennlp_keep is not None and (
-        spec.stem or spec.cjk or spec.stem_lang or spec.synonyms
-        or spec.shingle_size or spec.edge_ngram or spec.reverse
-        or spec.payload_delim or spec.common_grams or spec.ngram
-        or spec.max_tokens or spec.token_length or spec.ascii_fold
-        or spec.code or spec.uax29 or spec.ja or spec.zh
-    ):
-        raise ValueError(
-            "opennlp_keep swaps the analysis pipeline; it is exclusive"
-            " with the other analysis flags"
-        )
-    if spec.translit is not None:
-        if (
-            spec.stem or spec.cjk or spec.stem_lang or spec.synonyms
-            or spec.shingle_size or spec.edge_ngram or spec.reverse
-            or spec.payload_delim or spec.common_grams or spec.ngram
-            or spec.max_tokens or spec.token_length or spec.ascii_fold
-            or spec.code or spec.uax29 or spec.ja or spec.zh
-            or spec.opennlp_keep is not None
-        ):
-            raise ValueError(
-                "translit swaps the analysis pipeline; it is exclusive"
-                " with the other analysis flags"
-            )
-        from lucenenet_spark.analysis.icu_transform import get_transform
-
-        get_transform(spec.translit)  # fail on unknown IDs driver-side
-    if spec.stem_lang is not None:
-        from lucenenet_spark.analysis.snowball import snowball_stem
-
-        snowball_stem(spec.stem_lang)  # fail fast on unknown language
-        if (
-            spec.stem or spec.cjk or spec.synonyms or spec.shingle_size
-            or spec.edge_ngram or spec.reverse or spec.payload_delim
-            or spec.common_grams or spec.ngram or spec.max_tokens
-            or spec.token_length or spec.ascii_fold or spec.code
-        ):
-            raise ValueError(
-                "stem_lang replaces the analysis pipeline; it is "
-                "exclusive with the other analysis flags"
-            )
-    if spec.max_tokens is not None and (
-        spec.cjk or spec.synonyms or spec.shingle_size or spec.edge_ngram
-        or spec.reverse or spec.payload_delim or spec.common_grams or spec.ngram
-    ):
-        raise ValueError(
-            "max_tokens truncates the base emitted stream; it composes with stem only"
-        )
-    if spec.token_length is not None and (
-        spec.cjk or spec.synonyms or spec.shingle_size or spec.edge_ngram
-        or spec.reverse or spec.payload_delim or spec.common_grams or spec.ngram
-    ):
-        raise ValueError(
-            "token_length filters the base emitted stream; it composes with stem only"
-        )
+    spec.validate()  # fail on the driver, not inside workers
     if spec.ascii_fold:
         from lucenenet_spark.analysis.folding import fold_col
 
@@ -1018,7 +954,7 @@ def build_index(
         flat_all = with_ids.select(
             "docid", F.col(spec.text_col).alias("__text"), *meta
         ).mapInPandas(
-            _segment_gen(None, meta, spec.stem, spec.cjk, spec.synonyms, spec.shingle_size, spec.edge_ngram, spec.reverse, spec.payload_delim, spec.common_grams, spec.ngram, spec.max_tokens, spec.token_length, spec.stem_lang, spec.uax29, spec.ja, spec.zh, spec.opennlp_keep, spec.translit),
+            _segment_gen(None, meta, spec),
             schema=schema,
         )
     else:
@@ -1030,34 +966,7 @@ def build_index(
         flat_all = ordered.select(
             "__pid", F.col(spec.text_col).alias("__text"), *meta
         ).mapInPandas(
-            _segment_gen(offsets, meta, spec.stem, spec.cjk, spec.synonyms, spec.shingle_size, spec.edge_ngram, spec.reverse, spec.payload_delim, spec.common_grams, spec.ngram, spec.max_tokens, spec.token_length, spec.stem_lang, spec.uax29, spec.ja, spec.zh, spec.opennlp_keep, spec.translit),
+            _segment_gen(offsets, meta, spec),
             schema=schema,
         )
-    flat_all = flat_all.persist()
-
-    packed = flat_all.where(F.col("term").isNotNull()).select(
-        *[f.name for f in PACKED_SCHEMA.fields]
-    )
-    docs = flat_all.where(F.col("term").isNull()).select(
-        "docid", *meta, "field_length", "norm", "content_sha256"
-    )
-
-    # pure JVM aggregate over block METADATA — no posting decode
-    term_stats = packed.groupBy("term").agg(
-        F.sum("count").alias("df"), F.sum("sum_freq").alias("ttf")
-    )
-
-    corpus_agg = docs.agg(
-        F.count("*").alias("max_doc"),
-        F.coalesce(F.sum("field_length"), F.lit(0)).alias("sttf"),
-    ).collect()[0]
-
-    return InvertedIndex(
-        docs=docs,
-        packed=packed,
-        term_stats=term_stats,
-        max_doc=int(corpus_agg["max_doc"]),
-        sum_total_term_freq=int(corpus_agg["sttf"]),
-        spec=spec,
-        flat=flat_all,
-    )
+    return index_segments(flat_all, spec)

@@ -11,7 +11,8 @@ Layout under ``path/``::
 
     staged/shard=N/...     docid-assigned corpus, partitioned by shard
                            (one atomic write, step 0; skipped if done)
-    shards/N/{docs,packed,term_stats,corpus_stats}/   per-shard index
+    shards/N/{segments,term_stats,corpus_stats}/   per-shard index
+                           (InvertedIndex.save, the one writer)
     manifest/shard_N.json  atomic (tmp+rename) lineage record:
                            {shard, fingerprint, docs, terms, postings,
                             bytes, status, wall_sec}
@@ -44,7 +45,8 @@ from lucenenet_spark.index.builder import (
     CorpusSpec,
     InvertedIndex,
     build_index,
-    write_index_tables,
+    read_index,
+    read_segments,
 )
 
 # docid-range width of one shard; a multiple of the packing bucket so
@@ -171,10 +173,7 @@ def build_sharded(
         shard_spec = dataclasses.replace(spec, id_col="docid")
         idx = build_index(spark, shard_df, shard_spec)
         sdir = os.path.join(path, "shards", str(shard))
-        write_index_tables(
-            sdir, idx.docs, idx.packed, idx.term_stats,
-            idx.max_doc, idx.sum_total_term_freq,
-        )
+        idx.save(sdir)
         counters = _shard_counters(spark, sdir)
         idx.unpersist()
         rec = {
@@ -193,14 +192,12 @@ def build_sharded(
 
 
 def _shard_counters(spark: SparkSession, sdir: str) -> dict:
-    """CheckIndex-style counters recomputed from the written tables."""
-    docs = spark.read.parquet(os.path.join(sdir, "docs"))
-    packed = spark.read.parquet(os.path.join(sdir, "packed"))
-    ts = spark.read.parquet(os.path.join(sdir, "term_stats"))
-    drow = docs.agg(
-        F.count("*").alias("n"), F.coalesce(F.max("docid"), F.lit(-1)).alias("mx")
-    ).collect()[0]
-    prow = packed.agg(
+    """CheckIndex-style counters recomputed from the written tables:
+    one aggregate over the segments table (doc rows carry a docid,
+    block rows a count and encoded bytes) and the term_stats rows."""
+    row = read_segments(spark, [sdir]).agg(
+        F.count("docid").alias("docs"),
+        F.coalesce(F.max("docid"), F.lit(-1)).alias("doc_max"),
         F.coalesce(F.sum("count"), F.lit(0)).alias("postings"),
         F.coalesce(
             F.sum(
@@ -213,11 +210,11 @@ def _shard_counters(spark: SparkSession, sdir: str) -> dict:
         ).alias("bytes"),
     ).collect()[0]
     return {
-        "docs": int(drow["n"]),
-        "doc_max": int(drow["mx"]),
-        "terms": ts.count(),
-        "postings": int(prow["postings"]),
-        "bytes": int(prow["bytes"]),
+        "docs": int(row["docs"]),
+        "doc_max": int(row["doc_max"]),
+        "terms": spark.read.parquet(os.path.join(sdir, "term_stats")).count(),
+        "postings": int(row["postings"]),
+        "bytes": int(row["bytes"]),
     }
 
 
@@ -238,6 +235,9 @@ def check_index(spark: SparkSession, path: str) -> dict:
         ts = spark.read.parquet(os.path.join(sdir, "term_stats"))
         df_sum = ts.agg(F.coalesce(F.sum("df"), F.lit(0))).collect()[0][0]
         ok = actual == expected and int(df_sum) == actual["postings"]
+        # maxDoc check: the corpus scalar must count the shard's doc rows
+        cs = spark.read.parquet(os.path.join(sdir, "corpus_stats")).collect()[0]
+        ok = ok and int(cs["max_doc"]) == actual["docs"]
         if rec.get("doc_max") is not None:
             ok = ok and int(rec["doc_max"]) == actual_all["doc_max"]
         out[shard] = {"ok": ok, "expected": expected, "actual": actual}
@@ -245,9 +245,9 @@ def check_index(spark: SparkSession, path: str) -> dict:
 
 
 def load_sharded(spark: SparkSession, path: str) -> InvertedIndex:
-    """Open the sharded index as one logical InvertedIndex: shard
-    tables union (docid-disjoint ⇒ no merge), term_stats partials
-    sum-merged (the distributed TermContext.Build).
+    """Open the sharded index as one logical InvertedIndex
+    (:func:`~lucenenet_spark.index.builder.read_index`: shard tables
+    union, docid-disjoint ⇒ no merge; term_stats partials sum-merged).
 
     The shard set comes from the MANIFEST, not a directory listing:
     shard data is written BEFORE its manifest, so a crash in that
@@ -256,33 +256,11 @@ def load_sharded(spark: SparkSession, path: str) -> InvertedIndex:
     visible iff its manifest says ``done`` and no committed compaction
     supersedes it; unmanifested directories are garbage
     (``gc_orphan_shards`` removes them)."""
-    base = os.path.join(path, "shards")
     manifest = read_manifest(path)
-    shards = sorted(
-        (str(s) for s, rec in manifest.items() if rec.get("status") == "done"),
-        key=int,
-    )
+    shards = sorted(s for s, rec in manifest.items() if rec.get("status") == "done")
     if not shards:
         raise ValueError(f"no committed shards under {path}")
-    docs = spark.read.parquet(*[os.path.join(base, s, "docs") for s in shards])
-    packed = spark.read.parquet(*[os.path.join(base, s, "packed") for s in shards])
-    term_stats = (
-        spark.read.parquet(*[os.path.join(base, s, "term_stats") for s in shards])
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-    )
-    cs = (
-        spark.read.parquet(*[os.path.join(base, s, "corpus_stats") for s in shards])
-        .agg(F.sum("max_doc"), F.sum("sum_total_term_freq"))
-        .collect()[0]
-    )
-    return InvertedIndex(
-        docs=docs,
-        packed=packed,
-        term_stats=term_stats,
-        max_doc=int(cs[0]),
-        sum_total_term_freq=int(cs[1]),
-    )
+    return read_index(spark, [os.path.join(path, "shards", str(s)) for s in shards])
 
 
 def gc_orphan_shards(path: str) -> list[str]:

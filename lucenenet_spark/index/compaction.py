@@ -43,12 +43,14 @@ from lucenenet_spark.functions.varbyte import (
 from lucenenet_spark.index.builder import (
     BUCKET_DOCS,
     PACKED_SCHEMA,
+    index_segments,
+    read_segments,
+    split_segments,
     unpack_postings,
 )
 from lucenenet_spark.index.checkpoint import (
     _shard_counters,
     _write_manifest_atomic,
-    load_sharded,
     read_manifest,
 )
 from lucenenet_spark.index.postings import drop_deleted
@@ -135,17 +137,9 @@ def compact_shards(
     if not old_shards:
         return {}
     full_merge = old_shards == sorted(manifest)
-    if full_merge:
-        idx = load_sharded(spark, path)
-        docs, packed = idx.docs, idx.packed
-    else:
-        base = os.path.join(path, "shards")
-        docs = spark.read.parquet(
-            *[os.path.join(base, str(s), "docs") for s in old_shards]
-        )
-        packed = spark.read.parquet(
-            *[os.path.join(base, str(s), "packed") for s in old_shards]
-        )
+    docs, packed = split_segments(
+        read_segments(spark, [os.path.join(path, "shards", str(s)) for s in old_shards])
+    )
 
     tpath = os.path.join(path, "tombstones")
     tombs = spark.read.parquet(tpath) if os.path.exists(tpath) else None
@@ -157,22 +151,11 @@ def compact_shards(
     new_shard = max(manifest) + 1
     sdir = os.path.join(path, "shards", str(new_shard))
     t0 = time.perf_counter()
-    docs.write.mode("overwrite").parquet(os.path.join(sdir, "docs"))
-    repack_postings(flat).sortWithinPartitions("term", "bucket", "block_id").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(sdir, "packed"))
-    packed_new = spark.read.parquet(os.path.join(sdir, "packed"))
-    packed_new.groupBy("term").agg(
-        F.sum("count").alias("df"), F.sum("sum_freq").alias("ttf")
-    ).write.mode("overwrite").parquet(os.path.join(sdir, "term_stats"))
-    stats = spark.read.parquet(os.path.join(sdir, "docs")).agg(
-        F.count("*").alias("max_doc"),
-        F.coalesce(F.sum("field_length"), F.lit(0)).alias("sttf"),
-    ).collect()[0]
-    spark.createDataFrame(
-        [(int(stats["max_doc"]), int(stats["sttf"]))],
-        "max_doc long, sum_total_term_freq long",
-    ).write.mode("overwrite").parquet(os.path.join(sdir, "corpus_stats"))
+    merged = index_segments(
+        repack_postings(flat).unionByName(docs, allowMissingColumns=True)
+    )
+    merged.save(sdir)
+    merged.unpersist()
 
     counters = _shard_counters(spark, sdir)
     # docid high-water mark survives even an everything-deleted

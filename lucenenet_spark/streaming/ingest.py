@@ -6,9 +6,13 @@ Mapping:
 - ``IndexWriter.AddDocument`` buffered in RAM then flushed as a
   segment (``Index/IndexWriter.cs:1602``;
   ``Index/DocumentsWriterPerThread.cs:509``) → one micro-batch =
-  one immutable SHARD appended by ``append_batch`` (same layout and
-  manifest as index/checkpoint.py; the streaming query is just
-  ``foreachBatch(append_batch)``).
+  one immutable SHARD appended by ``append_batch``: ``build_index``
+  over the batch, then ``InvertedIndex.save`` of its persisted segment
+  output into ``shards/N/{segments,term_stats,corpus_stats}`` — the
+  same directory a bulk ``save``, a resumable shard
+  (index/checkpoint.py), AddIndexes and a compaction write, with the
+  same manifest; the streaming query is just
+  ``foreachBatch(append_batch)``.
 - ``segments_N`` generation files + two-phase commit
   (``Index/IndexFileNames.cs:54``; ``IndexWriter.cs:4092``) → the
   manifest directory: a shard is visible iff its manifest JSON exists,
@@ -33,19 +37,13 @@ scheme of ``Index/BaseCompositeReader.cs``.
 from __future__ import annotations
 
 import dataclasses
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucenenet_spark.index.builder import (
-    CorpusSpec,
-    InvertedIndex,
-    build_index,
-    write_index_tables,
-)
+from lucenenet_spark.index.builder import CorpusSpec, InvertedIndex, build_index
 from lucenenet_spark.index.checkpoint import (
     _shard_counters,
     _write_manifest_atomic,
@@ -110,9 +108,7 @@ def append_batch(
     shard_spec = dataclasses.replace(spec, id_col="docid")
     idx = build_index(spark, with_ids, shard_spec)
     sdir = os.path.join(path, "shards", str(shard))
-    write_index_tables(
-        sdir, idx.docs, idx.packed, idx.term_stats, idx.max_doc, idx.sum_total_term_freq
-    )
+    idx.save(sdir)
     counters = _shard_counters(spark, sdir)
     idx.unpersist()
     rec = {

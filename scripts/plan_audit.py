@@ -15,6 +15,12 @@ It also prints the driver's py4j round trips to compile each query
 (``session.py4j_round_trips``): every JVM call the compile makes, the
 driver side of a query's fixed cost.
 
+For each warehouse it first prints the parquet layout of its
+``segments/`` table (read with pyarrow, no Spark): the file count, the
+row groups, and per row group the doc rows (``term`` NULL) against the
+block rows and the row group's term range. A ``term IN`` or
+``term IS NULL`` scan can skip a row group only by those statistics.
+
 Catalyst chooses plans from statistics, so a shape that silently
 degrades at 10x (e.g. a broadcast join flipping to SortMergeJoin with
 an extra Exchange, or AQE inserting a re-partition) shows up there as a
@@ -94,8 +100,42 @@ def shapes(searcher: IndexSearcher) -> dict[str, tuple[str, int, int, int]]:
     return out
 
 
+def segment_layout(warehouse: str) -> list[str]:
+    """The parquet layout of ``warehouse/segments``: a summary line, then
+    one line per row group (doc rows, block rows, term min..max)."""
+    import pyarrow.parquet as pq
+
+    seg = os.path.join(warehouse, "segments")
+    files = sorted(f for f in os.listdir(seg) if f.endswith(".parquet"))
+    groups, n_docs, n_rows = [], 0, 0
+    for name in files:
+        meta = pq.ParquetFile(os.path.join(seg, name)).metadata
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            term = next(
+                rg.column(c) for c in range(rg.num_columns)
+                if rg.column(c).path_in_schema == "term"
+            )
+            st = term.statistics
+            docs = st.null_count
+            lo, hi = (st.min, st.max) if st.has_min_max else (None, None)
+            groups.append(
+                f"  {name[:10]} rg{g}: doc_rows={docs} block_rows={rg.num_rows - docs}"
+                f" terms={lo!r}..{hi!r}"
+            )
+            n_docs += docs
+            n_rows += rg.num_rows
+    return [
+        f"LAYOUT {warehouse}: segments/ files={len(files)} row_groups={len(groups)}"
+        f" doc_rows={n_docs} block_rows={n_rows - n_docs}",
+        *groups,
+    ]
+
+
 def main() -> int:
     small_dir, big_dir = sys.argv[1], sys.argv[2]
+    for d in (small_dir, big_dir):
+        print("\n".join(segment_layout(d)))
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     searchers = [IndexSearcher(InvertedIndex.load(spark, d)) for d in (small_dir, big_dir)]

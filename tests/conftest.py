@@ -1,3 +1,6 @@
+import contextlib
+import uuid
+
 import pytest
 
 
@@ -41,3 +44,22 @@ def oracle_index(corpus_rows):
     from tests.corpus import corpus_texts
 
     return build_oracle_index(corpus_texts(corpus_rows))
+
+
+@pytest.fixture()
+def no_spark_job(spark):
+    """Context manager that fails if its block starts a Spark job."""
+
+    @contextlib.contextmanager
+    def guard():
+        sc = spark.sparkContext
+        group = f"no-job-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "must start no Spark job")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    return guard

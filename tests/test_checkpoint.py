@@ -133,3 +133,15 @@ def test_check_index_detects_corruption(spark, warehouse):
     rec["postings"] -= 7
     with open(mp, "w") as f:
         json.dump(rec, f)
+    assert check_index(spark, path)[2]["ok"]
+    # maxDoc check: corpus_stats must count the shard's doc rows
+    cs_dir = os.path.join(path, "shards", "2", "corpus_stats")
+    good = spark.read.parquet(cs_dir).collect()[0]
+    spark.createDataFrame(
+        [(good["max_doc"] + 5, good["sum_total_term_freq"])], "max_doc long, sum_total_term_freq long"
+    ).write.mode("overwrite").parquet(cs_dir)
+    assert not check_index(spark, path)[2]["ok"]
+    spark.createDataFrame([tuple(good)], "max_doc long, sum_total_term_freq long").write.mode(
+        "overwrite"
+    ).parquet(cs_dir)
+    assert check_index(spark, path)[2]["ok"]

@@ -20,16 +20,17 @@ def test_unit_gram_stream():
     assert edge_field_length(pairs, 2) == 2
 
 
-def test_exclusive_with_stream_filters(spark):
+def test_exclusive_with_stream_filters(spark, no_spark_job):
     df = spark.createDataFrame(
         [("r", "a", "c", "x")], "repo string, path string, commit string, content string"
     )
-    with pytest.raises(Exception):
+    # rejected on the driver, before any Spark job
+    with no_spark_job(), pytest.raises(ValueError):
         build_index(
             spark, df,
             CorpusSpec(order_cols=("repo", "path", "commit"),
                        edge_ngram=(2, 4), shingle_size=2),
-        ).postings().collect()
+        )
 
 
 def test_prefix_as_exact_term(spark):

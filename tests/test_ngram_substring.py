@@ -35,16 +35,17 @@ def test_substring_grams():
         substring_grams("ab", 3, 4)
 
 
-def test_exclusive_with_stream_filters(spark):
+def test_exclusive_with_stream_filters(spark, no_spark_job):
     df = spark.createDataFrame(
         [("r", "a", "c", "x")], "repo string, path string, commit string, content string"
     )
-    with pytest.raises(Exception):
+    # rejected on the driver, before any Spark job
+    with no_spark_job(), pytest.raises(ValueError):
         build_index(
             spark, df,
             CorpusSpec(order_cols=("repo", "path", "commit"),
                        ngram=(2, 4), edge_ngram=(2, 4)),
-        ).postings().collect()
+        )
 
 
 @pytest.fixture(scope="module")
