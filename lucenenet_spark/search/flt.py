@@ -27,10 +27,15 @@ Pinned spec (documented deltas from the reference):
   order; the surviving clause order IS the float32 summation order.
 
 Scale shape: expansion is driver-side vectorized pandas over the
-cached dictionary (the multi-term expansion path); doc scoring is ONE
-packed scan with ``term IN (variants)`` parquet pushdown decoding
-docids only — no freqs, norms, or positions — then a JVM float32 fold
-per doc and a bounded TakeOrdered. No shuffle wider than the
+cached dictionary (the multi-term expansion path); doc scoring is the
+variants' clause plan on the term-family reader
+(``postings.score_blocks`` with no similarity: ONE packed scan with
+``term IN (variants)`` parquet pushdown, docids only — no freqs, norms
+or positions — each row carrying its clause's boost), then the
+boolean clause-order float32 fold per doc, the searcher's tombstones
+anti-joined, and a bounded TakeOrdered. The scan takes the searcher's
+plan regime: a small variant set reads as one partition and folds
+without an exchange; otherwise no shuffle is wider than the
 |variants|-bounded (docid, cidx) frame.
 """
 
@@ -44,7 +49,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lucenenet_spark.analysis.analyzer import analyze
+from lucenenet_spark.index.postings import drop_deleted, score_blocks
 from lucenenet_spark.search.queries import _levenshtein
+from lucenenet_spark.search.searcher import combine_boolean_frames
 
 MAX_VARIANTS_PER_TERM = 50
 
@@ -124,57 +131,23 @@ def fuzzy_like_this_topk(
     k: int = 10,
 ) -> DataFrame:
     """Top-k (docid, score:float32): Σ boosts of the doc's matching
-    variants, float32-folded in clause order."""
-    from lucenenet_spark.functions.varbyte import delta_decode_docids
-
+    variants, float32-folded in clause order; deleted docs never
+    surface."""
     src = list(dict.fromkeys(t for t, _ in analyze(query_string)))
     variants = _fuzzy_variants(searcher, src, min_similarity, prefix_length)[
         :max_num_terms
     ]
     if not variants:
         return searcher._empty()
-    boost_of: dict[str, list[tuple[int, float]]] = {}
+    # every variant is a SHOULD clause scoring its boost (ignoreTF);
+    # the boolean fold's 1.0f boost multiply is exact
+    plan: dict[str, list[tuple[int, int, float]]] = {}
     for cidx, (t, b, _) in enumerate(variants):
-        boost_of.setdefault(t, []).append((cidx, b))
-    terms = sorted(boost_of)
-
-    blocks = searcher.index.packed.where(F.col("term").isin(terms)).select(
-        "term", "docs_enc"
-    )
-
-    def decode(iterator):
-        for pdf in iterator:
-            frames = []
-            for term, enc in zip(pdf["term"], pdf["docs_enc"]):
-                d = delta_decode_docids(bytes(enc))
-                for cidx, b in boost_of[str(term)]:
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "docid": d,
-                                "cidx": np.int32(cidx),
-                                "score": np.float32(b),
-                            }
-                        )
-                    )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {
-                    "docid": pd.array([], dtype="int64"),
-                    "cidx": pd.array([], dtype="int32"),
-                    "score": pd.array([], dtype="float32"),
-                }
-            )
-
-    pairs = blocks.mapInPandas(decode, schema="docid long, cidx int, score float")
-
-    agg = pairs.groupBy("docid").agg(
-        F.sort_array(F.collect_list(F.struct("cidx", "score"))).alias("cs")
-    )
-    score = F.aggregate(
-        F.col("cs"), F.lit(0.0).cast("float"), lambda a, x: a + x["score"]
-    )
+        plan.setdefault(t, []).append((cidx, 0, b))
+    blocks = searcher._blocks(plan, searcher._term_stats(plan))
+    scored = combine_boolean_frames(score_blocks(blocks, plan, None), 0, 1, 1.0)
     return (
-        agg.select("docid", score.alias("score"))
+        drop_deleted(scored, searcher.tombstones)
         .orderBy(F.col("score").desc(), F.col("docid").asc())
         .limit(k)
     )

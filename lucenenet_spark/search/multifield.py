@@ -28,6 +28,8 @@ from lucenenet_spark.search.searcher import (
     IndexSearcher,
     combine_boolean_frames,
     combine_dismax_frames,
+    explain_boolean,
+    explain_dismax,
 )
 
 
@@ -140,50 +142,14 @@ class MultiFieldSearcher:
         ``scored_docs`` executes (combine_boolean_frames /
         combine_dismax_frames), so the root value is bit-identical to
         the doc's ``search_df`` score."""
-        import numpy as np
-
         if isinstance(query, BooleanQuery):
-            kids, acc = [], np.float32(0.0)
-            ok, n_should = True, 0
-            for c in query.clauses:
-                kn = self.explain(c.query, docid)
-                kn["occur"] = c.occur.value
-                kids.append(kn)
-                if c.occur == Occur.MUST_NOT:
-                    if kn["match"]:
-                        ok = False
-                    continue
-                if c.occur == Occur.MUST and not kn["match"]:
-                    ok = False
-                if kn["match"]:
-                    if c.occur == Occur.SHOULD:
-                        n_should += 1
-                    acc = np.float32(acc + np.float32(kn["value"]))
-            must = [c for c in query.clauses if c.occur == Occur.MUST]
-            required_should = max(
-                query.minimum_number_should_match, 0 if must else 1
+            return explain_boolean(
+                query, [self.explain(c.query, docid) for c in query.clauses]
             )
-            match = ok and n_should >= required_should
-            val = float(np.float32(acc * np.float32(query.boost))) if match else 0.0
-            return {"type": "boolean", "match": match, "value": val, "clauses": kids}
         if isinstance(query, DisjunctionMaxQuery):
-            kids = [self.explain(d, docid) for d in query.disjuncts]
-            matched = [k for k in kids if k["match"]]
-            if not matched:
-                return {"type": "dismax", "match": False, "value": 0.0,
-                        "clauses": kids}
-            mx, acc = np.float32(0.0), np.float32(0.0)
-            for k in matched:
-                s = np.float32(k["value"])
-                acc = np.float32(acc + s)
-                if s > mx:
-                    mx = s
-            val = np.float32(
-                (mx + np.float32(acc - mx) * np.float32(query.tie_breaker))
-                * np.float32(query.boost)
+            return explain_dismax(
+                query, [self.explain(d, docid) for d in query.disjuncts]
             )
-            return {"type": "dismax", "match": True, "value": float(val),
-                    "tie_breaker": query.tie_breaker, "clauses": kids}
         out = self.searchers[self._field_of(query)].explain(query, docid)
         out["field"] = self._field_of(query)
         return out

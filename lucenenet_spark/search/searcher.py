@@ -10,16 +10,19 @@ Physical shape per node (the parallel plan; see "Plan regime" below):
 
 - **TermQuery** — scan packed posting blocks filtered on ``term``
   (parquet predicate pushdown + row-group min/max = the BlockTree
-  dictionary seek), unpack delta+varbyte blocks and score in one
-  ``mapInPandas`` — zero shuffles; a single-term top-k is
-  scan → UDF → TakeOrderedAndProject.
+  dictionary seek), block-max prune them when the term is long, then
+  decode and score them as a one-clause plan of the term-family reader
+  (``postings.score_blocks``, one ``mapInPandas``) — zero shuffles; a
+  single-term top-k is scan → UDF → TakeOrderedAndProject.
 - **BooleanQuery** — clause DataFrames union-all'd then hash-aggregated
   on docid (Spark's partial/final hash agg *is* the reference's
   bucket-table bulk scorer, ``Search/BooleanScorer.cs:136``):
   MUST = count(must-matched) == n_must (ConjunctionScorer),
   SHOULD = sum with optional minShouldMatch (DisjunctionSumScorer /
   MinShouldMatchSumScorer), MUST_NOT = left_anti join (ReqExclScorer).
-  Clause scores are folded in clause-index order in float32 — the
+  Every TermQuery clause, prohibited ones included, rides ONE scan of
+  the term-family reader under the query's clause plan. Clause scores
+  are folded in clause-index order in float32 — the
   pinned deterministic summation that makes results partition-count
   invariant (the reference analog: TestSameScoresWithThreads). The
   fold runs JVM-side: Spark's FloatType Add/Multiply is Java float
@@ -38,7 +41,9 @@ Physical shape per node (the parallel plan; see "Plan regime" below):
   the term_stats dictionary DataFrame (a broadcast-size predicate
   scan), then rewritten to the boolean pipeline
   (``Search/MultiTermQuery.cs`` rewrite); the constant-score rewrite
-  reads the docid set with one ``distinct``.
+  reads its terms through the term-family reader with no similarity
+  (docids only, no freqs or norms) and keeps the docid set with one
+  ``distinct``.
 
 Plan regime. The reference ``IndexSearcher`` searches on the calling
 thread unless the caller hands it an executor (``Search/IndexSearcher.cs``);
@@ -90,11 +95,7 @@ from lucenenet_spark.functions.sloppy import (
     sloppy_freq_2slot_encoded,
     sloppy_phrase_freq,
 )
-from lucenenet_spark.functions.varbyte import (
-    BLOCK_SIZE as _BLOCK_SIZE,
-    decode_freqs,
-    delta_decode_docids,
-)
+from lucenenet_spark.functions.varbyte import BLOCK_SIZE as _BLOCK_SIZE
 from lucenenet_spark.index.builder import InvertedIndex
 from lucenenet_spark.index.postings import (
     KEY_SHIFT,
@@ -102,6 +103,7 @@ from lucenenet_spark.index.postings import (
     drop_deleted,
     positional_groups,
     read_blocks,
+    score_blocks,
     single_partition,
 )
 from lucenenet_spark.search.queries import (
@@ -351,14 +353,9 @@ class IndexSearcher:
             if isinstance(sub, TermQuery):
                 if sub.term not in stats or sub.term not in tfs:
                     return {"type": "term", "term": sub.term, "match": False, "value": 0.0}
-                df_, ttf_ = stats[sub.term]
-                w = sim.weight(
-                    df_, max_doc, sub.boost,
-                    ttf=ttf_, sttf=self.index.sum_total_term_freq,
-                )
+                df_ = stats[sub.term][0]
+                w = self._term_weight(sub.term, sub.boost, stats)
                 val = leaf_value(float(tfs[sub.term]), w)
-                # (ttf/sttf reach the weight so LM/DFR explain agrees
-                # with their scorers bit-for-bit)
                 out = {
                     "type": "term", "term": sub.term, "match": True,
                     "value": val, "freq": float(tfs[sub.term]),
@@ -404,47 +401,9 @@ class IndexSearcher:
                     "inner": kn,
                 }
             if isinstance(sub, DisjunctionMaxQuery):
-                kids = [node(d) for d in sub.disjuncts]
-                matched = [k for k in kids if k["match"]]
-                if not matched:
-                    return {"type": "dismax", "match": False, "value": 0.0,
-                            "clauses": kids}
-                mx, acc = np.float32(0.0), np.float32(0.0)
-                for k in matched:  # disjunct order == cidx order
-                    s = np.float32(k["value"])
-                    acc = np.float32(acc + s)
-                    if s > mx:
-                        mx = s
-                val = np.float32(
-                    (mx + np.float32(acc - mx) * np.float32(sub.tie_breaker))
-                    * np.float32(sub.boost)
-                )
-                return {"type": "dismax", "match": True, "value": float(val),
-                        "tie_breaker": sub.tie_breaker, "clauses": kids}
+                return explain_dismax(sub, [node(d) for d in sub.disjuncts])
             if isinstance(sub, BooleanQuery):
-                kids, acc = [], np.float32(0.0)
-                ok, n_should = True, 0
-                for c in sub.clauses:
-                    kn = node(c.query)
-                    kn["occur"] = c.occur.value
-                    kids.append(kn)
-                    if c.occur == Occur.MUST_NOT:
-                        if kn["match"]:
-                            ok = False
-                        continue
-                    if c.occur == Occur.MUST and not kn["match"]:
-                        ok = False
-                    if kn["match"]:
-                        if c.occur == Occur.SHOULD:
-                            n_should += 1
-                        acc = np.float32(acc + np.float32(kn["value"]))
-                must = [c for c in sub.clauses if c.occur == Occur.MUST]
-                required_should = max(
-                    sub.minimum_number_should_match, 0 if must else 1
-                )
-                match = ok and n_should >= required_should
-                val = float(np.float32(acc * np.float32(sub.boost))) if match else 0.0
-                return {"type": "boolean", "match": match, "value": val, "clauses": kids}
+                return explain_boolean(sub, [node(c.query) for c in sub.clauses])
             raise NotImplementedError(f"explain: {type(sub).__name__}")
 
         return node(q)
@@ -541,6 +500,17 @@ class IndexSearcher:
     def _empty(self) -> DataFrame:
         return self.index.docs.sparkSession.createDataFrame([], SCORED)
 
+    def _term_weight(self, term: str, boost: float, stats):
+        """The similarity's weight of ``term`` at ``boost`` from the
+        query's frozen ``stats``: df, ttf and the index's
+        sumTotalTermFreq all reach it, so the LM/DFR weights of search
+        and explain agree bit for bit."""
+        df_, ttf_ = stats[term]
+        return self.sim.weight(
+            df_, self.index.max_doc, boost,
+            ttf=ttf_, sttf=self.index.sum_total_term_freq,
+        )
+
     def _blocks(self, terms, stats) -> DataFrame:
         """The packed blocks of ``terms`` in the query's plan regime:
         ONE partition when ``stats``, the whole query's term stats, put
@@ -569,10 +539,11 @@ class IndexSearcher:
                 # rewrite target of prefix/wildcard/range) needs only
                 # the docID *set* — one scan + distinct, never N
                 # per-term scans or any scoring
-                terms = [t for t in flat_terms if t in stats]
-                if not terms:
+                plan = {t: [(0, 0, q.boost)] for t in flat_terms if t in stats}
+                if not plan:
                     return None
-                return self._docids_for_terms(terms, stats).select("docid", score_col)
+                docids = score_blocks(self._blocks(plan, stats), plan, None)
+                return docids.selectExpr("docid").distinct().select("docid", score_col)
             inner = self._compile(q.query, stats, None)
             if inner is None:
                 return None
@@ -593,14 +564,7 @@ class IndexSearcher:
     ) -> DataFrame | None:
         if term not in stats:
             return None
-        df_, ttf_ = stats[term]
-        sim = self.sim
-        weight = sim.weight(
-            df_, self.index.max_doc, boost,
-            ttf=ttf_, sttf=self.index.sum_total_term_freq,
-        )
-        cache = self._cache
-
+        weight = self._term_weight(term, boost, stats)
         blocks = self._blocks([term], stats)
         # pruning certifies its threshold from block metadata that
         # still counts deleted docs — rank-safety requires liveDocs-free
@@ -611,39 +575,12 @@ class IndexSearcher:
             self.prune
             and top_k is not None
             and self.tombstones is None
-            and getattr(sim, "name", "") == "bm25"
-            and df_ > self.prune_min_df
+            and getattr(self.sim, "name", "") == "bm25"
+            and stats[term][0] > self.prune_min_df
         ):
-            blocks = self._prune_blocks(blocks, weight, cache, top_k)
-        # project before the UDF so parquet column pruning skips the
-        # positions payload (the widest column) entirely
-        blocks = blocks.select("docs_enc", "freqs_enc", "norms_enc")
-
-        w = float(weight)
-
-        def unpack_score(iterator):
-            wf = np.float32(w)
-            for pdf in iterator:
-                # accumulate numpy per block, ONE DataFrame per Arrow
-                # batch — a per-block pd.DataFrame costs ~50µs of
-                # constructor overhead and a head term at sf1 spans
-                # ~15k blocks
-                ds, ss = [], []
-                for docs_enc, freqs_enc, norms_enc in zip(
-                    pdf["docs_enc"], pdf["freqs_enc"], pdf["norms_enc"]
-                ):
-                    d = delta_decode_docids(bytes(docs_enc))
-                    f = decode_freqs(bytes(freqs_enc)).astype(np.float32)
-                    n = np.frombuffer(bytes(norms_enc), dtype=np.uint8)
-                    ds.append(d)
-                    ss.append(sim.score(f, n, wf))
-                yield pd.DataFrame(
-                    {"docid": np.concatenate(ds), "score": np.concatenate(ss)}
-                ) if ds else pd.DataFrame(
-                    {"docid": pd.array([], dtype="int64"), "score": pd.array([], dtype="float32")}
-                )
-
-        return blocks.mapInPandas(unpack_score, schema=SCORED)
+            blocks = self._prune_blocks(blocks, weight, self._cache, top_k)
+        plan = {term: [(0, 0, weight)]}
+        return score_blocks(blocks, plan, self.sim).selectExpr("docid", "score")
 
     def _prune_blocks(self, blocks: DataFrame, weight, cache, k: int) -> DataFrame:
         """Block-max pruning (rank-safe, WAND-flavored; an addition the
@@ -693,72 +630,6 @@ class IndexSearcher:
             .drop("__theta", "__n")
         )
 
-    # ------------------------------------------- multi-term single scan
-    def _docids_for_terms(self, terms: list[str], stats) -> DataFrame:
-        """Distinct docIDs matching ANY of the terms — ONE scan of the
-        packed postings (parquet `term IN (...)` pushdown), decode
-        docids only (no freqs/norms/positions), then distinct."""
-        blocks = self._blocks(terms, stats).select("docs_enc")
-
-        def decode(iterator):
-            for pdf in iterator:
-                outs = [delta_decode_docids(bytes(e)) for e in pdf["docs_enc"]]
-                yield pd.DataFrame(
-                    {"docid": np.concatenate(outs) if outs else np.empty(0, np.int64)}
-                )
-
-        return blocks.mapInPandas(decode, schema="docid long").distinct()
-
-    def _multi_term_clause_scores(
-        self, term_plan: dict[str, list[tuple[int, int, float]]], stats
-    ) -> DataFrame:
-        """Score ALL TermQuery clauses of a boolean in ONE postings
-        scan. ``term_plan``: term -> [(cidx, kind, weight)] with kind
-        1=MUST, 0=SHOULD, -1=MUST_NOT (prohibited terms ride the same
-        scan — their rows only flag the doc, weight 0). One input block
-        row fans out once per clause referencing its term. This is the
-        distributed analog of BooleanScorer's single pass over all
-        subscorers (Search/BooleanScorer.cs) — without it a k-clause
-        query costs k scans of the index."""
-        sim = self.sim
-        plan = {t: [(int(c), int(m), float(w)) for c, m, w in v] for t, v in term_plan.items()}
-        empty = pd.DataFrame(
-            {"docid": pd.array([], dtype="int64"),
-             "cidx": pd.array([], dtype="int32"),
-             "kind": pd.array([], dtype="int32"),
-             "score": pd.array([], dtype="float32")}
-        )
-        schema = "docid long, cidx int, kind int, score float"
-
-        blocks = self._blocks(plan, stats).select(
-            "term", "docs_enc", "freqs_enc", "norms_enc"
-        )
-
-        def unpack(iterator):
-            for pdf in iterator:
-                # numpy accumulation, ONE DataFrame per Arrow batch
-                # (not per block — see _term_scores.unpack_score)
-                ds, cs, ks, ss = [], [], [], []
-                for term, de, fe, ne in zip(
-                    pdf["term"], pdf["docs_enc"], pdf["freqs_enc"], pdf["norms_enc"]
-                ):
-                    d = delta_decode_docids(bytes(de))
-                    f = decode_freqs(bytes(fe)).astype(np.float32)
-                    n = np.frombuffer(bytes(ne), dtype=np.uint8)
-                    for cidx, kind, w in plan[term]:
-                        ds.append(d)
-                        ss.append(sim.score(f, n, np.float32(w)))
-                        cs.append(np.full(d.size, cidx, dtype=np.int32))
-                        ks.append(np.full(d.size, kind, dtype=np.int32))
-                yield pd.DataFrame(
-                    {"docid": np.concatenate(ds),
-                     "cidx": np.concatenate(cs),
-                     "kind": np.concatenate(ks),
-                     "score": np.concatenate(ss)}
-                ) if ds else empty
-
-        return blocks.mapInPandas(unpack, schema=schema)
-
     # ----------------------------------------------------- boolean
     def _boolean(self, q: BooleanQuery, stats) -> DataFrame | None:
         if len(q.clauses) > MAX_CLAUSE_COUNT:
@@ -790,12 +661,8 @@ class IndexSearcher:
                     if kind:
                         return None  # unmatched MUST ⇒ empty result
                     continue
-                df_, ttf_ = stats[c.query.term]
-                w = self.sim.weight(
-                    df_, self.index.max_doc, c.query.boost,
-                    ttf=ttf_, sttf=self.index.sum_total_term_freq,
-                )
-                term_plan.setdefault(c.query.term, []).append((cidx, kind, float(w)))
+                w = self._term_weight(c.query.term, c.query.boost, stats)
+                term_plan.setdefault(c.query.term, []).append((cidx, kind, w))
                 continue
             sub = self._compile(c.query, stats, None)
             if sub is None:
@@ -811,7 +678,8 @@ class IndexSearcher:
                 )
             )
         if term_plan:
-            frames.insert(0, self._multi_term_clause_scores(term_plan, stats))
+            blocks = self._blocks(term_plan, stats)
+            frames.insert(0, score_blocks(blocks, term_plan, self.sim))
         if not frames:
             return None
         pos = frames[0]
@@ -846,22 +714,16 @@ class IndexSearcher:
             if isinstance(d, TermQuery):
                 if d.term not in stats:
                     continue
-                df_, ttf_ = stats[d.term]
-                w = self.sim.weight(
-                    df_, self.index.max_doc, d.boost,
-                    ttf=ttf_, sttf=self.index.sum_total_term_freq,
-                )
-                term_plan.setdefault(d.term, []).append((cidx, 0, float(w)))
+                w = self._term_weight(d.term, d.boost, stats)
+                term_plan.setdefault(d.term, []).append((cidx, 0, w))
                 continue
             sub = self._compile(d, stats, None)
             if sub is not None:
                 frames.append(sub.select("docid", F.lit(cidx).alias("cidx"), "score"))
         if term_plan:
+            blocks = self._blocks(term_plan, stats)
             frames.insert(
-                0,
-                self._multi_term_clause_scores(term_plan, stats).select(
-                    "docid", "cidx", "score"
-                ),
+                0, score_blocks(blocks, term_plan, self.sim).selectExpr("docid", "cidx", "score")
             )
         if not frames:
             return None
@@ -1109,6 +971,52 @@ def combine_dismax_frames(pos: DataFrame, tie_breaker: float, boost: float) -> D
             f" * {_f32_sql(boost)} AS score",
         )
     )
+
+
+def explain_boolean(q: BooleanQuery, kids: list[dict]) -> dict:
+    """Explain node of boolean ``q`` from its clauses' explain nodes
+    ``kids`` (clause order): the match rule and the clause-order float32
+    fold that :func:`combine_boolean_frames` executes. Shared by the
+    single-index and the cross-field explain."""
+    acc = np.float32(0.0)
+    ok, n_should = True, 0
+    for c, kn in zip(q.clauses, kids):
+        kn["occur"] = c.occur.value
+        if c.occur == Occur.MUST_NOT:
+            if kn["match"]:
+                ok = False
+            continue
+        if c.occur == Occur.MUST and not kn["match"]:
+            ok = False
+        if kn["match"]:
+            if c.occur == Occur.SHOULD:
+                n_should += 1
+            acc = np.float32(acc + np.float32(kn["value"]))
+    must = any(c.occur == Occur.MUST for c in q.clauses)
+    required_should = max(q.minimum_number_should_match, 0 if must else 1)
+    match = ok and n_should >= required_should
+    val = float(np.float32(acc * np.float32(q.boost))) if match else 0.0
+    return {"type": "boolean", "match": match, "value": val, "clauses": kids}
+
+
+def explain_dismax(q: DisjunctionMaxQuery, kids: list[dict]) -> dict:
+    """Explain node of dismax ``q`` from its disjuncts' explain nodes
+    ``kids`` (disjunct order == cidx order): max + tie*(sum-max) in
+    float32, as :func:`combine_dismax_frames` executes it."""
+    matched = [k for k in kids if k["match"]]
+    if not matched:
+        return {"type": "dismax", "match": False, "value": 0.0, "clauses": kids}
+    mx, acc = np.float32(0.0), np.float32(0.0)
+    for k in matched:
+        s = np.float32(k["value"])
+        acc = np.float32(acc + s)
+        if s > mx:
+            mx = s
+    val = np.float32(
+        (mx + np.float32(acc - mx) * np.float32(q.tie_breaker)) * np.float32(q.boost)
+    )
+    return {"type": "dismax", "match": True, "value": float(val),
+            "tie_breaker": q.tie_breaker, "clauses": kids}
 
 
 def _pure_term_disjunction(q: Query) -> list[str] | None:

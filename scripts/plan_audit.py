@@ -40,12 +40,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from lucenenet_spark.index import postings
 from lucenenet_spark.index.builder import InvertedIndex
 from lucenenet_spark.search import spans as sp
+from lucenenet_spark.search.flt import fuzzy_like_this_topk
 from lucenenet_spark.search.queries import (
     BooleanQuery,
     DisjunctionMaxQuery,
     FuzzyQuery,
     Occur,
     PhraseQuery,
+    PrefixQuery,
     TermQuery,
 )
 from lucenenet_spark.search.searcher import IndexSearcher
@@ -80,6 +82,8 @@ def shapes(searcher: IndexSearcher) -> dict[str, tuple[str, int, int, int]]:
             PhraseQuery(phrase_terms=("return", "value")), 10
         ),
         "fuzzy_osa": lambda: searcher.search_df(FuzzyQuery(term="return"), 10),
+        "prefix": lambda: searcher.search_df(PrefixQuery(prefix="ret"), 10),
+        "flt_topk": lambda: fuzzy_like_this_topk(searcher, "retrn valu", 0.4, 0, 10, 10),
         "span_near": lambda: sp.span_query(
             searcher,
             sp.SpanNearQuery(

@@ -17,6 +17,7 @@ from lucenenet_spark.search.flt import (
 )
 from lucenenet_spark.search.queries import _levenshtein
 from lucenenet_spark.search.searcher import IndexSearcher
+from lucenenet_spark.streaming import append_batch, delete_docs, load_live
 
 
 @pytest.fixture(scope="module")
@@ -109,10 +110,12 @@ def test_max_num_terms_cap(flt_searcher):
     ]
 
 
-def test_topk_is_clause_order_f32_fold(flt_searcher):
-    clauses = fuzzy_like_this_terms(flt_searcher, "tabel merge", 0.4, 0, 10).collect()
+def _expected_topk(searcher, query_string, deleted=()):
+    """Top-10 (docid, float32 score) from first principles: the
+    rewrite's boosts summed per doc in clause order, minus ``deleted``."""
+    clauses = fuzzy_like_this_terms(searcher, query_string, 0.4, 0, 10).collect()
     boosts = [(r["cidx"], r["variant"], np.float32(r["boost"])) for r in clauses]
-    post = flt_searcher.index.postings().select("docid", "term").collect()
+    post = searcher.index.postings().select("docid", "term").collect()
     docs_of = {}
     for r in post:
         docs_of.setdefault(r["term"], set()).add(r["docid"])
@@ -120,9 +123,41 @@ def test_topk_is_clause_order_f32_fold(flt_searcher):
     for cidx, term, b in sorted(boosts):
         for d in docs_of.get(term, ()):
             expect[d] = np.float32(expect.get(d, np.float32(0.0)) + b)
+    live = [p for p in expect.items() if p[0] not in deleted]
+    return sorted(live, key=lambda p: (-p[1], p[0]))[:10]
+
+
+def test_topk_is_clause_order_f32_fold(flt_searcher):
     got = fuzzy_like_this_topk(flt_searcher, "tabel merge", 0.4, 0, 10, 10).collect()
-    want = sorted(expect.items(), key=lambda p: (-p[1], p[0]))[:10]
+    want = _expected_topk(flt_searcher, "tabel merge")
     assert [(r["docid"], np.float32(r["score"])) for r in got] == want
+
+
+def test_topk_skips_tombstoned_docs(spark, tmp_path):
+    """On a live index with a delete, the deleted doc leaves the top-k
+    and every survivor keeps its clause-order float32 bits (maxDoc and
+    the dfs still count the deleted doc, as until a merge)."""
+    rows = [
+        ("r", "a", "c", "table merge batch"),
+        ("r", "b", "c", "tables merge"),
+        ("r", "d", "c", "cable stable batch"),
+        ("r", "e", "c", "merge sort"),
+    ]
+    path = str(tmp_path / "live")
+    append_batch(
+        spark.createDataFrame(rows, "repo string, path string, commit string, content string"),
+        path, CorpusSpec(order_cols=("repo", "path", "commit")), batch_id=0,
+    )
+    victim = _expected_topk(IndexSearcher(load_live(spark, path)[0]), "tabel merge")[0][0]
+    delete_docs(spark, path, [victim])
+    idx, tombs = load_live(spark, path)
+    s = IndexSearcher(idx, tombstones=tombs)
+    got = fuzzy_like_this_topk(s, "tabel merge", 0.4, 0, 10, 10).collect()
+    want = _expected_topk(s, "tabel merge", deleted={victim})
+    assert len(want) == 2
+    assert [(r["docid"], np.float32(r["score"]).tobytes()) for r in got] == [
+        (d, v.tobytes()) for d, v in want
+    ]
 
 
 def test_per_source_variant_cap(spark):

@@ -24,6 +24,7 @@ from lucenenet_spark.index.postings import BUCKET_DOCS, estimated_blocks, single
 from lucenenet_spark.oracle import OracleSearcher
 from lucenenet_spark.search import parse_query
 from lucenenet_spark.search import spans as sp
+from lucenenet_spark.search.flt import fuzzy_like_this_topk
 from lucenenet_spark.search.payloads import payload_near_query, span_near_payload_check
 from lucenenet_spark.search.queries import (
     BooleanQuery,
@@ -31,6 +32,7 @@ from lucenenet_spark.search.queries import (
     MultiPhraseQuery,
     Occur,
     PhraseQuery,
+    PrefixQuery,
     TermQuery,
 )
 from lucenenet_spark.search.searcher import IndexSearcher
@@ -49,6 +51,9 @@ POSITIONAL = ("phrase", "sloppy_phrase", "multi_phrase", "span_near", "span_quer
 EXPECTED = {
     "term": (0, 1),
     "bool_and": (1, 1),
+    "dismax": (1, 1),
+    "prefix": (1, 1),
+    "flt_topk": (1, 1),
     "phrase": (1, 1),
     "sloppy_phrase": (1, 1),
     "multi_phrase": (1, 1),
@@ -113,6 +118,15 @@ def _frames(s: IndexSearcher) -> dict:
             ),
             10,
         ),
+        "dismax": s.search_df(
+            DisjunctionMaxQuery(
+                disjuncts=(TermQuery(term="return"), TermQuery(term="value")),
+                tie_breaker=0.1,
+            ),
+            10,
+        ),
+        "prefix": s.search_df(PrefixQuery(prefix="re"), 10),
+        "flt_topk": fuzzy_like_this_topk(s, "retrn valu", 0.4, 0, 10, 10),
         "phrase": s.search_df(PhraseQuery(phrase_terms=("return", "value")), 10),
         "sloppy_phrase": s.search_df(
             PhraseQuery(phrase_terms=("return", "value"), slop=2), 10
