@@ -27,13 +27,14 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from lucenenet_spark.index.builder import BUCKET_DOCS, InvertedIndex
+from lucenenet_spark.index.builder import InvertedIndex
 from lucenenet_spark.index.checkpoint import (
     _shard_counters,
     _write_manifest_atomic,
     next_doc_base,
     read_manifest,
 )
+from lucenenet_spark.index.postings import BUCKET_DOCS
 
 
 def add_indexes(

@@ -54,8 +54,7 @@ from lucenenet_spark.analysis.ngrams import edge_field_length, edge_ngrams
 from lucenenet_spark.analysis.shingles import add_shingles
 from lucenenet_spark.analysis.synonyms import inject_synonyms
 from lucenenet_spark.functions.smallfloat import norm_byte_from_length
-from lucenenet_spark.functions.varbyte import BLOCK_SIZE
-from lucenenet_spark.index.postings import BUCKET_DOCS, read_blocks, unpack_postings
+from lucenenet_spark.index.postings import PACKED_SCHEMA, pack_blocks, read_postings
 
 
 @dataclass(frozen=True)
@@ -268,33 +267,6 @@ _EXCLUSIVE_FLAGS = (
 )
 
 
-PACKED_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("bucket", T.LongType()),
-        # first_docid - bucket*BUCKET_DOCS: unique per (term, bucket)
-        # even when two build partitions contribute blocks to the same
-        # bucket (docid sets are disjoint across partitions)
-        T.StructField("block_id", T.IntegerType()),
-        T.StructField("first_docid", T.LongType()),
-        T.StructField("last_docid", T.LongType()),
-        T.StructField("count", T.IntegerType()),
-        T.StructField("max_freq", T.IntegerType()),
-        T.StructField("sum_freq", T.LongType()),  # block ttf partial
-        T.StructField("max_norm", T.IntegerType()),
-        T.StructField("min_norm", T.IntegerType()),
-        T.StructField("docs_enc", T.BinaryType()),
-        T.StructField("freqs_enc", T.BinaryType()),
-        T.StructField("norms_enc", T.BinaryType()),
-        T.StructField("positions_enc", T.BinaryType()),
-        # float32 payload per position, positions order; NULL when the
-        # index stores no payloads (DOCS_AND_FREQS_AND_POSITIONS vs
-        # ..._AND_PAYLOADS, FieldInfo.cs:355)
-        T.StructField("payloads_enc", T.BinaryType()),
-    ]
-)
-
-
 def _ordered_with_offsets(
     corpus: DataFrame, spec: CorpusSpec, partitions: int | None = None
 ) -> tuple[DataFrame, dict[int, int]]:
@@ -417,8 +389,9 @@ def _segment_schema(meta_fields: list[T.StructField]) -> T.StructType:
 class _SegmentWriter:
     """Partition-local in-RAM segment (the DWPT analog): accumulates
     per-term postings across the partition's Arrow batches, then
-    flushes sorted, bucket-split, ≤128-doc delta+varbyte blocks plus
-    the doc-level rows — all inside one Python stage, no shuffle."""
+    flushes them through the codec's block packer
+    (:func:`~lucenenet_spark.index.postings.pack_blocks`) plus the
+    doc-level rows — all inside one Python stage, no shuffle."""
 
     def __init__(self, spec: CorpusSpec, meta_cols: list[str]):
         # flag combinations were checked by spec.validate() on the driver
@@ -582,74 +555,13 @@ class _SegmentWriter:
             self.meta[c].extend(metas[c])
 
     def flush(self) -> pd.DataFrame:
-        from lucenenet_spark.functions.varbyte import (
-            docid_deltas,
-            position_stream,
-            vbyte_encode_concat,
+        # a term's payload list stays empty without a payload analyzer
+        out = pack_blocks(
+            (term, dl, fl_, nl, pl, yl or None)
+            for term, (dl, fl_, nl, pl, yl) in self.terms.items()
         )
-
-        cols: dict[str, list] = {f.name: [] for f in PACKED_SCHEMA.fields}
-        # raw uint64 streams per block; ONE global vbyte pass at the
-        # end (vbyte_encode_concat) replaces 3 numpy-encode calls per
-        # block — wire-identical, but the per-call fixed cost across
-        # tens of thousands of small blocks was a measurable slice of
-        # the sf1 build
-        doc_streams: list[np.ndarray] = []
-        freq_streams: list[np.ndarray] = []
-        pos_streams: list[np.ndarray] = []
-        with_payloads = self.payload_delim is not None
-        for term, (dl, fl_, nl, pl, yl) in self.terms.items():
-            d = np.asarray(dl, dtype=np.int64)
-            f = np.asarray(fl_, dtype=np.int64)
-            n = np.asarray(nl, dtype=np.int64)
-            p, y = pl, yl
-            if d.size > 1 and not np.all(np.diff(d) > 0):
-                order = np.argsort(d, kind="stable")
-                d, f, n = d[order], f[order], n[order]
-                p = [pl[j] for j in order]
-                if with_payloads:
-                    y = [yl[j] for j in order]
-            buckets = d // BUCKET_DOCS
-            # bucket-run starts, then ≤128-doc blocks within each run
-            run_starts = np.concatenate(
-                ([0], np.flatnonzero(np.diff(buckets)) + 1, [d.size])
-            )
-            for r in range(len(run_starts) - 1):
-                r0, r1 = int(run_starts[r]), int(run_starts[r + 1])
-                bucket = int(buckets[r0])
-                for b0 in range(r0, r1, BLOCK_SIZE):
-                    b1 = min(b0 + BLOCK_SIZE, r1)
-                    db, fb, nb = d[b0:b1], f[b0:b1], n[b0:b1]
-                    cols["term"].append(term)
-                    cols["bucket"].append(bucket)
-                    cols["block_id"].append(int(db[0] - bucket * BUCKET_DOCS))
-                    cols["first_docid"].append(int(db[0]))
-                    cols["last_docid"].append(int(db[-1]))
-                    cols["count"].append(int(db.size))
-                    cols["max_freq"].append(int(fb.max()))
-                    cols["sum_freq"].append(int(fb.sum()))
-                    cols["max_norm"].append(int(nb.max()))
-                    # norm of the doc(s) attaining max_freq can be
-                    # anywhere in [min_norm, max_norm]; min_norm feeds
-                    # the certified lower bound for rank-safe pruning
-                    cols["min_norm"].append(int(nb.min()))
-                    doc_streams.append(docid_deltas(db))
-                    freq_streams.append(fb.astype(np.uint64))
-                    cols["norms_enc"].append(nb.astype(np.uint8).tobytes())
-                    pos_streams.append(position_stream(p[b0:b1]))
-                    cols["payloads_enc"].append(
-                        np.concatenate(
-                            [np.asarray(v, dtype=np.float32) for v in y[b0:b1]]
-                        ).tobytes()
-                        if with_payloads
-                        else None
-                    )
-        cols["docs_enc"] = vbyte_encode_concat(doc_streams)
-        cols["freqs_enc"] = vbyte_encode_concat(freq_streams)
-        cols["positions_enc"] = vbyte_encode_concat(pos_streams)
-        n_blocks = len(cols["term"])
+        n_blocks = len(out)
         n_docs = len(self.doc_ids)
-        out = pd.DataFrame(cols)
         out["docid"] = pd.array([None] * n_blocks, dtype="Int64")
         out["field_length"] = pd.array([None] * n_blocks, dtype="Int32")
         out["norm"] = pd.array([None] * n_blocks, dtype="Int32")
@@ -735,14 +647,12 @@ class InvertedIndex:
     def avgdl_inputs(self) -> tuple[int, int]:
         return self.sum_total_term_freq, self.max_doc
 
-    def postings(self, terms=None, payloads: bool = False) -> DataFrame:
+    def postings(self, terms=None, docids=None, payloads: bool = False) -> DataFrame:
         """Flat (docid, term, freq, positions, norm[, payloads]) rows of
-        ``terms`` (every term when None). The ``term IN`` filter sits
-        on the packed frame, BELOW the decode barrier, so only the
-        named posting lists are read and decoded
-        (:func:`~lucenenet_spark.index.postings.unpack_postings`)."""
-        packed = self.packed if terms is None else read_blocks(self.packed, terms)
-        return unpack_postings(packed, payloads=payloads)
+        ``terms`` and ``docids`` (every one when None), decoding only the
+        blocks that can hold them
+        (:func:`~lucenenet_spark.index.postings.read_postings`)."""
+        return read_postings(self.packed, terms, docids, payloads)
 
     def cache(self) -> "InvertedIndex":
         # docs is a cheap filter over the already-persisted flat scan

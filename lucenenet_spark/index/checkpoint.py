@@ -41,13 +41,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucenenet_spark.index.builder import (
-    BUCKET_DOCS,
     CorpusSpec,
     InvertedIndex,
     build_index,
     read_index,
     read_segments,
 )
+from lucenenet_spark.index.postings import BUCKET_DOCS
 
 # docid-range width of one shard; a multiple of the packing bucket so
 # posting blocks never straddle shards

@@ -9,8 +9,9 @@ reference runs continuously in the background
 (``Index/TieredMergePolicy.cs:308``, ``SegmentMerger.cs:89-121``):
 
 - reads every committed shard, drops tombstoned docs from both the
-  docs table and the postings (unpack → filter → repack, the merge-
-  time equivalent of applying liveDocs),
+  docs table and the postings (unpack → filter → repack through the
+  build's own block packer, payloads included — the merge-time
+  equivalent of applying liveDocs),
 - rewrites the result as ONE shard (id = max+1) with recomputed
   corpus stats (docCount and sumTotalTermFreq now exclude deletions,
   exactly like a Lucene merge; docids are NOT remapped — they stay
@@ -29,79 +30,19 @@ import os
 import shutil
 import time
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from lucenenet_spark.functions.varbyte import (
-    BLOCK_SIZE,
-    delta_encode_docids,
-    encode_freqs,
-    encode_positions,
-)
 from lucenenet_spark.index.builder import (
-    BUCKET_DOCS,
-    PACKED_SCHEMA,
     index_segments,
     read_segments,
     split_segments,
-    unpack_postings,
 )
 from lucenenet_spark.index.checkpoint import (
     _shard_counters,
     _write_manifest_atomic,
     read_manifest,
 )
-from lucenenet_spark.index.postings import drop_deleted
-
-
-def repack_postings(flat: DataFrame) -> DataFrame:
-    """(docid, term, freq, positions, norm) rows -> packed blocks.
-    Shuffles on (term, bucket) — bounded groups by construction, the
-    same skew guarantee as the build path; acceptable for a maintenance
-    job that runs rarely."""
-
-    def pack(key, pdf):
-        term, bucket = key
-        pdf = pdf.sort_values("docid")
-        d = pdf["docid"].to_numpy(dtype=np.int64)
-        f = pdf["freq"].to_numpy(dtype=np.int64)
-        n = pdf["norm"].to_numpy(dtype=np.int64)
-        pos = list(pdf["positions"])
-        rows = []
-        for b0 in range(0, len(d), BLOCK_SIZE):
-            b1 = min(b0 + BLOCK_SIZE, len(d))
-            db, fb, nb = d[b0:b1], f[b0:b1], n[b0:b1]
-            rows.append(
-                {
-                    "term": term,
-                    "bucket": int(bucket),
-                    "block_id": int(db[0] - bucket * BUCKET_DOCS),
-                    "first_docid": int(db[0]),
-                    "last_docid": int(db[-1]),
-                    "count": int(db.size),
-                    "max_freq": int(fb.max()),
-                    "sum_freq": int(fb.sum()),
-                    "max_norm": int(nb.max()),
-                    "min_norm": int(nb.min()),
-                    "docs_enc": delta_encode_docids(db),
-                    "freqs_enc": encode_freqs(fb),
-                    "norms_enc": nb.astype(np.uint8).tobytes(),
-                    "positions_enc": encode_positions(pos[b0:b1]),
-                    # compaction serves the streaming/NRT path, which
-                    # has no payload analyzer; re-packed blocks carry
-                    # the no-payloads marker
-                    "payloads_enc": None,
-                }
-            )
-        return pd.DataFrame(rows, columns=[x.name for x in PACKED_SCHEMA.fields])
-
-    return (
-        flat.withColumn("bucket", (F.col("docid") / F.lit(BUCKET_DOCS)).cast("long"))
-        .groupBy("term", "bucket")
-        .applyInPandas(pack, schema=PACKED_SCHEMA)
-    )
+from lucenenet_spark.index.postings import _unpack, drop_deleted, repack_postings
 
 
 def select_merge_candidates(
@@ -144,7 +85,7 @@ def compact_shards(
     tpath = os.path.join(path, "tombstones")
     tombs = spark.read.parquet(tpath) if os.path.exists(tpath) else None
     docs = drop_deleted(docs, tombs)
-    flat = drop_deleted(unpack_postings(packed), tombs)
+    flat = drop_deleted(_unpack(packed, payloads=True, fill=False), tombs)
 
     # next id over ALL live shards — a partial merge's inputs may not
     # include the highest shard id

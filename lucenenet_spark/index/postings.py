@@ -1,25 +1,43 @@
-"""The posting reader: every decode of the packed posting blocks goes
-through this module (the ``DocsAndPositionsEnum`` role).
+"""The posting codec: the one module that knows the packed block
+format, for writing as well as reading (the ``Lucene41PostingsWriter`` +
+``DocsAndPositionsEnum`` pair; the reference's flush and
+``SegmentMerger`` write through the same writer).
 
-Three shapes, each reading the packed table AFTER a ``term IN (...)``
-filter (:func:`read_blocks`) so parquet pushdown + row-group min/max
-pruning (the BlockTree dictionary seek analog) bound the scan to the
-query's posting lists:
+A term's postings are cut into docid buckets (``BUCKET_DOCS`` docs
+each) and, within a bucket, into blocks of at most ``BLOCK_SIZE`` docs.
+One block is one row of ``PACKED_SCHEMA``: the block metadata (bucket,
+first/last docid, count, max/sum freq, min/max norm byte — the skip
+data that block-max pruning and docid pruning read) and the
+delta+varbyte docids, varbyte freqs, raw norm bytes, the prox stream
+and, for a payload index, the float32 payload per position.
+
+Encode:
+
+- :func:`pack_blocks` — the one block packer. The build's segment
+  flush and :func:`repack_postings` (compaction, split straddlers)
+  both call it, so a rewritten block is byte-identical to a built one,
+  payloads included.
+
+Decode, each reading the packed table AFTER a ``term IN (...)`` filter
+(:func:`read_blocks`) so parquet pushdown + row-group min/max pruning
+(the BlockTree dictionary seek analog) bound the scan to the query's
+posting lists:
 
 - :func:`score_blocks` — the term-family reader: docs, freqs and norms
   decoded and scored per clause of a ``{term: [(cidx, kind, weight)]}``
   plan in one ``mapInPandas``, or docids only with each clause's
   constant weight. Term, boolean, dismax, the constant-score multi-term
   rewrite and FuzzyLikeThis all read through it.
-- :func:`unpack_postings` — a flat per-(docid, term) view with
-  positions, the norm byte and optionally payloads, for collectors and
-  maintenance jobs.
+- :func:`read_postings` — the flat per-(docid, term) view with
+  positions, the norm byte and optionally payloads
+  (``InvertedIndex.postings``), pruned to named terms and docids on
+  block metadata before the decode.
 - :func:`positional_groups` + :func:`bucket_positions` — the bucketed
-  positional kernel that the phrase, multi-phrase and span scorers
-  share: one packed scan, one narrow shuffle of the still-compressed
-  blocks keyed by the docid-disjoint bucket, then per bucket a docid
-  decode, a per-slot candidate conjunction and a candidate-gated
-  position gather. Callers keep only their own matcher.
+  positional kernel that the phrase, multi-phrase, span and payload
+  scorers share: one packed scan, one narrow shuffle of the
+  still-compressed blocks keyed by the docid-disjoint bucket, then per
+  bucket a docid decode, a per-slot candidate conjunction and a
+  candidate-gated position gather. Callers keep only their own matcher.
 
 Plan regime: a query whose posting lists are small
 (:func:`single_partition`, decided on the driver from the term stats)
@@ -48,7 +66,10 @@ from lucenenet_spark.functions.varbyte import (
     decode_freqs,
     decode_positions_flat,
     delta_decode_docids,
+    docid_deltas,
     gather_ranges,
+    position_stream,
+    vbyte_encode_concat,
 )
 
 # docid-range bucket width for posting packing; a multiple of
@@ -71,6 +92,32 @@ KEY_SHIFT = np.int64(32)
 # head-disjunction legs (1525 and 2671 blocks) keep the parallel plan.
 # Every query of the 2k-doc perfbench corpus (<= 48 blocks) is small.
 SINGLE_PARTITION_MAX_BLOCKS = 512
+
+PACKED_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("bucket", T.LongType()),
+        # first_docid - bucket*BUCKET_DOCS: unique per (term, bucket)
+        # even when two build partitions contribute blocks to the same
+        # bucket (docid sets are disjoint across partitions)
+        T.StructField("block_id", T.IntegerType()),
+        T.StructField("first_docid", T.LongType()),
+        T.StructField("last_docid", T.LongType()),
+        T.StructField("count", T.IntegerType()),
+        T.StructField("max_freq", T.IntegerType()),
+        T.StructField("sum_freq", T.LongType()),  # block ttf partial
+        T.StructField("max_norm", T.IntegerType()),
+        T.StructField("min_norm", T.IntegerType()),
+        T.StructField("docs_enc", T.BinaryType()),
+        T.StructField("freqs_enc", T.BinaryType()),
+        T.StructField("norms_enc", T.BinaryType()),
+        T.StructField("positions_enc", T.BinaryType()),
+        # float32 payload per position, positions order; NULL when the
+        # block stores no payloads (DOCS_AND_FREQS_AND_POSITIONS vs
+        # ..._AND_PAYLOADS, FieldInfo.cs:355)
+        T.StructField("payloads_enc", T.BinaryType()),
+    ]
+)
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -118,6 +165,117 @@ def drop_deleted(df: DataFrame, tombstones: DataFrame | None) -> DataFrame:
     if tombstones is None:
         return df
     return df.join(tombstones.select("docid"), "docid", "left_anti")
+
+
+# ------------------------------------------------------------ encoder
+
+def _payload_bytes(payloads, freqs) -> bytes | None:
+    """One block's ``payloads_enc``; a doc without payloads (None) pads
+    1.0 per position, and a block of only such docs stores None."""
+    if all(y is None for y in payloads):
+        return None
+    return np.concatenate(
+        [
+            np.ones(int(c), dtype=np.float32) if y is None
+            else np.asarray(y, dtype=np.float32)
+            for y, c in zip(payloads, freqs)
+        ]
+    ).tobytes()
+
+
+def pack_blocks(postings) -> pd.DataFrame:
+    """The block packer: ``postings`` yields ``(term, docids, freqs,
+    norms, positions, payloads)`` per term — docids in any order,
+    positions and payloads one sequence per doc, ``payloads`` None for
+    a term stored without them. Returns the blocks as a
+    ``PACKED_SCHEMA`` frame: the term's sorted docids cut into bucket
+    runs, each run into ≤``BLOCK_SIZE``-doc blocks.
+
+    The raw docid, freq and prox streams of every block are encoded in
+    ONE vbyte pass at the end (``vbyte_encode_concat``): wire-identical
+    to a per-block encode, but the per-call fixed cost across tens of
+    thousands of small blocks was a measurable slice of the sf1 build."""
+    cols: dict[str, list] = {f.name: [] for f in PACKED_SCHEMA.fields}
+    doc_streams: list[np.ndarray] = []
+    freq_streams: list[np.ndarray] = []
+    pos_streams: list[np.ndarray] = []
+    for term, dl, fl, nl, p, y in postings:
+        d = np.asarray(dl, dtype=np.int64)
+        f = np.asarray(fl, dtype=np.int64)
+        n = np.asarray(nl, dtype=np.int64)
+        if d.size > 1 and not np.all(np.diff(d) > 0):
+            order = np.argsort(d, kind="stable")
+            d, f, n = d[order], f[order], n[order]
+            p = [p[j] for j in order]
+            if y is not None:
+                y = [y[j] for j in order]
+        buckets = d // BUCKET_DOCS
+        # bucket-run starts, then ≤128-doc blocks within each run
+        run_starts = np.concatenate(
+            ([0], np.flatnonzero(np.diff(buckets)) + 1, [d.size])
+        )
+        for r in range(len(run_starts) - 1):
+            r0, r1 = int(run_starts[r]), int(run_starts[r + 1])
+            bucket = int(buckets[r0])
+            for b0 in range(r0, r1, BLOCK_SIZE):
+                b1 = min(b0 + BLOCK_SIZE, r1)
+                db, fb, nb = d[b0:b1], f[b0:b1], n[b0:b1]
+                cols["term"].append(term)
+                cols["bucket"].append(bucket)
+                cols["block_id"].append(int(db[0] - bucket * BUCKET_DOCS))
+                cols["first_docid"].append(int(db[0]))
+                cols["last_docid"].append(int(db[-1]))
+                cols["count"].append(int(db.size))
+                cols["max_freq"].append(int(fb.max()))
+                cols["sum_freq"].append(int(fb.sum()))
+                cols["max_norm"].append(int(nb.max()))
+                # norm of the doc(s) attaining max_freq can be anywhere
+                # in [min_norm, max_norm]; min_norm feeds the certified
+                # lower bound for rank-safe pruning
+                cols["min_norm"].append(int(nb.min()))
+                doc_streams.append(docid_deltas(db))
+                freq_streams.append(fb.astype(np.uint64))
+                cols["norms_enc"].append(nb.astype(np.uint8).tobytes())
+                pos_streams.append(position_stream(p[b0:b1]))
+                cols["payloads_enc"].append(
+                    None if y is None else _payload_bytes(y[b0:b1], fb)
+                )
+    cols["docs_enc"] = vbyte_encode_concat(doc_streams)
+    cols["freqs_enc"] = vbyte_encode_concat(freq_streams)
+    cols["positions_enc"] = vbyte_encode_concat(pos_streams)
+    return pd.DataFrame(cols)
+
+
+def repack_postings(flat: DataFrame) -> DataFrame:
+    """Flat (docid, term, freq, positions, norm[, payloads]) rows ->
+    packed blocks through :func:`pack_blocks`, one ``applyInPandas``
+    group per docid bucket (at most ``BUCKET_DOCS`` docs' postings
+    whatever the term skew); a null ``payloads`` cell is a doc stored
+    without payloads. Compaction and the splitter rewrite here."""
+    with_pay = "payloads" in flat.columns
+
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["term", "docid"])
+        terms = pdf["term"].to_numpy()
+        bounds = np.concatenate(
+            ([0], np.flatnonzero(terms[1:] != terms[:-1]) + 1, [len(pdf)])
+        )
+        d = pdf["docid"].to_numpy(dtype=np.int64)
+        f = pdf["freq"].to_numpy(dtype=np.int64)
+        n = pdf["norm"].to_numpy(dtype=np.int64)
+        pos = pdf["positions"].to_numpy()
+        pay = pdf["payloads"].to_numpy() if with_pay else None
+        return pack_blocks(
+            (terms[a], d[a:b], f[a:b], n[a:b], pos[a:b],
+             None if pay is None else pay[a:b])
+            for a, b in zip(bounds[:-1], bounds[1:])
+        )
+
+    return (
+        flat.selectExpr("*", f"docid DIV {BUCKET_DOCS} AS bucket")
+        .groupBy("bucket")
+        .applyInPandas(pack, schema=PACKED_SCHEMA)
+    )
 
 
 # ------------------------------------------------- term-family reader
@@ -197,19 +355,34 @@ def score_blocks(blocks: DataFrame, plan, sim) -> DataFrame:
     )
 
 
-def unpack_postings(packed: DataFrame, payloads: bool = False) -> DataFrame:
-    """Flat view over packed blocks: decode delta+varbyte back to
-    per-(docid, term) rows with positions and the norm byte, plus the
-    per-position float32 ``payloads`` when ``payloads=True`` (blocks
-    written without payloads yield 1.0 per position, the scorers'
-    default for a missing payload).
+def read_postings(
+    packed: DataFrame, terms=None, docids=None, payloads: bool = False
+) -> DataFrame:
+    """``InvertedIndex.postings``: blocks are pruned on their metadata
+    BEFORE the decode — ``term IN`` (:func:`read_blocks`) and, with
+    ``docids``, the docids' buckets and ``[first_docid, last_docid]``
+    ranges, all pushed to the parquet scan — and only the named
+    docids' rows are kept after it."""
+    blocks = packed if terms is None else read_blocks(packed, terms)
+    if docids is None:
+        return _unpack(blocks, payloads)
+    ids = sorted({int(d) for d in docids})
+    if not ids:
+        return _unpack(blocks.where("false"), payloads)
+    buckets = ", ".join(str(b) for b in sorted({d // BUCKET_DOCS for d in ids}))
+    ranges = " OR ".join(f"(first_docid <= {d} AND last_docid >= {d})" for d in ids)
+    listed = ", ".join(map(str, ids))
+    return _unpack(
+        blocks.where(f"bucket IN ({buckets}) AND ({ranges})"), payloads
+    ).where(f"docid IN ({listed})")
 
-    WARNING — the mapInPandas here is an optimization BARRIER: a filter
-    placed ABOVE this view does NOT push down into the packed parquet
-    scan, so ``unpack_postings(packed).where(term == t)`` decodes the
-    ENTIRE index and then drops most of it. Filter the packed frame
-    first — ``unpack_postings(packed.where(F.col("term").isin(terms)))``
-    — or use ``InvertedIndex.postings(terms)``, which does exactly that.
+
+def _unpack(packed: DataFrame, payloads: bool = False, fill: bool = True) -> DataFrame:
+    """Decode ``packed`` blocks, pruned by the caller (a filter above
+    this ``mapInPandas`` would not reach the parquet scan), to flat
+    per-(docid, term) rows with positions and the norm byte, plus the
+    float32 ``payloads`` per position when ``payloads=True``: 1.0 each
+    for a block stored without them with ``fill``, else a null cell.
 
     Memory: each row's ``positions`` (and ``payloads``) array is a
     ``np.split`` VIEW into its block's one decoded buffer, so a view
@@ -241,7 +414,8 @@ def unpack_postings(packed: DataFrame, payloads: bool = False) -> DataFrame:
                 }
                 if payloads:
                     out["payloads"] = (
-                        [np.ones(int(c), dtype=np.float32) for c in f]
+                        ([np.ones(int(c), dtype=np.float32) for c in f]
+                         if fill else [None] * f.size)
                         if row[5] is None
                         else np.split(
                             np.frombuffer(bytes(row[5]), dtype=np.float32).copy(), splits
@@ -320,7 +494,7 @@ def bucket_positions(pdf: pd.DataFrame, slots) -> BucketPositions | None:
     A group with a ``payloads_enc`` column (``positional_groups(...,
     payloads=True)``) also gathers each key's float32 payload; a block
     stored without payloads yields 1.0 per position, as
-    :func:`unpack_postings` does. Returns None when no doc survives the
+    :func:`read_postings` does. Returns None when no doc survives the
     conjunction."""
     base = int(pdf["bucket"].iat[0]) * BUCKET_DOCS
     pdf = pdf.sort_values(["term", "block_id"])

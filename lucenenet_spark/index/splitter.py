@@ -27,19 +27,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from lucenenet_spark.index.builder import (
-    InvertedIndex,
-    unpack_postings,
-)
+from lucenenet_spark.index.builder import InvertedIndex
+from lucenenet_spark.index.postings import _unpack, repack_postings
 
 
 def split_index(index: InvertedIndex, n_parts: int) -> list[InvertedIndex]:
     """Split into ``n_parts`` contiguous docid ranges
     [round(i*max_doc/n), round((i+1)*max_doc/n)). Returns fully
-    queryable parts. Payload-carrying straddler blocks are refused
-    (the repack path does not preserve payloads)."""
-    from lucenenet_spark.index.compaction import repack_postings
-
+    queryable parts. Straddler blocks repack through the build's own
+    block packer, payloads included."""
     if n_parts < 1:
         raise ValueError("n_parts must be >= 1")
     max_doc = index.max_doc
@@ -54,14 +50,8 @@ def split_index(index: InvertedIndex, n_parts: int) -> list[InvertedIndex]:
             ((F.col("first_docid") < lo) & (F.col("last_docid") >= lo))
             | ((F.col("first_docid") < hi) & (F.col("last_docid") >= hi))
         )
-        if straddlers.where(F.col("payloads_enc").isNotNull()).limit(1).count():
-            raise NotImplementedError(
-                "split boundaries cut payload-carrying blocks; the "
-                "straddler repack does not preserve payloads — split a "
-                "payload index on bucket-aligned boundaries instead"
-            )
         repacked = repack_postings(
-            unpack_postings(straddlers).where(
+            _unpack(straddlers, payloads=True, fill=False).where(
                 (F.col("docid") >= lo) & (F.col("docid") < hi)
             )
         )

@@ -342,15 +342,11 @@ def highlight(
     by summed term weights; positions are what the index stores, so the
     fragment is a token window (apps map token->char at render time)
     and the fragment score is the hit count. Physical shape: the packed
-    scan prunes to the query terms AND the hit docids' buckets before
+    scan prunes to the query terms AND the hit docids' blocks before
     any decode, then a bounded per-doc self-join scores windows —
     never a full positions scan."""
-    from lucenenet_spark.index.builder import BUCKET_DOCS, unpack_postings
-
-    # k hit docids collected driver-side (bounded by k): a docid filter
-    # above the unpack barrier cannot push into the parquet scan, so
-    # without pruning the scan to the hits' docid BUCKETS a df=10^8
-    # query term would decode its whole posting list to highlight k docs
+    # k hit docids collected driver-side (bounded by k), so the
+    # postings read prunes its blocks to them before any decode
     top_ids = [
         r["docid"] for r in searcher.search_df(query, k).select("docid").collect()
     ]
@@ -358,15 +354,8 @@ def highlight(
         return searcher.index.docs.sparkSession.createDataFrame(
             [], "docid long, frag_start long, frag_end long, n_hits long"
         )
-    terms = sorted(set(query.terms()))
-    buckets = sorted({int(d) // BUCKET_DOCS for d in top_ids})
-    blocks = searcher.index.packed.where(
-        F.col("term").isin(terms) & F.col("bucket").isin(buckets)
-    )
-    hits = (
-        unpack_postings(blocks)
-        .where(F.col("docid").isin([int(d) for d in top_ids]))
-        .select("docid", F.explode("positions").alias("p"))
+    hits = searcher.index.postings(sorted(set(query.terms())), top_ids).select(
+        "docid", F.explode("positions").alias("p")
     )
     a = hits.select("docid", F.col("p").alias("start"))
     b = hits.select("docid", F.col("p").alias("hit"))
@@ -1219,11 +1208,9 @@ def postings_highlight(
     ).join(F.broadcast(want), "docid", "left_semi")
 
     # per-(doc,term) importance from DOC-level stats (postings tf +
-    # char length): term-IN pushdown on the postings scan, k-doc semi
-    ttf = (
-        searcher.index.postings(terms)
-        .join(F.broadcast(want), "docid", "left_semi")
-        .select("docid", "term", F.col("freq").alias("ttf"))
+    # char length): the postings read prunes to the terms and k docs
+    ttf = searcher.index.postings(terms, top_ids).select(
+        "docid", "term", F.col("freq").alias("ttf")
     )
     num_docs = F.lit(1.0) + F.col("clen").cast("double") / F.lit(float(pivot))
     weight = f32(

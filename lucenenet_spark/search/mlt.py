@@ -13,50 +13,26 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from lucenenet_spark.index.builder import BUCKET_DOCS, unpack_postings
 from lucenenet_spark.search.queries import BooleanQuery, Occur, Query, TermQuery
 from lucenenet_spark.search.searcher import IndexSearcher
 
 
 def doc_term_freqs(searcher: IndexSearcher, docid: int) -> DataFrame:
-    """(term, freq) for one document, decoding only the doc's bucket
-    (parquet row-group pruning on the bucket column — the packed table
-    is sorted by (term, bucket) so this reads a sliver, not the index)."""
-    bucket = docid // BUCKET_DOCS
-    blocks = searcher.index.packed.where(
-        (F.col("bucket") == bucket)
-        & (F.col("first_docid") <= docid)
-        & (F.col("last_docid") >= docid)
-    )
-    return (
-        unpack_postings(blocks)
-        .where(F.col("docid") == docid)
-        .select("term", "freq")
-    )
+    """(term, freq) for one document, decoding only the blocks whose
+    docid range holds it (``InvertedIndex.postings(docids=...)``)."""
+    return searcher.index.postings(docids=[docid]).selectExpr("term", "freq")
 
 
 def term_vector(searcher: IndexSearcher, docid: int) -> DataFrame:
     """Per-document term vector with positions — the Fields.GetTerms
     (term vectors, ``Index/Fields.cs`` / TermVectorsReader) surface:
-    (term, freq, pos) rows for one document, decoding only the doc's
-    bucket (same row-group pruning as doc_term_freqs)."""
-    bucket = docid // BUCKET_DOCS
-    blocks = searcher.index.packed.where(
-        (F.col("bucket") == bucket)
-        & (F.col("first_docid") <= docid)
-        & (F.col("last_docid") >= docid)
-    )
+    (term, freq, pos) rows for one document, decoding only the blocks
+    that hold it (as :func:`doc_term_freqs`)."""
     return (
-        unpack_postings(blocks)
-        .where(F.col("docid") == docid)
-        .select(
-            "term",
-            F.col("freq").cast("long").alias("freq"),
-            F.explode("positions").alias("pos"),
-        )
-        .withColumn("pos", F.col("pos").cast("long"))
+        searcher.index.postings(docids=[docid])
+        .selectExpr("term", "CAST(freq AS BIGINT) AS freq", "explode(positions) AS pos")
+        .selectExpr("term", "freq", "CAST(pos AS BIGINT) AS pos")
     )
 
 

@@ -12,11 +12,10 @@ payloadFactor = avg | min | max over the doc's payloads for the term:
 avg = f32(f32-ordered-sum / count) (AveragePayloadFunction.DocScore),
 min/max exact.
 
-Single-term paths: one packed scan filtered to the term BEFORE the
-unpack barrier, decode + similarity math in one Arrow stage. The
-two-term near paths are span near queries with a payload hook, so they
-run on the span plan (``spans._bucket_span_eval``), whose bucket kernel
-gathers each position's payload in lockstep with its key.
+Every payload query runs on the span plan (``spans._bucket_span_eval``;
+one regime decision, one tombstone anti-join): the single-term ones
+with the slot ``[[term]]``, the near ones with a payload hook. Its
+bucket kernel gathers each position's payload with its key.
 """
 
 from __future__ import annotations
@@ -24,27 +23,14 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
 
 from lucenenet_spark.functions.bm25 import float32_ordered_sum
-from lucenenet_spark.index.postings import (
-    KEY_SHIFT,
-    bucket_positions,
-    drop_deleted,
-    unpack_postings,
-)
+from lucenenet_spark.index.postings import KEY_SHIFT, bucket_positions
 from lucenenet_spark.search.spans import (
     _EMPTY_COUNTS,
     _EMPTY_SCORED,
     _bucket_span_eval,
     _ordered_pairs,
-)
-
-_OUT = T.StructType(
-    [
-        T.StructField("docid", T.LongType()),
-        T.StructField("score", T.FloatType()),
-    ]
 )
 
 
@@ -61,6 +47,31 @@ def _payload_factor(payloads, fn: str) -> np.float32:
     raise ValueError(f"unknown payload function: {fn}")
 
 
+def _payload_term_bucket(
+    pdf: pd.DataFrame, term: str, fn: str, sim, weight, include_span_score: bool
+) -> pd.DataFrame:
+    """PayloadTermQuery matcher for one bucket group -> (docid, score):
+    freq = the doc's position count, factor over its payloads in
+    position order."""
+    bp = bucket_positions(pdf, [[term]])
+    if bp is None:
+        return _EMPTY_SCORED
+    keys, pay = bp.keys[term], bp.payloads[term]
+    docs, lo, freq = np.unique(keys >> KEY_SHIFT, return_index=True, return_counts=True)
+    hi = lo + freq
+    base = (
+        sim.score(freq.astype(np.float32), bp.norms, weight)
+        if include_span_score
+        else np.ones(docs.size, dtype=np.float32)
+    )
+    factor = np.array(
+        [_payload_factor(pay[x:y], fn) for x, y in zip(lo, hi)], dtype=np.float32
+    )
+    return pd.DataFrame(
+        {"docid": docs + bp.base, "score": (base * factor).astype(np.float32)}
+    )
+
+
 def payload_term_query(
     searcher,
     term: str,
@@ -68,38 +79,23 @@ def payload_term_query(
     fn: str = "avg",
     include_span_score: bool = True,
 ) -> DataFrame:
-    """PayloadTermQuery analog → (docid, score float32) top-k."""
+    """PayloadTermQuery analog → (docid, score float32) top-k, on the
+    span plan with the one slot ``[[term]]``."""
     stats = searcher._term_stats([term])
     if term not in stats:
-        return searcher.index.docs.sparkSession.createDataFrame([], _OUT)
+        return searcher.index.docs.sparkSession.createDataFrame([], "docid long, score float")
     df_, ttf_ = stats[term]
     sim = searcher.sim
     weight = sim.weight(
         df_, searcher.index.max_doc, 1.0,
         ttf=ttf_, sttf=searcher.index.sum_total_term_freq,
     )
-    src = unpack_postings(searcher._blocks([term], stats), payloads=True).select(
-        "docid", "freq", "norm", "payloads"
+    scored = _bucket_span_eval(
+        searcher, [term], stats,
+        lambda pdf: _payload_term_bucket(pdf, term, fn, sim, weight, include_span_score),
+        "docid long, score float",
+        payloads=True,
     )
-
-    def gen(iterator):
-        for pdf in iterator:
-            f = pdf["freq"].to_numpy(dtype=np.float32)
-            nb = pdf["norm"].to_numpy(dtype=np.uint8)
-            base = (
-                sim.score(f, nb, weight)
-                if include_span_score
-                else np.ones(len(pdf), dtype=np.float32)
-            )
-            pay = np.array(
-                [_payload_factor(p, fn) for p in pdf["payloads"]],
-                dtype=np.float32,
-            )
-            yield pd.DataFrame(
-                {"docid": pdf["docid"], "score": (base * pay).astype(np.float32)}
-            )
-
-    scored = drop_deleted(src.mapInPandas(gen, schema=_OUT), searcher.tombstones)
     if k is None:
         return scored
     return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
@@ -182,12 +178,15 @@ def payload_near_query(
     return out.limit(k) if k is not None else out
 
 
-_SPANS_OUT = T.StructType(
-    [
-        T.StructField("docid", T.LongType()),
-        T.StructField("n_spans", T.LongType()),
-    ]
-)
+def _payload_check_bucket(pdf: pd.DataFrame, term: str, want) -> pd.DataFrame:
+    """SpanPayloadCheckQuery matcher for one bucket group ->
+    (docid, n_spans): the term's positions whose payload is ``want``."""
+    bp = bucket_positions(pdf, [[term]])
+    if bp is None:
+        return _EMPTY_COUNTS
+    keys = bp.keys[term][bp.payloads[term] == want]
+    docs, n = np.unique(keys >> KEY_SHIFT, return_counts=True)
+    return pd.DataFrame({"docid": docs + bp.base, "n_spans": n.astype(np.int64)})
 
 
 def span_payload_check(
@@ -195,26 +194,15 @@ def span_payload_check(
 ) -> DataFrame:
     """SpanPayloadCheckQuery over a unit term span
     (``Search/Spans/SpanPayloadCheckQuery.cs:36``): positions whose
-    payload equals the required value → (docid, n_spans)."""
-    stats = searcher._term_stats([term])
-    src = unpack_postings(searcher._blocks([term], stats), payloads=True).select(
-        "docid", "payloads"
+    payload equals the required value → (docid, n_spans), on the span
+    plan with the one slot ``[[term]]``."""
+    want = np.float32(payload)
+    return _bucket_span_eval(
+        searcher, [term], searcher._term_stats([term]),
+        lambda pdf: _payload_check_bucket(pdf, term, want),
+        "docid long, n_spans long",
+        payloads=True,
     )
-    want = float(np.float32(payload))
-
-    def gen(iterator):
-        for pdf in iterator:
-            n = np.array(
-                [
-                    int((np.asarray(p, dtype=np.float32) == np.float32(want)).sum())
-                    for p in pdf["payloads"]
-                ],
-                dtype=np.int64,
-            )
-            out = pd.DataFrame({"docid": pdf["docid"], "n_spans": n})
-            yield out[out["n_spans"] > 0]
-
-    return drop_deleted(src.mapInPandas(gen, schema=_SPANS_OUT), searcher.tombstones)
 
 
 def _near_payload_check_bucket(

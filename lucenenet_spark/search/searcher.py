@@ -290,13 +290,17 @@ class IndexSearcher:
         multi-phrase, dismax, constant-score, match-all, multi-term
         rewrites), under whichever Similarity is installed — the
         reference's Explain covers the same surface
-        (``Tests/Search/TestExplanations.cs``)."""
+        (``Tests/Search/TestExplanations.cs``). A tombstoned docid
+        matches nothing, as under the reference's liveDocs."""
         from lucenenet_spark.search.mlt import term_vector
 
         q = self._expand(query.rewrite())
         stats = self._collect_stats(q)
-        # one bucket-pruned decode gives freqs AND positions
-        tv = term_vector(self, docid).collect()
+        deleted = self.tombstones is not None and bool(
+            self.tombstones.where(f"docid = {int(docid)}").limit(1).count()
+        )
+        # one block-pruned decode gives freqs AND positions
+        tv = [] if deleted else term_vector(self, docid).collect()
         tfs: dict[str, int] = {}
         posmap: dict[str, list[int]] = {}
         for r in tv:
@@ -390,8 +394,8 @@ class IndexSearcher:
                 }
             if isinstance(sub, MatchAllDocsQuery):
                 return {
-                    "type": "match_all", "match": True,
-                    "value": float(np.float32(sub.boost)),
+                    "type": "match_all", "match": not deleted,
+                    "value": 0.0 if deleted else float(np.float32(sub.boost)),
                 }
             if isinstance(sub, ConstantScoreQuery):
                 kn = node(sub.query)
@@ -605,25 +609,31 @@ class IndexSearcher:
         bracket the float32 scores the decode path produces.
         """
         wf = float(np.float32(weight))
-        cache_arr = F.array(*[F.lit(float(v)) for v in cache])
-        mf = F.col("max_freq").cast("double")
-        ub = F.lit(wf) * mf / (mf + F.element_at(cache_arr, F.col("max_norm") + 1))
-        lb = F.lit(wf) * mf / (mf + F.element_at(cache_arr, F.col("min_norm") + 1))
+        # written as SQL text with exact double literals: one py4j call
+        # per expression, not several per literal of the 256-entry cache
+        cache_arr = "array(" + ", ".join(_f64_sql(v) for v in cache) + ")"
+
+        def bound(norm_col: str) -> str:
+            mf = "CAST(max_freq AS DOUBLE)"
+            return (
+                f"{_f64_sql(wf)} * {mf} / ({mf} + element_at({cache_arr}, {norm_col} + 1))"
+            )
+
         # θ stays IN the plan: the k-th best lb aggregates to one row
         # broadcast-cross-joined back onto the block scan, so the whole
         # prune executes inside the query's own action — no eager
         # .collect() round-trip per query (r02 paid an extra serial
         # Spark job + scheduler latency here on every pruned term)
         theta_df = (
-            blocks.select(lb.alias("__lb"))
+            blocks.selectExpr(f"{bound('min_norm')} AS __lb")
             .orderBy(F.col("__lb").desc())
             .limit(k)
-            .agg(F.min("__lb").alias("__theta"), F.count("*").alias("__n"))
+            .selectExpr("min(__lb) AS __theta", "count(*) AS __n")
         )
         # one-sided margin covers double-vs-float32 evaluation skew on
         # both bounds (relative error ~1e-7 each side); n < k ⇒ fewer
         # blocks than k, nothing certifiably prunable
-        keep = (F.col("__n") < k) | (ub >= F.col("__theta") * (1.0 - 1e-5))
+        keep = f"__n < {int(k)} OR {bound('max_norm')} >= __theta * {_f64_sql(1.0 - 1e-5)}"
         return (
             blocks.crossJoin(F.broadcast(theta_df))
             .where(keep)
@@ -899,16 +909,23 @@ def _verify_phrase_bucket(
     return pd.DataFrame({"docid": cand[m] + bp.base, "score": s.astype(np.float32)})
 
 
+def _f64_sql(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE expression with the same bits. A
+    plain decimal in SQL text is a DECIMAL literal; a ``D``-suffixed
+    double literal of ``repr(x)`` is parsed exactly. inf and nan are
+    cast from text."""
+    x = float(x)
+    if not np.isfinite(x):
+        return f"CAST('{x}' AS DOUBLE)"
+    return f"{x!r}D"
+
+
 def _f32_sql(x: float) -> str:
     """``x`` rounded to float32, as a Spark SQL FLOAT expression with
-    the same bits. A plain decimal in SQL text is a DECIMAL literal,
-    which would turn the float32 fold it multiplies into DOUBLE
-    arithmetic; a ``D``-suffixed double literal is parsed exactly, and
-    ``repr`` of a float32 value round-trips, so the cast is exact."""
-    x = float(np.float32(x))
-    if not np.isfinite(x):
-        return f"CAST('{x}' AS FLOAT)"
-    return f"CAST({x!r}D AS FLOAT)"
+    the same bits: a DECIMAL literal would turn the float32 fold it
+    multiplies into DOUBLE arithmetic, and ``repr`` of a float32 value
+    round-trips, so the cast of its exact double is exact."""
+    return f"CAST({_f64_sql(np.float32(x))} AS FLOAT)"
 
 
 # sum of the (cidx, score) structs of ``cs`` in cidx order, in float32

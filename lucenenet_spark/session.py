@@ -27,6 +27,12 @@ Nagle's algorithm against Linux's 40 ms delayed ACK: in a one-row
 0.6-0.8 ms over a Unix socket, and the job took 86-93 ms against
 45-60 ms (4-core VM). Every query pays this once per Python task.
 
+A ``BrokenPipeError`` from ``pyspark/daemon.py`` at ``spark.stop()`` is
+harmless: the JVM closes each idle worker's socket, the worker writes
+back the EOF it read, and over a Unix socket that write fails (EPIPE)
+where TCP accepted it silently. No task is in flight, and the worker
+dies right after; whether it prints first is a race.
+
 The sockets go in a private directory (:func:`socket_dir`), made by
 ``tempfile.mkdtemp`` (mode 0700) and removed at interpreter exit;
 Spark leaves its ``.sock`` files behind. The mode is the access check:
@@ -48,9 +54,11 @@ from __future__ import annotations
 
 import atexit
 import contextlib
+import gc
 import os
 import shutil
 import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -130,17 +138,22 @@ def get_spark(
 
 @contextlib.contextmanager
 def py4j_round_trips():
-    """Count the commands the driver sends to the JVM inside the block,
-    from any thread: ``with py4j_round_trips() as n: ...`` then
-    ``n[0]``. Each is one py4j round trip, the unit of a query's
-    compile cost on the driver."""
+    """Count the commands the calling thread sends to the JVM inside
+    the block: ``with py4j_round_trips() as n: ...`` then ``n[0]``.
+    Each is one py4j round trip, the unit of a query's compile cost on
+    the driver. py4j's finalizer thread, which deletes the Java object
+    of each garbage-collected proxy whenever the collector runs, is not
+    counted; garbage is collected before the block opens."""
     from py4j.clientserver import ClientServerConnection
 
+    gc.collect()
     count = [0]
+    caller = threading.get_ident()
     original = ClientServerConnection.send_command
 
     def send_command(self, command):
-        count[0] += 1
+        if threading.get_ident() == caller:
+            count[0] += 1
         return original(self, command)
 
     ClientServerConnection.send_command = send_command

@@ -168,3 +168,52 @@ def test_generic_dfr_configs_explain_and_inl2_parity(spark_index):
         for h in hits:
             e = s.explain(q, h.docid)
             assert e["match"] and e["value"] == h.score, cfg
+
+
+def test_explain_deleted_doc_matches_nothing(spark, corpus_rows, tmp_path):
+    """A tombstoned docid explains as no match, value 0.0, at the root
+    of every query type: the reference builds each explain scorer with
+    the reader's liveDocs."""
+    from lucenenet_spark.index import CorpusSpec
+    from lucenenet_spark.search.queries import (
+        ConstantScoreQuery,
+        DisjunctionMaxQuery,
+        MatchAllDocsQuery,
+        PhraseQuery,
+        PrefixQuery,
+    )
+    from lucenenet_spark.streaming import append_batch, delete_docs, load_live
+
+    path = str(tmp_path / "live")
+    spec = CorpusSpec(text_col="content", order_cols=("repo", "path", "commit"))
+    for bid, lo in enumerate((0, 100)):
+        append_batch(
+            spark.createDataFrame(corpus_rows[lo:lo + 100]), path, spec, batch_id=bid
+        )
+    phrase = PhraseQuery(phrase_terms=("return", "value"))
+    qs = {
+        "term": TermQuery(term="return"),
+        "boolean": BooleanQuery.of(
+            (TermQuery(term="return"), Occur.MUST),
+            (TermQuery(term="value"), Occur.SHOULD),
+        ),
+        "phrase": phrase,
+        "dismax": DisjunctionMaxQuery(
+            disjuncts=(TermQuery(term="return"), TermQuery(term="value")),
+            tie_breaker=0.3,
+        ),
+        "prefix_cs": PrefixQuery(prefix="ret"),
+        "match_all": MatchAllDocsQuery(),
+        "constant_match_all": ConstantScoreQuery(boost=2.0, query=MatchAllDocsQuery()),
+    }
+    idx, _ = load_live(spark, path)
+    before = IndexSearcher(idx)
+    victim, other = [h.docid for h in before.search(phrase, 2)]
+    assert all(before.explain(q, victim)["match"] for q in qs.values())
+    delete_docs(spark, path, [victim])
+    idx, tombs = load_live(spark, path)
+    live = IndexSearcher(idx, tombstones=tombs)
+    for name, q in qs.items():
+        e = live.explain(q, victim)
+        assert not e["match"] and e["value"] == 0.0, (name, e)
+        assert live.explain(q, other)["match"], name

@@ -146,17 +146,19 @@ def test_span_payload_check(spark):
 def test_payload_plans_filter_packed_before_unpack(ps):
     """The payload scorers must prune the PACKED scan by term (the
     repo's documented anti-pattern: a filter above the unpack barrier
-    decodes the whole index). The single-term scorer decodes in an
-    unpack MapInPandas; the two-term near paths run on the span plan,
-    whose grouped FlatMapGroupsInPandas stage decodes the blocks."""
+    decodes the whole index). Every payload scorer runs on the span
+    plan, whose grouped FlatMapGroupsInPandas stage decodes the
+    blocks."""
     from lucenenet_spark.search.payloads import (
         payload_near_query,
         payload_term_query,
         span_near_payload_check,
+        span_payload_check,
     )
 
     for node, df in (
-        ("MapInPandas unpack", payload_term_query(ps, "spark", 5)),
+        ("FlatMapGroupsInPandas", payload_term_query(ps, "spark", 5)),
+        ("FlatMapGroupsInPandas", span_payload_check(ps, "spark", 2.5)),
         ("FlatMapGroupsInPandas", payload_near_query(ps, "spark", "merge", 1, 5)),
         (
             "FlatMapGroupsInPandas",
